@@ -43,13 +43,6 @@ object Searcher {
   val damerau: org.apache.spark.sql.expressions.UserDefinedFunction =
     udf((a: String, b: String) => graft.util.EditDistance.damerau(a, b))
 
-  /** Fuzzy-expansion predicate over the term dictionary. Cheap filters run
-    * first (Catalyst And short-circuits left-to-right): a length window —
-    * |len(term) − len(q)| ≤ maxEdits is necessary for any edit distance — and
-    * the FuzzyQuery prefixLength anchor, so the O(|a|·|b|) distance only runs
-    * on the surviving sliver of a large dictionary (Lucene walks a
-    * Levenshtein automaton in O(matches); this is the set-filter equivalent).
-    */
   /** Canonical string key for a group value: value types hash by content —
     * in particular byte arrays (binary docvalues), whose toString is
     * identity-based and would split equal values into distinct groups.
@@ -60,10 +53,23 @@ object Searcher {
     case x => String.valueOf(x)
   }
 
+  /** A block's docId salt bucket — blocks never span one, so hash-
+    * partitioning on it co-locates every key's blocks of a bucket.
+    */
+  private[exec] def saltBucket: Column =
+    shiftrightunsigned(col("firstDocId"), graft.index.IndexBuilder.SaltShift)
+
   /** Padded trigrams of a term — see [[graft.index.TermGrams.padGrams]]. */
   private[graft] def padGrams(s: String): Seq[String] =
     graft.index.TermGrams.padGrams(s)
 
+  /** Fuzzy-expansion predicate over the term dictionary. Cheap filters run
+    * first (Catalyst And short-circuits left-to-right): a length window —
+    * |len(term) − len(q)| ≤ maxEdits is necessary for any edit distance — and
+    * the FuzzyQuery prefixLength anchor, so the O(|a|·|b|) distance only runs
+    * on the surviving sliver of a large dictionary (Lucene walks a
+    * Levenshtein automaton in O(matches); this is the set-filter equivalent).
+    */
   def fuzzyCond(q: String, maxEdits: Int, prefixLen: Int, transpositions: Boolean): Column = {
     val lenOk = abs(length(col("term")) - lit(q.length)) <= maxEdits
     val prefOk =
@@ -258,7 +264,7 @@ class Searcher(val index: Index) extends Serializable {
             col("term").isin(small.toSeq: _*)).toDF()
         else
           index.blocks.filter(col("field") === field)
-            .join(broadcastIfSmall(termsDf), Seq("term"), "left_semi")
+            .join(broadcast(termsDf), Seq("term"), "left_semi")
     }
     matchedDocs
       .select(col("firstDocId"), col("numDocs"), col("docsBlob"))
@@ -267,8 +273,6 @@ class Searcher(val index: Index) extends Serializable {
       .toDF("docId").distinct()
       .select(col("docId"), lit(boost).as("score"))
   }
-
-  private def broadcastIfSmall(df: DataFrame): DataFrame = broadcast(df)
 
   // ------------------------------------------------- fuzzy candidate pruning
 
@@ -364,23 +368,11 @@ class Searcher(val index: Index) extends Serializable {
     val weights: Map[String, Double] = distinct.map { t =>
       t -> mustCounts.getOrElse(t, 0) * Bm25.idf(st.docCount, stats(t)._1)
     }.toMap
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val bucket = shiftrightunsigned(col("firstDocId"), graft.index.IndexBuilder.SaltShift)
     val prune = rareCoveragePruner(field, order.head)
     val ord = order.toArray
-    val w = weights
     val avgdl = st.avgdl
-    val base = prune(index.blocks
-      .filter(col("field") === field && col("term").isin(order: _*))
-      // positions blob projected away before the shuffle (score-only decode)
-      .select(col("term"), col("firstDocId"), col("lastDocId"), col("numDocs"),
-        col("maxTf"), col("sumTf"), col("minDlq"),
-        col("docsBlob"), col("freqsBlob"), col("normsBlob")))
-      .as[(String, Long, Long, Int, Int, Long, Int, Array[Byte], Array[Byte], Array[Byte])]
-      .map(t => PostingBlock(field, t._1, t._2, t._3, t._4, t._5, t._6, t._7,
-        t._8, t._9, t._10, Array.empty[Byte]))
-      .repartition(parts, bucket)
-      .mapPartitions(it => Conjunction.scorePartition(ord, w, avgdl, it))
+    val base = bucketBlocks(order.map((field, _)), prune, withPositions = false)
+      .mapPartitions(it => Conjunction.scorePartition(ord, weights, avgdl, it))
       .toDF("docId", "score")
     // MUST_NOT anti-joins run docIds-only (no freq/norm decode) and — for
     // same-field terms — against blocks pruned to the rare coverage: docs
@@ -406,19 +398,6 @@ class Searcher(val index: Index) extends Serializable {
       .flatMap { case (f, n, d) => PostingCodec.decodeDocIds(f, n, d) }
       .toDF("docId")
 
-  /** Block pruner from the rarest term's docId coverage, shared by the
-    * conjunctive and positional paths. The rare term's (firstDocId,
-    * lastDocId) block ranges are collected when few (bounded driver fetch),
-    * merged, and pushed down as LITERAL range predicates — wider terms'
-    * blocks outside every rare range prune at the parquet scan via min/max
-    * stats, with no extra job and no shuffle. Collecting is sound at scale:
-    * a term with df 10⁶ spans ≤ df/128 blocks; genuinely hot-everywhere
-    * "rare" terms overflow the cap and degrade to the distributed
-    * bucket semi-join (the round-2 plan). Range pruning is strictly finer
-    * than bucket pruning: blocks never span a salt bucket, and only
-    * touching/overlapping ranges merge, so the merged set covers exactly the
-    * rare term's blocks' union.
-    */
   /** Driver-collect cap for rare-term block ranges (the literal-pushdown
     * pruning path); above it [[rareCoveragePruner]] degrades to the
     * distributed bucket semi-join. Test-visible so specs can force the
@@ -434,6 +413,19 @@ class Searcher(val index: Index) extends Serializable {
   private val prunerCache =
     scala.collection.concurrent.TrieMap.empty[(String, String, Int), DataFrame => DataFrame]
 
+  /** Block pruner from the rarest term's docId coverage, shared by the
+    * conjunctive and positional paths. The rare term's (firstDocId,
+    * lastDocId) block ranges are collected when few (bounded driver fetch),
+    * merged, and pushed down as LITERAL range predicates — wider terms'
+    * blocks outside every rare range prune at the parquet scan via min/max
+    * stats, with no extra job and no shuffle. Collecting is sound at scale:
+    * a term with df 10⁶ spans ≤ df/128 blocks; genuinely hot-everywhere
+    * "rare" terms overflow the cap and degrade to the distributed
+    * bucket semi-join (the round-2 plan). Range pruning is strictly finer
+    * than bucket pruning: blocks never span a salt bucket, and only
+    * touching/overlapping ranges merge, so the merged set covers exactly the
+    * rare term's blocks' union.
+    */
   private def rareCoveragePruner(field: String, rareTerm: String): DataFrame => DataFrame = {
     if (prunerCache.size > 4096) // bounded driver memory: shed half, keep a warm set
       prunerCache.keysIterator.take(prunerCache.size / 2).foreach(prunerCache.remove)
@@ -465,11 +457,10 @@ class Searcher(val index: Index) extends Serializable {
         val bkts = merged.flatMap { case (f, l) =>
           (f >> graft.index.IndexBuilder.SaltShift) to (l >> graft.index.IndexBuilder.SaltShift)
         }.distinct
-        val bucket = shiftrightunsigned(col("firstDocId"), graft.index.IndexBuilder.SaltShift)
-        (wide: DataFrame) => wide.filter(bucket.isin(bkts.toSeq: _*))
+        (wide: DataFrame) => wide.filter(Searcher.saltBucket.isin(bkts.toSeq: _*))
       }
     } else {
-      val bucket = shiftrightunsigned(col("firstDocId"), graft.index.IndexBuilder.SaltShift)
+      val bucket = Searcher.saltBucket
       val rareBuckets = index.blocks
         .filter(col("field") === field && col("term") === rareTerm)
         .select(bucket.as("__bkt")).distinct()
@@ -536,48 +527,60 @@ class Searcher(val index: Index) extends Serializable {
 
   /** Co-partitioned positional evaluation — the phrase/near/span workhorse.
     *
-    * Per-doc per-term position lists for docs containing ALL `dfOrder` terms,
-    * as (docId, dlq, lists) with `lists(k)` = positions of `dfOrder(k)`.
-    * Scale shape (replaces round-1's union + groupByKey, which shuffled the
-    * DECODED postings of every term — including `the`-class hot terms — in
-    * their entirety):
-    *  1. bucket pruning: blocks are salt-bucket-aligned, so a semi-join on
-    *     `bucket(firstDocId)` against the rarest term's buckets drops whole
-    *     blocks of the wider terms before anything shuffles or decodes;
-    *  2. one narrow shuffle of the surviving COMPRESSED blocks,
-    *     co-partitioned by bucket exactly like [[searchWand]];
-    *  3. per partition, a rarest-term-first merge-intersect over sorted
-    *     blocks: a wider term's block is never decoded unless its docId range
-    *     still contains a live candidate.
-    */
-  private def positionalMatches(field: String, dfOrder: Seq[String]): Dataset[(Long, Int, Array[Array[Int]])] =
-    positionalMatchesKeys(dfOrder.map((field, _)), Nil, field)
-
-  /** Keyed variant for span queries: `required` keys (rarest-first) drive the
-    * bucket pruning and the conjunctive intersect; `optional` keys (span-Or
-    * branches, Not-excludes) attach to surviving docs. With no required keys
-    * (pure disjunction) every key's blocks shuffle — no pruning is sound.
+    * Per-doc per-key position lists for docs containing ALL `required` keys
+    * (rarest-first), as (docId, dlq, lists) with lists in
+    * `required ++ optional` order; `optional` keys (span-Or branches,
+    * Not-excludes) attach to surviving docs. Only COMPRESSED blocks shuffle,
+    * never decoded postings of `the`-class hot terms:
+    *  1. rare-coverage pruning drops whole blocks of the wider keys before
+    *     anything shuffles or decodes (see [[rareCoveragePruner]]);
+    *  2. one narrow shuffle of the surviving COMPRESSED blocks
+    *     ([[bucketBlocks]]);
+    *  3. per partition, [[PhraseMatcher.intersectKeyed]]: a wider key's block
+    *     is never decoded unless its docId range still holds a candidate.
+    * With no required keys (pure disjunction) every key's blocks shuffle —
+    * no pruning is sound.
     */
   private def positionalMatchesKeys(required: Seq[(String, String)], optional: Seq[(String, String)],
       dlqField: String): Dataset[(Long, Int, Array[Array[Int]])] = {
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val bucket = shiftrightunsigned(col("firstDocId"), graft.index.IndexBuilder.SaltShift)
-    val keys = required ++ optional
-    val cond = keys.map { case (f, t) => col("field") === f && col("term") === t }.reduce(_ || _)
-    val all = index.blocks.filter(cond)
-    val pruned = required.headOption match {
-      // literal range predicates when the rare term's blocks are few (no
-      // extra job, pushed to the scan); distributed semi-join when not — see
-      // rareCoveragePruner
-      case Some((rf, rt)) => rareCoveragePruner(rf, rt)(all.toDF()).as[PostingBlock]
-      case None           => all
+    val prune = required.headOption.fold[DataFrame => DataFrame](identity) {
+      case (rf, rt) => rareCoveragePruner(rf, rt)
     }
     val req = required.toArray
     val opt = optional.toArray
-    val dlqF = dlqField
-    pruned
-      .repartition(parts, bucket)
-      .mapPartitions(it => PhraseMatcher.intersectKeyed(req, opt, dlqF, it))
+    bucketBlocks(required ++ optional, prune, withPositions = true)
+      .mapPartitions(it => PhraseMatcher.intersectKeyed(req, opt, dlqField, it))
+  }
+
+  /** The one salt-bucket exchange behind WAND, term conjunction and
+    * positional matching: the blocks of `keys`, pruned, then ONE hash
+    * exchange on `firstDocId >>> SaltShift`, so each partition holds whole
+    * buckets of every key (blocks never span one) and the kernels run with
+    * no further shuffle. Score-only routes (single field) project away the
+    * position/payload/offset blobs — often the widest columns — before the
+    * exchange, so parquet never reads them, and rebuild the blocks after it;
+    * `coShuffled` rows in that 10-column layout (WAND's tombstones beyond
+    * the broadcast cap) ride the same exchange.
+    */
+  private def bucketBlocks(keys: Seq[(String, String)], prune: DataFrame => DataFrame,
+      withPositions: Boolean, coShuffled: Option[DataFrame] = None): Dataset[PostingBlock] = {
+    val fields = keys.map(_._1).distinct
+    val cond = fields.map { f =>
+      col("field") === f && col("term").isin(keys.filter(_._1 == f).map(_._2).distinct: _*)
+    }.reduce(_ || _)
+    val blocks = prune(index.blocks.filter(cond).toDF())
+    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    if (withPositions) return blocks.repartition(parts, Searcher.saltBucket).as[PostingBlock]
+    require(fields.length == 1, s"score-only blocks carry no field column: $fields")
+    val field = fields.head
+    val scoreCols = blocks.select(col("term"), col("firstDocId"), col("lastDocId"),
+      col("numDocs"), col("maxTf"), col("sumTf"), col("minDlq"),
+      col("docsBlob"), col("freqsBlob"), col("normsBlob"))
+    coShuffled.fold(scoreCols)(scoreCols.unionAll)
+      .repartition(parts, Searcher.saltBucket)
+      .as[(String, Long, Long, Int, Int, Long, Int, Array[Byte], Array[Byte], Array[Byte])]
+      .map(t => PostingBlock(field, t._1, t._2, t._3, t._4, t._5, t._6, t._7,
+        t._8, t._9, t._10, Array.empty[Byte]))
   }
 
   /** (distinct terms rarest-first, their stats) or None when any term is
@@ -605,14 +608,10 @@ class Searcher(val index: Index) extends Serializable {
     val so = p.slop
     val slotTerms = offs.map(_._1)
     val slotOffsets = offs.map(_._2)
-    val matched = positionalMatches(field, dfOrder)
-      .map { case (docId, dlq, lists) =>
-        val shifted = offs.map { case (s, off) => lists(s).map(_ - off) }
-        (docId, PhraseMatcher.phraseFreq(shifted, so, slotOffsets, slotTerms), dlq)
-      }
-      .filter(_._2 > 0.0)
-    matched.toDF("docId", "freq", "dlq")
-      .select(col("docId"), Bm25.scoreCol(col("freq"), col("dlq"), sumWeight, st.avgdl).as("score"))
+    scorePositional(dfOrder.map((field, _)), Nil, field, sumWeight, st.avgdl) { lists =>
+      val shifted = offs.map { case (s, off) => lists(s).map(_ - off) }
+      PhraseMatcher.phraseFreq(shifted, so, slotOffsets, slotTerms)
+    }
   }
 
   private def evalNear(q: Near): DataFrame = {
@@ -624,14 +623,20 @@ class Searcher(val index: Index) extends Serializable {
     val slots: Array[Int] = q.terms.map(slot(_)).toArray
     val so = q.slop
     val io = q.inOrder
-    val matched = positionalMatches(field, dfOrder)
-      .map { case (docId, dlq, lists) =>
-        (docId, PhraseMatcher.nearFreq(slots.map(lists(_)), so, io), dlq)
-      }
-      .filter(_._2 > 0.0)
-    matched.toDF("docId", "freq", "dlq")
-      .select(col("docId"), Bm25.scoreCol(col("freq"), col("dlq"), sumWeight, st.avgdl).as("score"))
+    scorePositional(dfOrder.map((field, _)), Nil, field, sumWeight, st.avgdl)(lists =>
+      PhraseMatcher.nearFreq(slots.map(lists(_)), so, io))
   }
+
+  /** BM25 over positional matches: `freq` turns a doc's position lists into
+    * its (sloppy) frequency; docs whose frequency is 0 do not match.
+    */
+  private def scorePositional(required: Seq[(String, String)], optional: Seq[(String, String)],
+      dlqField: String, weight: Double, avgdl: Double)(freq: Array[Array[Int]] => Double): DataFrame =
+    positionalMatchesKeys(required, optional, dlqField)
+      .map { case (docId, dlq, lists) => (docId, freq(lists), dlq) }
+      .filter(_._2 > 0.0)
+      .toDF("docId", "freq", "dlq")
+      .select(col("docId"), Bm25.scoreCol(col("freq"), col("dlq"), weight, avgdl).as("score"))
 
   // ------------------------------------------------------------ span algebra
 
@@ -687,13 +692,8 @@ class Searcher(val index: Index) extends Serializable {
     val st = index.fieldStats.getOrElse(sq.field, return emptyMatches)
     val (required, optional, slotOf, w) = spanPlan(sq).getOrElse(return emptyMatches)
     val tree = sq
-    val matched = positionalMatchesKeys(required, optional, sq.field)
-      .map { case (docId, dlq, lists) =>
-        (docId, SpanEval.freq(SpanEval.eval(tree, slotOf, lists)), dlq)
-      }
-      .filter(_._2 > 0.0)
-    matched.toDF("docId", "freq", "dlq")
-      .select(col("docId"), Bm25.scoreCol(col("freq"), col("dlq"), w, st.avgdl).as("score"))
+    scorePositional(required, optional, sq.field, w, st.avgdl)(lists =>
+      SpanEval.freq(SpanEval.eval(tree, slotOf, lists)))
   }
 
   // ----------------------------------------------------------------- search
@@ -840,54 +840,35 @@ class Searcher(val index: Index) extends Serializable {
   private def wandPartitions(field: String, weights: Seq[(String, Double)], avgdl: Double,
       k: Int, tie: Double = 1.0):
       org.apache.spark.sql.Dataset[(Array[Long], Array[Double], Long, Boolean)] = {
-    val kk = k
-    val wts = weights
-    val tieBreak = tie
     val acc = wandDecoded // local val: the closure must not capture `this`
     val tomb = wandTombstones.orNull // Broadcast is serializable; `this` is not shipped
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val blockRows = index.blocks
-      .filter(col("field") === field && col("term").isin(weights.map(_._1).distinct: _*))
-      // scoring never needs positions: drop the widest blob before the shuffle
-      .select(col("term"), col("firstDocId"), col("lastDocId"), col("numDocs"),
-        col("maxTf"), col("sumTf"), col("minDlq"),
-        col("docsBlob"), col("freqsBlob"), col("normsBlob"))
     // Broadcast-cap overflow: the deletes CO-SHUFFLE with the blocks on the
     // same salt bucket (blocks never span one), tagged numDocs = -1 — a real
     // block always has numDocs >= 1. One narrow (docId-only) exchange per
     // query instead of a driver collect; each partition then sees exactly
     // the tombstones its docId range can contain.
-    val input =
-      if (!wandTombstonesOverflow) blockRows
-      else blockRows.unionAll(index.deletes.get.select(
-        lit("").as("term"), col("docId").cast("long").as("firstDocId"),
-        col("docId").cast("long").as("lastDocId"), lit(-1).as("numDocs"),
-        lit(0).as("maxTf"), lit(0L).as("sumTf"), lit(0).as("minDlq"),
-        lit(null).cast("binary").as("docsBlob"), lit(null).cast("binary").as("freqsBlob"),
-        lit(null).cast("binary").as("normsBlob")))
-    input
-      .repartition(parts, shiftrightunsigned(col("firstDocId"), graft.index.IndexBuilder.SaltShift))
-      .as[(String, Long, Long, Int, Int, Long, Int, Array[Byte], Array[Byte], Array[Byte])]
-      .map(t => graft.index.PostingBlock("", t._1, t._2, t._3, t._4, t._5, t._6, t._7,
-        t._8, t._9, t._10, Array.empty[Byte]))
+    val coShuffledTombs = if (!wandTombstonesOverflow) None else Some(index.deletes.get.select(
+      lit("").as("term"), col("docId").cast("long").as("firstDocId"),
+      col("docId").cast("long").as("lastDocId"), lit(-1).as("numDocs"),
+      lit(0).as("maxTf"), lit(0L).as("sumTf"), lit(0).as("minDlq"),
+      lit(null).cast("binary").as("docsBlob"), lit(null).cast("binary").as("freqsBlob"),
+      lit(null).cast("binary").as("normsBlob")))
+    bucketBlocks(weights.map(w => (field, w._1)), identity, withPositions = false, coShuffledTombs)
       .mapPartitions { it =>
         val all = it.toArray
         val (tombRows, blocks) = all.partition(_.numDocs < 0)
+        // per-bucket liveDocs from co-shuffled rows: sorted with possible
+        // duplicates (the delete table is append-only) — binarySearch still
+        // decides
+        val sorted =
+          if (tomb != null) tomb.value
+          else { val ids = tombRows.map(_.firstDocId); java.util.Arrays.sort(ids); ids }
         val deleted: Long => Boolean =
-          if (tomb != null) {
-            val sorted = tomb.value
-            d => java.util.Arrays.binarySearch(sorted, d) >= 0
-          } else if (tombRows.isEmpty) _ => false
-          else {
-            // per-bucket liveDocs: sorted with possible duplicates (the
-            // delete table is append-only) — binarySearch still decides
-            val sorted = tombRows.map(_.firstDocId)
-            java.util.Arrays.sort(sorted)
-            d => java.util.Arrays.binarySearch(sorted, d) >= 0
-          }
+          if (sorted.isEmpty) _ => false
+          else d => java.util.Arrays.binarySearch(sorted, d) >= 0
         val byTerm = blocks.groupBy(_.term)
-        val termBlocks = wts.map { case (t, w) => (w, byTerm.getOrElse(t, Array.empty)) }
-        val r = Wand.topkPartitionFull(termBlocks, avgdl, kk, deleted, tieBreak)
+        val termBlocks = weights.map { case (t, w) => (w, byTerm.getOrElse(t, Array.empty)) }
+        val r = Wand.topkPartitionFull(termBlocks, avgdl, k, deleted, tie)
         acc.add(r.decodedBlocks)
         Iterator.single((r.top.map(_._1), r.top.map(_._2), r.scoredDocs, r.pruned))
       }
@@ -1031,11 +1012,8 @@ class Searcher(val index: Index) extends Serializable {
     subs.map { case (name, sub) => name -> count(Query.all(q, sub)) }
 
   /** Top groups by docvalue field with per-group top docs + counts
-    * (groupby, indexers.py:448-453): one shuffle for the window, group
-    * ordering by best score (Lucene GroupingSearch relevance default).
-    */
-  /** Top groups with per-group top docs (GroupingSearch,
-    * documents.py:468-505): `byValue=false` orders groups by their best hit
+    * (groupby, indexers.py:448-453; GroupingSearch, documents.py:468-505):
+    * `byValue=false` orders groups by their best hit
     * (Lucene relevance group sort incl. docId tie-break); `byValue=true`
     * orders by the group value (Sort(sortfield) mode). `groups <= 0` returns
     * ALL groups (allGroups=True).
@@ -1498,18 +1476,10 @@ final case class SearchHits(hits: org.apache.spark.sql.DataFrame, total: TotalHi
   }
 }
 
-/** Position-list matchers for phrase/near queries. Lists arrive sorted
-  * ascending (index order). For phrases the k-th list is pre-shifted by its
-  * phrase offset, so an exact phrase occurrence is a common value across all
-  * lists; slop allows bounded displacement with Lucene's sloppy weighting
-  * freq += 1/(1+matchLength).
-  */
 /** Score-only merge-intersect for pure term conjunctions (the executor side
-  * of Searcher.evalTermConjunction). Same skip discipline as the positional
-  * intersect — a wider term's block decodes only when its docId range still
-  * holds a live candidate — but decodes just (docId, tf, dlq) and folds the
-  * BM25 contribution in place, so the partition emits finished
-  * (docId, score) rows with no further aggregation.
+  * of Searcher.evalTermConjunction): [[BlockCursor.intersect]] with
+  * (docId, tf, dlq) decode, the BM25 contributions summed in `order` so the
+  * partition emits finished (docId, score) rows with no further aggregation.
   */
 object Conjunction {
 
@@ -1517,246 +1487,76 @@ object Conjunction {
       blocks: Iterator[PostingBlock]): Iterator[(Long, Double)] = {
     val byTerm = blocks.toArray.groupBy(_.term)
     if (order.exists(!byTerm.contains(_))) return Iterator.empty
-    def decode(b: PostingBlock): Array[Posting] =
-      PostingCodec.decodeScore(b.firstDocId, b.numDocs, b.docsBlob, b.freqsBlob, b.normsBlob)
-    val w0 = weights(order(0))
-    val first = byTerm(order(0)).sortBy(_.firstDocId).flatMap(decode)
-    var docIds: Array[Long] = first.map(_.docId)
-    var scores: Array[Double] = first.map(p => Bm25.score(p.tf.toDouble, p.dlq, w0, avgdl))
-    var k = 1
-    while (k < order.length && docIds.nonEmpty) {
-      val wk = weights(order(k))
-      val termBlocks = byTerm(order(k)).sortBy(_.firstDocId)
-      val keep = new scala.collection.mutable.ArrayBuffer[Int](docIds.length)
-      val add = new scala.collection.mutable.ArrayBuffer[Double](docIds.length)
-      var lo = 0
-      var bi = 0
-      while (bi < termBlocks.length && lo < docIds.length) {
-        val b = termBlocks(bi)
-        while (lo < docIds.length && docIds(lo) < b.firstDocId) lo += 1
-        if (lo < docIds.length && docIds(lo) <= b.lastDocId) {
-          val decoded = decode(b)
-          var i = 0
-          var j = lo
-          while (i < decoded.length && j < docIds.length) {
-            val d = decoded(i).docId
-            if (d < docIds(j)) i += 1
-            else if (d > docIds(j)) j += 1
-            else {
-              keep += j
-              add += (if (wk == 0.0) 0.0
-                      else Bm25.score(decoded(i).tf.toDouble, decoded(i).dlq, wk, avgdl))
-              i += 1; j += 1
-            }
-          }
-          lo = j
-        }
-        bi += 1
-      }
-      val m = keep.length
-      val nd = new Array[Long](m)
-      val ns = new Array[Double](m)
-      var x = 0
-      while (x < m) { nd(x) = docIds(keep(x)); ns(x) = scores(keep(x)) + add(x); x += 1 }
-      docIds = nd; scores = ns
-      k += 1
+    val ws = order.map(weights)
+    BlockCursor.intersect(order.map(byTerm), order.length, withPositions = false).iterator.map { row =>
+      var score = Bm25.score(row(0).tf.toDouble, row(0).dlq, ws(0), avgdl)
+      var k = 1
+      while (k < row.length) { score += Bm25.score(row(k).tf.toDouble, row(k).dlq, ws(k), avgdl); k += 1 }
+      (row(0).docId, score)
     }
-    docIds.indices.iterator.map(i => (docIds(i), scores(i)))
   }
 }
 
+/** Position-list matchers for phrase/near queries. Lists arrive sorted
+  * ascending (index order). For phrases the k-th list is pre-shifted by its
+  * phrase offset, so an exact phrase occurrence is a common value across all
+  * lists; slop allows bounded displacement with Lucene's sloppy weighting
+  * freq += 1/(1+matchLength).
+  */
 object PhraseMatcher {
 
-  /** Doc-ordered streaming cursor over one key's positional postings:
-    * decodes a single block at a time (blocks pre-sorted by firstDocId),
-    * exposing the current posting's docId/dlq/positions. curDoc ==
-    * Long.MaxValue ⇔ exhausted.
-    */
-  private final class DisjunctCursor(blocks: Array[graft.index.PostingBlock]) {
-    private var bi = 0
-    private var decoded: Array[graft.index.Posting] = _
-    private var pi = 0
-    var curDoc: Long = Long.MaxValue
-    advance()
-
-    def dlq: Int = decoded(pi).dlq
-    def positions: Array[Int] = decoded(pi).positions
-
-    def advance(): Unit = {
-      if (decoded != null) pi += 1
-      while (decoded == null || pi >= decoded.length) {
-        if (bi >= blocks.length) { decoded = null; curDoc = Long.MaxValue; return }
-        decoded = graft.index.PostingCodec.decodeBlock(blocks(bi), withPositions = true)
-        pi = 0
-        bi += 1
-      }
-      curDoc = decoded(pi).docId
-    }
-  }
-
-  /** Rarest-term-first merge-intersect over one co-partitioned slice of
-    * posting blocks (the executor side of Searcher.positionalMatches).
+  /** Per-doc positions of `required ++ optional` keys over one
+    * co-partitioned slice of posting blocks (the executor side of
+    * Searcher.positionalMatchesKeys), as (docId, dlq, lists) with lists in
+    * key order (absent optional key → empty list).
     *
-    * `order` lists the distinct query terms rarest-first; the iterator holds
-    * their blocks for some set of salt buckets. The rarest term decodes in
-    * full; every later term only decodes blocks whose [firstDocId, lastDocId]
-    * range still contains a live candidate (blocks of one term are disjoint
-    * and sorted, so the candidate pointer advances monotonically). Emits
-    * (docId, dlq, positions-per-term-in-`order`-order) for docs containing
-    * every term.
-    */
-  /** Keyed generalization (span queries mask across fields): `required` keys
-    * intersect rarest-first as above; `optional` keys attach their positions
-    * to surviving docs (absent → empty list). With NO required keys the docs
-    * are the union over optional keys (pure span disjunction).
-    * Output lists follow required ++ optional order.
+    * `required` keys (rarest-first) intersect via [[BlockCursor.intersect]]
+    * and `optional` keys (span-Or branches, Not-excludes) attach to the
+    * survivors via [[BlockCursor.skipIntersect]], so a block decodes only
+    * when its docId range holds a live candidate. With NO required keys the
+    * docs are the union over optional keys (pure span disjunction): a k-way
+    * streaming merge of one [[BlockCursor]] per key, each decoding one block
+    * at a time — memory O(keys × block), not the partition's postings.
     *
-    * `dlqField` picks which field's quantized length rides out for scoring:
-    * a doc's dlq is overwritten whenever a key OF THAT FIELD decodes it, so
-    * cross-field (masked) span queries normalize by the scoring field's
-    * norms, not whichever leaf happened to be rarest. Docs never touched by
-    * a dlqField key keep the first decoder's dlq (best effort).
+    * `dlqField` picks which field's quantized length rides out for scoring,
+    * so cross-field (masked) span queries normalize by the scoring field's
+    * norms: the last required key of that field, else the last present
+    * optional key of it, else the first key present in the doc.
     */
   def intersectKeyed(required: Array[(String, String)], optional: Array[(String, String)],
-      dlqField: String, blocks: Iterator[graft.index.PostingBlock]): Iterator[(Long, Int, Array[Array[Int]])] = {
-    import graft.index.PostingCodec
+      dlqField: String, blocks: Iterator[PostingBlock]): Iterator[(Long, Int, Array[Array[Int]])] = {
     val byKey = blocks.toArray.groupBy(b => (b.field, b.term))
-    val n = required.length + optional.length
-    var docIds: Array[Long] = null
-    var dlqs: Array[Int] = null
-    var poss: Array[Array[Array[Int]]] = null
-    if (required.nonEmpty) {
-      if (required.exists(!byKey.contains(_))) return Iterator.empty
-      val first = byKey(required(0)).sortBy(_.firstDocId)
-        .flatMap(b => PostingCodec.decodeBlock(b, withPositions = true))
-      docIds = first.map(_.docId)
-      dlqs = first.map(_.dlq)
-      poss = first.map { p => val a = new Array[Array[Int]](n); a(0) = p.positions; a }
-      var k = 1
-      while (k < required.length && docIds.nonEmpty) {
-        val isDlqKey = required(k)._1 == dlqField
-        val termBlocks = byKey(required(k)).sortBy(_.firstDocId)
-        val keep = new scala.collection.mutable.ArrayBuffer[Int](docIds.length)
-        val newPos = new scala.collection.mutable.ArrayBuffer[Array[Int]](docIds.length)
-        val newDlq = new scala.collection.mutable.ArrayBuffer[Int](docIds.length)
-        var lo = 0
-        var bi = 0
-        while (bi < termBlocks.length && lo < docIds.length) {
-          val b = termBlocks(bi)
-          while (lo < docIds.length && docIds(lo) < b.firstDocId) lo += 1
-          if (lo < docIds.length && docIds(lo) <= b.lastDocId) {
-            val decoded = PostingCodec.decodeBlock(b, withPositions = true)
-            var i = 0
-            var j = lo
-            while (i < decoded.length && j < docIds.length) {
-              val d = decoded(i).docId
-              if (d < docIds(j)) i += 1
-              else if (d > docIds(j)) j += 1
-              else {
-                keep += j; newPos += decoded(i).positions; newDlq += decoded(i).dlq
-                i += 1; j += 1
-              }
-            }
-            lo = j // blocks are disjoint ascending: nothing before j can match later
-          }
-          bi += 1
+    val keys = required ++ optional
+    def blocksOf(key: (String, String)) = byKey.getOrElse(key, Array.empty[PostingBlock])
+    val rows: Iterator[Array[Posting]] =
+      if (required.nonEmpty) {
+        if (required.exists(!byKey.contains(_))) return Iterator.empty
+        val matched = BlockCursor.intersect(required.map(byKey), keys.length, withPositions = true)
+        for (slot <- required.length until keys.length if matched.nonEmpty)
+          BlockCursor.skipIntersect(matched.map(_(0).docId), blocksOf(keys(slot)),
+            withPositions = true)((j, p) => matched(j)(slot) = p)
+        matched.iterator
+      } else {
+        val cursors = optional.map { key =>
+          val c = new BlockCursor(blocksOf(key), withPositions = true)
+          c.next()
+          c
         }
-        val m = keep.length
-        val nd = new Array[Long](m); val nq = new Array[Int](m)
-        val np = new Array[Array[Array[Int]]](m)
-        var x = 0
-        while (x < m) {
-          val src = keep(x)
-          nd(x) = docIds(src)
-          nq(x) = if (isDlqKey) newDlq(x) else dlqs(src)
-          val a = poss(src); a(k) = newPos(x); np(x) = a
-          x += 1
-        }
-        docIds = nd; dlqs = nq; poss = np
-        k += 1
-      }
-    } else {
-      // pure-disjunction doc set: a k-way STREAMING merge of the optional
-      // keys' doc-ordered postings — each key decodes one block at a time,
-      // so memory is O(keys × block), not the partition's full postings
-      // (the prior LongMap pinned every decoded doc+positions of every key;
-      // for a spanOr over `the`-class terms that was the partition's whole
-      // posting set). Lists are docId-sorted within a key (blocks disjoint,
-      // ascending), so min-of-cursors enumerates the union in order.
-      val empty = Array.empty[Int]
-      val cursors = optional.map(key =>
-        new DisjunctCursor(byKey.getOrElse(key, Array.empty).sortBy(_.firstDocId)))
-      return new Iterator[(Long, Int, Array[Array[Int]])] {
-        def hasNext: Boolean = cursors.exists(_.curDoc != Long.MaxValue)
-        def next(): (Long, Int, Array[Array[Int]]) = {
-          var m = Long.MaxValue
-          var j = 0
-          while (j < cursors.length) {
-            if (cursors(j).curDoc < m) m = cursors(j).curDoc
-            j += 1
+        def minDoc = cursors.foldLeft(Long.MaxValue)((m, c) => math.min(m, c.curDoc))
+        Iterator.continually(minDoc).takeWhile(_ != Long.MaxValue).map { m =>
+          cursors.map { c =>
+            if (c.curDoc != m) null else { val p = c.posting; c.next(); p }
           }
-          val a = new Array[Array[Int]](n)
-          // dlq: last matching dlqField key wins; else first matching key
-          var dlq = 0
-          var seen = false
-          j = 0
-          while (j < cursors.length) {
-            val c = cursors(j)
-            if (c.curDoc == m) {
-              a(j) = c.positions
-              if (!seen) { dlq = c.dlq; seen = true }
-              if (optional(j)._1 == dlqField) dlq = c.dlq
-              c.advance()
-            }
-            j += 1
-          }
-          var x = 0
-          while (x < a.length) { if (a(x) == null) a(x) = empty; x += 1 }
-          (m, dlq, a)
         }
       }
-    }
-    if (required.nonEmpty && optional.nonEmpty && docIds.nonEmpty) {
-      var j = 0
-      while (j < optional.length) {
-        val isDlqKey = optional(j)._1 == dlqField && required(0)._1 != dlqField &&
-          !required.exists(_._1 == dlqField)
-        val slot = required.length + j
-        byKey.get(optional(j)).foreach { bsAll =>
-          val bs = bsAll.sortBy(_.firstDocId)
-          var lo = 0
-          var bi = 0
-          while (bi < bs.length && lo < docIds.length) {
-            val b = bs(bi)
-            while (lo < docIds.length && docIds(lo) < b.firstDocId) lo += 1
-            if (lo < docIds.length && docIds(lo) <= b.lastDocId) {
-              val decoded = PostingCodec.decodeBlock(b, withPositions = true)
-              var i = 0
-              var jj = lo
-              while (i < decoded.length && jj < docIds.length) {
-                val d = decoded(i).docId
-                if (d < docIds(jj)) i += 1
-                else if (d > docIds(jj)) jj += 1
-                else {
-                  poss(jj)(slot) = decoded(i).positions
-                  if (isDlqKey) dlqs(jj) = decoded(i).dlq
-                  i += 1; jj += 1
-                }
-              }
-              lo = jj
-            }
-            bi += 1
-          }
-        }
-        j += 1
-      }
-    }
+    val reqDlq = required.indices.filter(required(_)._1 == dlqField)
+    val dlqSlots = (if (reqDlq.nonEmpty) reqDlq
+      else optional.indices.filter(optional(_)._1 == dlqField).map(_ + required.length)).reverse
     val empty = Array.empty[Int]
-    docIds.indices.iterator.map { i =>
-      val a = poss(i)
-      var x = 0
-      while (x < a.length) { if (a(x) == null) a(x) = empty; x += 1 }
-      (docIds(i), dlqs(i), a)
+    rows.map { row =>
+      val first = row.find(_ != null).get
+      val dlq = dlqSlots.collectFirst { case s if row(s) != null => row(s).dlq }.getOrElse(first.dlq)
+      (first.docId, dlq, row.map(p => if (p == null || p.positions == null) empty else p.positions))
     }
   }
 

@@ -2,7 +2,7 @@ package graft.exec
 
 import scala.collection.mutable
 
-import graft.index.{Posting, PostingBlock, PostingCodec}
+import graft.index.PostingBlock
 
 /** Block-max WAND (BMW) top-k evaluation over one partition's posting blocks
   * (north_rule perf layer; SURVEY.md §4.4).
@@ -21,69 +21,25 @@ object Wand {
   def blockUpperBound(b: PostingBlock, weight: Double, avgdl: Double): Double =
     Bm25.score(b.maxTf.toDouble, b.minDlq, weight, avgdl)
 
-  /** One term's doc-ordered cursor over its (bucket-local) blocks. */
-  private final class Cursor(val weight: Double, avgdl: Double, blocksIn: Array[PostingBlock]) {
-    val blocks: Array[PostingBlock] = blocksIn.sortBy(_.firstDocId)
+  /** One term's [[BlockCursor]] plus the BMW bounds over its blocks. */
+  private final class Cursor(val weight: Double, avgdl: Double, bs: Array[PostingBlock])
+      extends BlockCursor(bs, withPositions = false) {
     val termUb: Double = blocks.map(blockUpperBound(_, weight, avgdl)).max
-    private var bi = 0
-    private var decoded: Array[Posting] = _
-    private var pi = 0
-    var curDoc: Long = -1L
-    var decodedBlocks: Long = 0L
 
     next()
-
-    private def decode(): Unit = {
-      decoded = PostingCodec.decodeBlock(blocks(bi), withPositions = false)
-      decodedBlocks += 1
-      pi = 0
-    }
-
-    def next(): Unit = {
-      if (decoded == null) {
-        if (bi >= blocks.length) { curDoc = Long.MaxValue; return }
-        decode()
-      } else pi += 1
-      while (pi >= decoded.length) {
-        bi += 1
-        if (bi >= blocks.length) { curDoc = Long.MaxValue; decoded = null; return }
-        decode()
-      }
-      curDoc = decoded(pi).docId
-    }
-
-    /** First doc ≥ target; whole non-overlapping blocks are skipped
-      * UNDECODED via their skip pointers.
-      */
-    def advanceTo(target: Long): Unit = {
-      if (curDoc >= target) return
-      if (decoded != null && blocks(bi).lastDocId >= target) {
-        while (pi < decoded.length && decoded(pi).docId < target) pi += 1
-        if (pi < decoded.length) { curDoc = decoded(pi).docId; return }
-        bi += 1; decoded = null
-      } else if (decoded != null) {
-        bi += 1; decoded = null
-      }
-      while (bi < blocks.length && blocks(bi).lastDocId < target) bi += 1
-      if (bi >= blocks.length) { curDoc = Long.MaxValue; return }
-      decode()
-      while (pi < decoded.length && decoded(pi).docId < target) pi += 1
-      // blocks are ascending and lastDocId >= target, so pi is in range
-      curDoc = decoded(pi).docId
-    }
 
     /** Upper bound of the block that would contain `target` (no decode);
       * also returns that block's lastDocId as the skip boundary.
       */
     def shallowBound(target: Long): (Double, Long) = {
-      var j = bi
+      var j = blockIndex
       while (j < blocks.length && blocks(j).lastDocId < target) j += 1
       if (j >= blocks.length) (0.0, Long.MaxValue)
       else (blockUpperBound(blocks(j), weight, avgdl), blocks(j).lastDocId)
     }
 
     def currentScore: Double = {
-      val p = decoded(pi)
+      val p = posting
       Bm25.score(p.tf.toDouble, p.dlq, weight, avgdl)
     }
   }
@@ -101,17 +57,6 @@ object Wand {
   /** WAND over one partition's blocks for a weighted SHOULD-of-terms query.
     *
     * @param termBlocks per query term: (BM25 weight, its blocks here)
-    * @return (top-k (docId, score) candidates, number of blocks decoded —
-    *         the pruning evidence; exhaustive would decode all of them)
-    */
-  def topkPartition(termBlocks: Seq[(Double, Array[PostingBlock])], avgdl: Double,
-      k: Int): (Array[(Long, Double)], Long) = {
-    val r = topkPartitionFull(termBlocks, avgdl, k)
-    (r.top, r.decodedBlocks)
-  }
-
-  /** [[topkPartition]] with the full [[PartitionResult]] accounting.
-    *
     * @param deleted liveDocs predicate (Lucene's deleted-docs filter,
     *        MultiBits.getLiveDocs surfaced by the reference at
     *        indexers.py:98-109): a doc for which this returns true is

@@ -319,7 +319,12 @@ final class Index(
         })
       writes.foreach(Await.result(_, Duration.Inf))
     } finally pool.shutdown()
-    deletes.foreach(_.write.mode("overwrite").parquet(s"$dir/deletes"))
+    deletes match {
+      case Some(d) => d.write.mode("overwrite").parquet(s"$dir/deletes")
+      case None => // a stale deletes/ from an earlier save would revive on load
+        val path = new org.apache.hadoop.fs.Path(s"$dir/deletes")
+        path.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(path, true)
+    }
     IndexManifest.write(spark, s"$dir/manifest", IndexManifest(schema, fieldStats))
   }
 }

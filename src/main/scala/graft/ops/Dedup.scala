@@ -442,7 +442,12 @@ object Dedup {
         // r8.1 reshape (the [[lshCandidates]] argument): metrics on the
         // aggregated size table (identical values), prune via LEFT-ANTI
         // against only the over-cap cell ids — offenders-only join payload
-        // instead of every cell's size on every row.
+        // instead of every cell's size on every row. Null cells differ: the
+        // left-anti prune KEEPS rows with a null cell (a null key matches no
+        // anti-join row), where the old inner join dropped them, and an
+        // over-cap null group would still count in memberships_dropped.
+        // Harmless today: assigned cells are never null, and a null cell
+        // never matches the candidate equi-join below.
         // unique observation name per invocation: two capped dedups in ONE
         // plan (a union of pipelines) would otherwise collide on the name
         val sizes = cellsIn.groupBy("cell").agg(count(lit(1)).as("__csz"))

@@ -102,9 +102,11 @@ object TextOps {
     * backreferences) so a SQL oracle can run the IDENTICAL regexes; the
     * category order is fixed (emails → IPs → phones) and each count is
     * taken on the PREVIOUS category's redacted text, since an email's host
-    * part can itself parse as an IPv4 (`a@1.2.3.4.com`). Everything is
-    * native `regexp_replace`/`regexp_extract_all` — codegen'd, no UDF.
-    * Returns struct(clean, n_emails, n_ips, n_phones).
+    * part can itself parse as an IPv4 (`a@1.2.3.4.com`). One Scala UDF
+    * runs the three java.util.regex passes (the engine Spark's native
+    * regexp functions use). Returns struct(clean, n_emails, n_ips,
+    * n_phones); a null text gives a non-null struct whose four fields are
+    * all null.
     */
   def redactPii(text: Column): Column = {
     // ONE matcher walk per category does the count AND the replacement

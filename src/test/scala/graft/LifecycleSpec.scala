@@ -79,6 +79,10 @@ class LifecycleSpec extends SparkTestBase {
     val reloaded = new Searcher(IndexBuilder.load(spark, dir))
     assert(reloaded.count(Term("content", "hello")) === 0) // deletes persisted
     assert(reloaded.index.numLiveDocs === 1)
+    // re-saving a delete-free index over the same directory drops the old
+    // tombstones instead of resurrecting them on load
+    base.save(dir)
+    assert(new Searcher(IndexBuilder.load(spark, dir)).count(Term("content", "hello")) === 2)
 
     // empty-index edges: append to empty, union with empty, query empty
     val empty = IndexBuilder.build(corpus().limit(0), schema, 2)

@@ -418,12 +418,18 @@ class OpsSpec extends SparkTestBase {
       (2L, "hosts 192.168.1.10 and 10.0.0.7 up"),
       (3L, "call +1 555-0123 456 or +44 20-7946-0958 ok"),
       (4L, "mixed a@1.2.3.4.com then 8.8.8.8 then +7 999-123-4567 end"),
-      (5L, "clean text with no personal identifiers at all")
+      (5L, "clean text with no personal identifiers at all"),
+      (6L, null)
     ).toDF("id", "t")
     val r = graft.ops.TextOps.redactPii(col("t"))
-    val got = df.select(col("id"), r.getField("clean"), r.getField("n_emails"),
-        r.getField("n_ips"), r.getField("n_phones"))
-      .collect().map(x => x.getLong(0) -> ((x.getString(1), x.getInt(2), x.getInt(3), x.getInt(4)))).toMap
+    val rows = df.select(col("id"), r.getField("clean"), r.getField("n_emails"),
+        r.getField("n_ips"), r.getField("n_phones"), r.isNull)
+      .collect().map(x => x.getLong(0) -> x).toMap
+    // null text: a non-null struct whose four fields are all null
+    assert((1 to 5).map(rows(6L).get(_)) === Seq(null, null, null, null, false))
+    val got = (rows - 6L).map { case (id, x) =>
+      id -> ((x.getString(1), x.getInt(2), x.getInt(3), x.getInt(4)))
+    }
     assert(got(1L) === (("mail <EMAIL> and <EMAIL> now", 2, 0, 0)))
     assert(got(2L) === (("hosts <IP> and <IP> up", 0, 2, 0)))
     assert(got(3L) === (("call <PHONE> or <PHONE> ok", 0, 0, 2)))

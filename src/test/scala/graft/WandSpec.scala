@@ -202,7 +202,8 @@ class WandSpec extends SparkTestBase {
       (w, index.blocks.filter(col("term") === t).collect())
     }
     val totalBlocks = termBlocks.map(_._2.length).sum
-    val (top, decoded) = Wand.topkPartition(termBlocks, st.avgdl, 1)
+    val r = Wand.topkPartitionFull(termBlocks, st.avgdl, 1)
+    val (top, decoded) = (r.top, r.decodedBlocks)
     assert(top.length === 1)
     assert(decoded < totalBlocks, s"decoded $decoded of $totalBlocks")
     // and the pruned result still matches exhaustive
