@@ -2,13 +2,15 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import scala.reflect.ClassTag
+import scala.reflect.runtime.universe.TypeTag
 
 /** Deduplication operators for web-scale corpora. Exact dedup is a
   * hash-groupBy; near-dup uses MinHash + LSH banding (shingle → minhash →
   * band → bucket join) so candidate generation is a shuffle on band keys,
   * never an all-pairs product. The hash is md5 (available and bit-identical
-  * in both Spark and DuckDB) so every stage is oracle-checkable; swap
-  * `xxhash64` in for production speed — the structure is hash-agnostic.
+  * in both Spark and DuckDB, see [[Md5]]) so every stage is
+  * oracle-checkable.
   */
 object Dedup {
 
@@ -69,25 +71,16 @@ object Dedup {
     val f = udf((sh: Seq[String]) => {
       if (sh == null) null
       else {
-        val digest = java.security.MessageDigest.getInstance("MD5")
-        val hexTable = "0123456789abcdef".toCharArray
+        val digest = Md5.digest()
         val mins = Array.fill(numHashes)(null: String)
-        val hexBuf = new Array[Char](32)
         sh.foreach { s =>
           var v = 0
           while (v < variants) {
-            digest.reset()
-            val bytes = digest.digest(s"$v:$s".getBytes("UTF-8"))
-            var b = 0
-            while (b < 16) {
-              hexBuf(b * 2) = hexTable((bytes(b) >> 4) & 0xf)
-              hexBuf(b * 2 + 1) = hexTable(bytes(b) & 0xf)
-              b += 1
-            }
+            val hex = Md5.hex(digest.digest(s"$v:$s".getBytes("UTF-8")))
             var j = 0
             while (j < 4) {
               val i = v * 4 + j
-              val chunk = new String(hexBuf, j * 8, 8)
+              val chunk = hex.substring(j * 8, j * 8 + 8)
               if (mins(i) == null || chunk < mins(i)) mins(i) = chunk
               j += 1
             }
@@ -207,53 +200,6 @@ object Dedup {
       }
     })
     f(shingles)
-  }
-
-  /** 64-bit SimHash over xxh64 token hashes — the production width (the
-    * 16-bit [[simhash]] stays for oracle tractability).
-    */
-  def simhash64(toks: Column): Column = {
-    val f = udf((ts: Seq[String]) => {
-      val votes = new Array[Int](64)
-      if (ts != null) ts.foreach { t =>
-        val h = graft.util.XXH64.hash(t, 0L)
-        var b = 0
-        while (b < 64) { votes(b) += (if (((h >>> b) & 1L) == 1L) 1 else -1); b += 1 }
-      }
-      var out = 0L
-      var b = 0
-      while (b < 64) { if (votes(b) > 0) out |= 1L << b; b += 1 }
-      out
-    })
-    f(toks)
-  }
-
-  /** Banded Hamming-distance neighbor join over a 64-bit simhash column:
-    * split the hash into `bands` chunks; by pigeonhole, any pair within
-    * Hamming distance `bands − 1` shares at least one exact chunk, so
-    * candidates come from `bands` equi-joins (never an all-pairs product)
-    * and are verified with bit_count(xor) ≤ maxHamming. Exact recall when
-    * maxHamming ≤ bands − 1.
-    */
-  def hammingNeighbors(df: DataFrame, idCol: String, simCol: String,
-      maxHamming: Int = 3, bands: Int = 4): DataFrame = {
-    require(bands > 0 && 64 % bands == 0, "bands must divide 64")
-    require(maxHamming <= bands - 1,
-      s"pigeonhole guarantee needs maxHamming ($maxHamming) <= bands - 1 (${bands - 1})")
-    val width = 64 / bands
-    val mask = if (width == 64) -1L else (1L << width) - 1
-    val banded = df.select(col(idCol).as("id"), col(simCol).as("sim"),
-        explode(array((0 until bands).map(b => struct(lit(b).as("band"),
-          shiftrightunsigned(col(simCol), b * width).bitwiseAND(mask).as("chunk"))): _*)).as("bk"))
-      .select(col("id"), col("sim"), col("bk.band"), col("bk.chunk"))
-    val a = banded.as("a")
-    val b = banded.as("b")
-    a.join(b, col("a.band") === col("b.band") && col("a.chunk") === col("b.chunk") &&
-        col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        bit_count(col("a.sim").bitwiseXOR(col("b.sim"))).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
   }
 
   /** Embedding-cosine near-duplicate pairs: candidates come from a
@@ -561,7 +507,7 @@ object Dedup {
     * `bits/4` hex chars give the bit source; bit b of the result is 1 when
     * more tokens have bit b set than not. Single compiled pass, ONE md5 per
     * token occurrence (the expression form re-hashed per bit). Default 16
-    * bits keeps the oracle SQL tractable; production would widen to 64.
+    * bits keeps the oracle SQL tractable.
     */
   def simhash(toks: Column, bits: Int = 16): Column = {
     require(bits > 0 && bits <= 32 && bits % 4 == 0)
@@ -569,9 +515,8 @@ object Dedup {
     val f = udf((ts: Seq[String]) => {
       val votes = new Array[Int](bits)
       if (ts != null) {
-        val digest = java.security.MessageDigest.getInstance("MD5")
+        val digest = Md5.digest()
         ts.foreach { t =>
-          digest.reset()
           val bs = digest.digest(t.getBytes("UTF-8"))
           var h = 0L
           var i = 0
@@ -598,179 +543,77 @@ object Dedup {
     * boilerplate passages embedded in otherwise-distinct documents; this
     * surfaces them exactly. Tokens are lowercased maximal [a-z0-9] runs;
     * one hash per 1-based window start (stride 1 — exact coverage; rows ∝
-    * corpus tokens, the honest cost of exact passage detection). md5 of the
-    * space-joined window keeps every stage oracle-checkable in DuckDB —
-    * swap a 64-bit hash in for production, the structure is hash-agnostic.
+    * corpus tokens, the honest cost of exact passage detection). Each hash
+    * is the lowercase hex md5 of the space-joined window, so every stage is
+    * oracle-checkable in DuckDB; null text and docs shorter than `window`
+    * give an empty array. This is the hex view of [[windowDigests]], the
+    * kernel the passage pipelines run on.
     */
-  def passageHashes(text: Column, window: Int): Column = {
-    require(window >= 2, s"window must be >= 2 (got $window)")
-    // ONE compiled pass per doc: tokenize once, join once, then digest each
-    // window as a byte-range of the joined buffer (tokens are pure ASCII
-    // after the [a-z0-9] filter, so char offsets == UTF-8 byte offsets and
-    // no per-window string is ever built). The equivalent
-    // transform(sequence)/slice/concat_ws/md5 HOF chain is interpreted (no
-    // codegen) and re-materializes every window — measured 4.9 s warm vs
-    // ~1 s for this UDF on the sf0.1 documents sweep.
-    val w = window
-    val f = udf((t: String) => {
-      if (t == null) Seq.empty[String]
-      else {
-        val (bytes, starts, ntoks) = windowBuffer(t)
-        if (ntoks < w) Seq.empty[String]
-        else {
-          val digest = java.security.MessageDigest.getInstance("MD5")
-          val hexTable = "0123456789abcdef".toCharArray
-          val out = new Array[String](ntoks - w + 1)
-          var i = 0
-          while (i < out.length) {
-            val from = starts(i)
-            val until = if (i + w < ntoks) starts(i + w) - 1 else bytes.length
-            digest.reset()
-            digest.update(bytes, from, until - from)
-            val dg = digest.digest()
-            val hex = new Array[Char](32)
-            var b = 0
-            while (b < 16) {
-              hex(b * 2) = hexTable((dg(b) >> 4) & 0xf)
-              hex(b * 2 + 1) = hexTable(dg(b) & 0xf)
-              b += 1
-            }
-            out(i) = new String(hex)
-            i += 1
-          }
-          out.toSeq
-        }
-      }
-    })
-    f(text)
-  }
+  def passageHashes(text: Column, window: Int): Column =
+    windowDigests(text, window, Md5.hex)
 
-  /** Production twin of [[passageHashes]] (the minhash/minhashXx relation):
-    * xxh64 of each window's byte range, fixed-width hex. Same tokenization,
-    * window, and buffer contract — only the digest differs (one xxh64 per
-    * window instead of md5, ~an order of magnitude cheaper and 16-char keys
-    * instead of 32) — so the md5 form remains the oracle gate while
-    * production sweeps run this one. Collision note: 64-bit hashes over
-    * corpus-scale window counts will see rare collisions (birthday bound
-    * ~4B windows for p=0.5 of ONE collision); Lee et al.'s dedup tolerates
-    * them (a false shared window still needs ndocs ≥ 2 to surface and
-    * excision verifies against the actual tokens).
+  /** The one window kernel: the md5 digest of every token window, in
+    * window-start order, passed through `encode`. The pipelines keep the
+    * 16 raw bytes (`identity`) through every aggregate, join and exchange
+    * (half the key bytes of the 32-char hex form, and no per-window hex
+    * encode) and apply `lower(hex(..))` — md5()'s form in both engines —
+    * only at output positions, so emitted values are bit-identical to
+    * [[passageHashes]], which encodes with [[Md5.hex]] inside this pass
+    * (an interpreted transform(.., lower(hex(..))) over the binary output
+    * measured ~45% slower on a noop-sink window-hash pass, 4 cores).
+    *
+    * ONE compiled pass per doc: tokenize once, join once, then digest each
+    * window as a byte range of the joined buffer (tokens are pure ASCII
+    * after the [a-z0-9] filter, so char offsets == UTF-8 byte offsets and no
+    * per-window string is ever built). The equivalent
+    * transform(sequence)/slice/concat_ws/md5 HOF chain is interpreted (no
+    * codegen) and re-materializes every window — measured 4.9 s warm vs
+    * ~1 s for this UDF on the sf0.1 documents sweep.
     */
-  def passageHashesXx(text: Column, window: Int): Column = {
+  private def windowDigests[T: TypeTag: ClassTag](text: Column, window: Int,
+      encode: Array[Byte] => T): Column = {
     require(window >= 2, s"window must be >= 2 (got $window)")
     val w = window
     val f = udf((t: String) => {
-      if (t == null) Seq.empty[String]
+      val toks =
+        if (t == null) Array.empty[String]
+        else t.toLowerCase(java.util.Locale.ROOT).split("[^a-z0-9]+").filter(_.nonEmpty)
+      if (toks.length < w) Seq.empty[T]
       else {
-        val (bytes, starts, ntoks) = windowBuffer(t)
-        if (ntoks < w) Seq.empty[String]
-        else {
-          val out = new Array[String](ntoks - w + 1)
-          var i = 0
-          while (i < out.length) {
-            val from = starts(i)
-            val until = if (i + w < ntoks) starts(i + w) - 1 else bytes.length
-            out(i) = f"${graft.util.XXH64.hash(bytes, from, until - from, 0L)}%016x"
-            i += 1
-          }
-          out.toSeq
+        val bytes = toks.mkString(" ").getBytes("UTF-8")
+        val starts = new Array[Int](toks.length + 1) // byte offset of each token
+        var i = 0
+        while (i < toks.length) { starts(i + 1) = starts(i) + toks(i).length + 1; i += 1 }
+        val digest = Md5.digest()
+        val out = new Array[T](toks.length - w + 1)
+        i = 0
+        while (i < out.length) {
+          digest.update(bytes, starts(i), starts(i + w) - 1 - starts(i))
+          out(i) = encode(digest.digest())
+          i += 1
         }
+        out.toSeq
       }
     })
     f(text)
-  }
-
-  /** Binary twin of [[passageHashes]] — the pipelines' INTERNAL shuffle and
-    * aggregate representation (guide §2.3, narrower types): the md5 digest
-    * ships as its 16 raw bytes instead of the 32-char hex string, halving
-    * the key bytes in every window exchange (the passage aggregates and the
-    * locate join are keyed on `h`, and the hash column dominates their row
-    * width) and skipping the per-window hex encode entirely. Pipelines
-    * hex-encode (lowercase — md5()'s form in both engines) only at contract
-    * output positions, so emitted values are bit-identical to
-    * [[passageHashes]]'s. Private: the public kernels stay the
-    * string-valued, oracle-mirrorable pair.
-    */
-  private def passageHashesBin(text: Column, window: Int): Column = {
-    require(window >= 2, s"window must be >= 2 (got $window)")
-    val w = window
-    val f = udf((t: String) => {
-      if (t == null) Seq.empty[Array[Byte]]
-      else {
-        val (bytes, starts, ntoks) = windowBuffer(t)
-        if (ntoks < w) Seq.empty[Array[Byte]]
-        else {
-          val digest = java.security.MessageDigest.getInstance("MD5")
-          val out = new Array[Array[Byte]](ntoks - w + 1)
-          var i = 0
-          while (i < out.length) {
-            val from = starts(i)
-            val until = if (i + w < ntoks) starts(i + w) - 1 else bytes.length
-            digest.reset()
-            digest.update(bytes, from, until - from)
-            out(i) = digest.digest()
-            i += 1
-          }
-          out.toSeq
-        }
-      }
-    })
-    f(text)
-  }
-
-  /** The default window hasher as ONE stable function object, so the
-    * pipelines can recognize "caller kept the md5 default" (`eq`) and run
-    * the binary fast path; an eta-expansion per call site would defeat the
-    * identity check.
-    */
-  private val defaultHasher: (Column, Int) => Column = passageHashes
-
-  /** Resolve a pipeline's window-hash column: the default md5 hasher runs
-    * binary internally with a hex transform for output positions; an
-    * explicit hasher (e.g. [[passageHashesXx]]) passes through unchanged.
-    */
-  private def windowHashCol(hasher: (Column, Int) => Column, text: Column,
-      window: Int): (Column, Column => Column) =
-    if (hasher eq defaultHasher) (passageHashesBin(text, window), c => lower(hex(c)))
-    else (hasher(text, window), identity)
-
-  /** Tokenize + join + per-token byte offsets shared by the passage hashers:
-    * (UTF-8 bytes of the space-joined tokens, byte offset of each token,
-    * token count). Tokens are lowercased maximal [a-z0-9] runs — pure ASCII,
-    * so char offsets == byte offsets.
-    */
-  private def windowBuffer(t: String): (Array[Byte], Array[Int], Int) = {
-    val toks = t.toLowerCase(java.util.Locale.ROOT)
-      .split("[^a-z0-9]+").filter(_.nonEmpty)
-    val joined = toks.mkString(" ")
-    val bytes = joined.getBytes("UTF-8")
-    val starts = new Array[Int](toks.length)
-    var off = 0
-    var i = 0
-    while (i < toks.length) { starts(i) = off; off += toks(i).length + 1; i += 1 }
-    (bytes, starts, toks.length)
   }
 
   /** Token windows appearing in ≥ 2 distinct docs: (h, ndocs, occurrences).
     * One groupBy on the window hash — an equi-shuffle with map-side partial
     * aggregation absorbing within-doc repeats before the exchange; never an
-    * all-pairs product. `hasher` defaults to the oracle-checkable md5 form;
-    * pass [[passageHashesXx]] for production sweeps. Downstream,
-    * [[passageDupLocations]] joins `h` back to the exploded windows to
-    * locate/excise the passages per doc.
+    * all-pairs product. The aggregate shuffles 16-byte binary keys
+    * ([[windowDigests]]); only the surviving rows are hex-encoded. `h` is
+    * the [[passageHashes]] value. Downstream, [[passageDupLocations]] joins
+    * `h` back to the exploded windows to locate/excise the passages per doc.
     */
-  def passageDups(df: DataFrame, idCol: String, textCol: String, window: Int = 8,
-      hasher: (Column, Int) => Column = defaultHasher): DataFrame = {
-    // default hasher: the aggregate shuffles 16-byte binary keys, hex only
-    // on the surviving (ndocs >= 2) rows — see [[passageHashesBin]]
-    val (hs, toOut) = windowHashCol(hasher, col(textCol), window)
+  def passageDups(df: DataFrame, idCol: String, textCol: String, window: Int = 8): DataFrame =
     cpuParallel(df)
-      .select(col(idCol).as("doc_id"), explode(hs).as("h"))
+      .select(col(idCol).as("doc_id"),
+        explode(windowDigests(col(textCol), window, identity)).as("h"))
       .groupBy("h")
       .agg(countDistinct(col("doc_id")).as("ndocs"), count(lit(1)).as("occurrences"))
       .filter(col("ndocs") >= 2)
-      .select(toOut(col("h")).as("h"), col("ndocs"), col("occurrences"))
-  }
+      .select(lower(hex(col("h"))).as("h"), col("ndocs"), col("occurrences"))
 
   /** Locate duplicated passages per doc — the EXCISION input (Lee et al.
     * §3's stated point: removing the repeated span needs its position, not
@@ -795,16 +638,16 @@ object Dedup {
     * the same contract as [[connectedComponents]]' result. Callers running
     * many invocations over one corpus should materialize the window table
     * to parquet themselves and feed both [[passageDups]] and this.
+    *
+    * The checkpointed window table, the dup-flag aggregate and the locate
+    * join all carry 16-byte binary keys ([[windowDigests]]); `h` is
+    * hex-encoded once, on the output rows.
     */
   def passageDupLocations(df: DataFrame, idCol: String, textCol: String,
-      window: Int = 8, hasher: (Column, Int) => Column = defaultHasher): DataFrame = {
-    // default hasher: the checkpointed window table, the dup-flag aggregate,
-    // and the locate join all carry 16-byte binary keys; hex encoding runs
-    // once on the output rows — see [[passageHashesBin]]
-    val (hs, toOut) = windowHashCol(hasher, col(textCol), window)
+      window: Int = 8): DataFrame = {
     val wins = cpuParallel(df)
       .select(col(idCol).as("doc_id"),
-        posexplode(hs).as(Seq("pos", "h")))
+        posexplode(windowDigests(col(textCol), window, identity)).as(Seq("pos", "h")))
       .select(col("doc_id"), (col("pos") + 1).as("start"), col("h"))
       .localCheckpoint(true) // ONE tokenize+hash pass feeds both stages below
     // the locate stage only needs the dup FLAG, not the exact distinct
@@ -823,7 +666,7 @@ object Dedup {
     // sf0.1, catastrophic at scale); the hint keeps the shape right at any
     // size AQE would accept, and degrades to a shuffle equi-join beyond it.
     wins.join(broadcast(dups), "h")
-      .select(col("doc_id"), col("start"), toOut(col("h")).as("h"))
+      .select(col("doc_id"), col("start"), lower(hex(col("h"))).as("h"))
   }
 
   /** Apply the excision (Lee et al. §3 — the step [[passageDupLocations]]
@@ -908,19 +751,15 @@ object Dedup {
     * with NO corpus-side shuffle before the per-doc aggregate (itself an
     * equi-shuffle on doc_id with map-side partial agg). A pathologically
     * large bench side degrades gracefully to a shuffle equi-join on `h` —
-    * never a product. `hasher` defaults to the oracle-checkable md5 form
-    * ([[passageHashes]]); pass [[passageHashesXx]] for production sweeps.
+    * never a product. Windows hash as in [[passageHashes]]; `h` never
+    * leaves this op (the output is counts), so the bench distinct, the
+    * broadcast and the per-doc aggregate all run on the 16-byte binary keys
+    * of [[windowDigests]], with no hex encode at all.
     */
   def contamination(corpus: DataFrame, corpusId: String, corpusText: String,
-      bench: DataFrame, benchText: String, window: Int = 8,
-      hasher: (Column, Int) => Column = defaultHasher): DataFrame = {
-    // default hasher: `h` never leaves this op (the output is counts), so
-    // the bench distinct, the broadcast, and the per-doc aggregate all run
-    // on 16-byte binary keys with no hex encode at all ([[passageHashesBin]])
-    val (benchHs, _) = windowHashCol(hasher, col(benchText), window)
-    val (corpusHs, _) = windowHashCol(hasher, col(corpusText), window)
+      bench: DataFrame, benchText: String, window: Int = 8): DataFrame = {
     val benchGrams = cpuParallel(bench)
-      .select(explode(benchHs).as("h"))
+      .select(explode(windowDigests(col(benchText), window, identity)).as("h"))
       .distinct()
     // PIN the broadcast this op's scale story is built on (the scaladoc
     // above): the eval side's distinct grams are metadata-scale next to the
@@ -929,7 +768,7 @@ object Dedup {
     // shape deliberate rather than estimate-dependent (guide §3.1).
     cpuParallel(corpus)
       .select(col(corpusId).as("doc_id"),
-        explode(corpusHs).as("h"))
+        explode(windowDigests(col(corpusText), window, identity)).as("h"))
       .join(broadcast(benchGrams), "h")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("matched_windows"),
@@ -943,10 +782,8 @@ object Dedup {
     */
   def decontaminate(corpus: DataFrame, corpusId: String, corpusText: String,
       bench: DataFrame, benchText: String, window: Int = 8,
-      minMatches: Long = 1L,
-      hasher: (Column, Int) => Column = defaultHasher): DataFrame = {
-    val bad = contamination(corpus, corpusId, corpusText, bench, benchText,
-        window, hasher)
+      minMatches: Long = 1L): DataFrame = {
+    val bad = contamination(corpus, corpusId, corpusText, bench, benchText, window)
       .filter(col("matched_windows") >= minMatches)
       .select(col("doc_id").as("__contaminated_id"))
     corpus.join(bad, corpus(corpusId) === col("__contaminated_id"), "left_anti")

@@ -3,9 +3,13 @@ package graft.ops
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Text-analysis operators for large-scale training-data pipelines, built
-  * from Spark native (codegen'd) expressions — no UDFs in the hot path.
-  * Every op has a deterministic SQL mirror for the DuckDB oracle.
+/** Text-analysis operators for large-scale training-data pipelines.
+  * Tokenization is a native (codegen'd) regexp; the per-token kernels
+  * (`languageId`, `quality`, `repetition`, `shingles`, `fingerprint`) and
+  * the per-text ones (`redactPii`, `c4Lines`) are compiled Scala UDFs, one
+  * pass per row, because their higher-order-function equivalents are
+  * interpreted and several times slower. Every op has a deterministic SQL
+  * mirror for the DuckDB oracle.
   */
 object TextOps {
 
@@ -293,27 +297,17 @@ object TextOps {
     val f = udf((toks: Seq[String]) => {
       if (toks == null || toks.length < n) ""
       else {
-        val digest = java.security.MessageDigest.getInstance("MD5")
-        val hexTable = "0123456789abcdef".toCharArray
+        val digest = Md5.digest()
         val out = new Array[String](toks.length - n + 1)
         var i = 0
         while (i + n <= toks.length) {
-          digest.reset()
           var j = i
           while (j < i + n) {
             if (j > i) digest.update(' '.toByte)
             digest.update(toks(j).getBytes("UTF-8"))
             j += 1
           }
-          val bytes = digest.digest()
-          val hex = new Array[Char](32)
-          var b = 0
-          while (b < 16) {
-            hex(b * 2) = hexTable((bytes(b) >> 4) & 0xf)
-            hex(b * 2 + 1) = hexTable(bytes(b) & 0xf)
-            b += 1
-          }
-          out(i) = new String(hex)
+          out(i) = Md5.hex(digest.digest())
           i += 1
         }
         java.util.Arrays.sort(out.asInstanceOf[Array[AnyRef]])

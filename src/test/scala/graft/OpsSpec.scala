@@ -72,6 +72,10 @@ class OpsSpec extends SparkTestBase {
       .select(xxhash64(col("s"))).collect().map(_.getLong(0))
     val ours = samples.map(x => graft.util.XXH64.hash(x, 42L)) // Spark's default seed
     assert(ours === fromSpark.toSeq)
+    // the range-hash is bit-identical to hashing a copied slice
+    val buf = "zz the quick brown zz".getBytes("UTF-8")
+    assert(graft.util.XXH64.hash(buf, 3, 15, 42L) ===
+      graft.util.XXH64.hash(java.util.Arrays.copyOfRange(buf, 3, 18), 42L))
   }
 
   test("LSH hot-bucket cap drops oversized buckets, keeps pairs reachable via other bands") {
@@ -114,27 +118,6 @@ class OpsSpec extends SparkTestBase {
     assert(uncapped >= 435L + 1L)
     assert(!cappedPairs.exists(p => p._1 >= 100L && p._2 >= 100L))
     assert(cappedPairs.contains((0L, 1L))) // exact dup in a size-2 bucket survives
-  }
-
-  test("simhash64 + banded hamming join: exact recall within bands-1") {
-    val s = spark
-    import s.implicits._
-    val sh = docs.select(col("id"), Dedup.simhash64(TextOps.tokens(col("text"))).as("sim"))
-    val sims = sh.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
-    val nbrs = Dedup.hammingNeighbors(sh, "id", "sim", maxHamming = 3, bands = 4)
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getInt(2))).toMap
-    // ground truth: every pair within hamming 3 is found (pigeonhole), none beyond
-    val ids = sims.keys.toSeq.sorted
-    for (a <- ids; b <- ids if a < b) {
-      val h = ham(sims(a), sims(b))
-      if (h <= 3) assert(nbrs.get((a, b)).contains(h), s"missing pair ($a,$b) ham=$h")
-      else assert(!nbrs.contains((a, b)), s"spurious pair ($a,$b) ham=$h")
-    }
-    assert(nbrs.contains((0L, 1L)) && nbrs((0L, 1L)) === 0) // identical docs
-    intercept[IllegalArgumentException] {
-      Dedup.hammingNeighbors(sh, "id", "sim", maxHamming = 5, bands = 4)
-    }
   }
 
   test("minhashXx: exact dup identical signatures; near dup shares bands") {
@@ -364,21 +347,32 @@ class OpsSpec extends SparkTestBase {
     assert(got.map(_._1).toSet === expected)
     // window longer than every doc ⇒ empty result, not an error
     assert(graft.ops.Dedup.passageDups(docs, "doc_id", "text", window = 50).count() === 0L)
+    // the locate surface hex-encodes its binary keys to the same md5 values
+    val locHashes = graft.ops.Dedup.passageDupLocations(docs, "doc_id", "text", 8)
+      .select("h").as[String].collect().toSet
+    assert(locHashes === expected)
+  }
 
-    // r8 internals guard: the DEFAULT hasher runs the binary md5 fast path
-    // (16-byte keys through the shuffles, hex only at output) — its rows
-    // must be bit-identical to an EXPLICITLY passed string-hasher run,
-    // which takes the generic path, for both passage entry points
-    val viaString = graft.ops.Dedup.passageDups(docs, "doc_id", "text", 8,
-        hasher = graft.ops.Dedup.passageHashes)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    assert(got.toSet === viaString)
-    val locDefault = graft.ops.Dedup.passageDupLocations(docs, "doc_id", "text", 8)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
-    val locString = graft.ops.Dedup.passageDupLocations(docs, "doc_id", "text", 8,
-        hasher = graft.ops.Dedup.passageHashes)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
-    assert(locDefault === locString)
+  test("passageHashes: md5 hex per token window; empty for null or short text") {
+    val s2 = spark
+    import s2.implicits._
+    val docs = Seq(
+      (1L, Some("The QUICK, brown fox -- jumps! Over the lazy_dog.")),
+      (2L, Some("far too short")),
+      (3L, None)
+    ).toDF("doc_id", "text")
+    val got = docs.select(col("doc_id"), graft.ops.Dedup.passageHashes(col("text"), 4))
+      .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
+    // lowercased [a-z0-9] runs: punctuation and '_' split tokens
+    val toks = Seq("the", "quick", "brown", "fox", "jumps", "over", "the", "lazy", "dog")
+    val expected = toks.sliding(4).map { w =>
+      java.security.MessageDigest.getInstance("MD5")
+        .digest(w.mkString(" ").getBytes("UTF-8"))
+        .map("%02x".format(_)).mkString
+    }.toSeq
+    assert(got(1L) === expected)
+    assert(got(2L).isEmpty) // 3 tokens < window
+    assert(got(3L).isEmpty) // null text
   }
 
   test("hash sampling: deterministic, partitioning-invariant, nesting subsets, stratified") {
@@ -637,7 +631,7 @@ class OpsSpec extends SparkTestBase {
     assert(got === Map(0L -> Some(21.0), 1L -> None, 2L -> None, 3L -> None))
   }
 
-  test("decontamination: window overlap vs a benchmark set — exact counts, drop form, xx/md5 parity") {
+  test("decontamination: exact window-overlap counts, drop form and threshold form") {
     val s2 = spark
     import s2.implicits._
     val leak = "what is the capital of france paris obviously right" // 9 tokens
@@ -660,11 +654,6 @@ class OpsSpec extends SparkTestBase {
     val kept3 = graft.ops.Dedup.decontaminate(corpus, "doc_id", "text", bench, "text",
         minMatches = 3L).select("doc_id").as[Long].collect().sorted
     assert(kept3.toSeq === Seq(1L, 3L))
-    // production xx hasher: structurally identical counts
-    val gotXx = graft.ops.Dedup.contamination(corpus, "doc_id", "text", bench, "text",
-        hasher = graft.ops.Dedup.passageHashesXx)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
-    assert(gotXx.toSeq === Seq((1L, 2L, 2L), (2L, 4L, 2L)))
   }
 
   test("plan guard: banded cosine LSH is equi-join-shaped — no cartesian product") {
@@ -782,17 +771,29 @@ class OpsSpec extends SparkTestBase {
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(uncapped.contains((1L, 2L)) && uncapped.exists(_._1 >= 10L),
       s"fixture must have pairs in both cells, got $uncapped")
-    // cap = 10 < the 20-vector mega-cell: its pairs drop (LOUDLY — stderr),
-    // the small cell's planted duplicate still verifies
+    // cap = 10 < the 20-vector mega-cell: its pairs drop (LOUDLY — the
+    // drop is counted in semanticCapDropped and printed to stderr), the
+    // small cell's planted duplicate still verifies
+    val dropped0 = graft.ops.Dedup.semanticCapDropped.get()
     val capped = graft.ops.Dedup.semanticDedup(rows, "id", "vec", cents, 0.999,
         maxCellSize = 10)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(capped === Set((1L, 2L)), s"got $capped")
-    // an over-generous cap leaves the result untouched
+    // the listener delivery is async — poll briefly
+    var spins = 0
+    while (graft.ops.Dedup.semanticCapDropped.get() === dropped0 && spins < 20) {
+      Thread.sleep(250); spins += 1
+    }
+    assert(graft.ops.Dedup.semanticCapDropped.get() > dropped0,
+      "execution must report the drop")
+    // an over-generous cap leaves the result untouched and drops nothing
+    val dropped1 = graft.ops.Dedup.semanticCapDropped.get()
     val wide = graft.ops.Dedup.semanticDedup(rows, "id", "vec", cents, 0.999,
         maxCellSize = 1000)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(wide === uncapped)
+    Thread.sleep(1000) // let any (wrongly) reported drop arrive
+    assert(graft.ops.Dedup.semanticCapDropped.get() === dropped1)
   }
 
   test("dedup: SemDeDup centroids-as-table — kmeansCentroids end-to-end at k=256, " +
@@ -935,8 +936,7 @@ class OpsSpec extends SparkTestBase {
     assert(grab(viaCg) === interp, "codegen vs interpreted")
   }
 
-  test("dedup: passage locate surface — duplicated windows at exact token offsets " +
-      "(Lee et al. §3 excision input); xxh64 twin matches the md5 oracle form") {
+  test("dedup: passage locate surface - duplicated windows at exact token offsets") {
     val s2 = spark
     import s2.implicits._
     val shared = "the quick brown fox jumps over the lazy dog tonight" // 10 tokens
@@ -950,30 +950,6 @@ class OpsSpec extends SparkTestBase {
     // 10 shared tokens ⇒ 3 duplicated 8-token windows per doc, starting at
     // the passage offset (1-based): doc 1 at 3,4,5; doc 2 at 4,5,6
     assert(loc === Set((1L, 3), (1L, 4), (1L, 5), (2L, 4), (2L, 5), (2L, 6)), s"got $loc")
-    // production twin: same duplicate structure under xxh64 window hashes...
-    val md5Counts = graft.ops.Dedup.passageDups(docs, "doc_id", "text", 8)
-      .select("ndocs", "occurrences").as[(Long, Long)].collect().sorted.toSeq
-    val xxCounts = graft.ops.Dedup.passageDups(docs, "doc_id", "text", 8,
-        hasher = graft.ops.Dedup.passageHashesXx)
-      .select("ndocs", "occurrences").as[(Long, Long)].collect().sorted.toSeq
-    assert(xxCounts === md5Counts)
-    val xxLoc = graft.ops.Dedup.passageDupLocations(docs, "doc_id", "text", 8,
-        hasher = graft.ops.Dedup.passageHashesXx)
-      .select("doc_id", "start").as[(Long, Int)].collect().toSet
-    assert(xxLoc === loc)
-    // ...with hash values pinned to the xxh64 spec (driver recomputation),
-    // and the range-hash bit-identical to hashing a copied slice
-    val toks = shared.split(" ")
-    val expected = (0 to 2).map { i =>
-      f"${graft.util.XXH64.hash(toks.slice(i, i + 8).mkString(" "), 0L)}%016x"
-    }.toSet
-    val gotXx = graft.ops.Dedup.passageDups(docs, "doc_id", "text", 8,
-        hasher = graft.ops.Dedup.passageHashesXx)
-      .select("h").as[String].collect().toSet
-    assert(gotXx === expected)
-    val buf = "zz the quick brown zz".getBytes("UTF-8")
-    assert(graft.util.XXH64.hash(buf, 3, 15, 42L) ===
-      graft.util.XXH64.hash(java.util.Arrays.copyOfRange(buf, 3, 18), 42L))
   }
 
   test("plan guard: contamination and excision stay equi-join-shaped — no cartesian, no doc self-blowup") {
