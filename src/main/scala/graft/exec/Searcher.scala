@@ -109,44 +109,23 @@ class Searcher(val index: Index) extends Serializable {
       .flatMap { case (f, n, d, fr, no) => PostingCodec.decodeScore(f, n, d, fr, no) }
   }
 
-  /** docFreq fast path: O(dictionary lookup), no postings scan
+  /** docFreq fast path: one term-table lookup, no Spark job
     * (reference count 2-arg fast path, indexers.py:390-399).
     */
   def docFreq(field: String, term: String): Long =
     termStats(field, Seq(term)).get(term).map(_._1).getOrElse(0L)
 
-  /** Collect (docFreq, totalTermFreq) for a small set of query terms.
-    * Memoized per (field, term) on the driver: term statistics are immutable
-    * for an index view (tombstones deliberately do not change them, like
-    * pre-merge Lucene), so repeated query terms skip the dictionary job.
-    * Negative lookups cache too (absent terms are common in fuzzy/spell).
+  /** (docFreq, totalTermFreq) of the query terms present in the index,
+    * read from the index's driver-resident [[graft.index.TermTable]] — no
+    * Spark job. Term statistics are immutable for an index view
+    * (tombstones deliberately do not change them, like pre-merge Lucene).
+    * Absent terms have no entry.
     */
-  private val statsCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Option[(Long, Long)]]
-
   def termStats(field: String, terms: Seq[String]): Map[String, (Long, Long)] = {
-    val distinct = terms.distinct
-    // resolve from the cache FIRST: the size-bound clear below must never
-    // invalidate entries this call already relies on
-    val cached = distinct.flatMap(t => statsCache.get((field, t)).map(t -> _)).toMap
-    val missing = distinct.filterNot(cached.contains)
-    val found: Map[String, (Long, Long)] =
-      if (missing.isEmpty) Map.empty
-      else index.termDict
-        .filter(col("field") === field && col("term").isin(missing: _*))
-        .select("term", "docFreq", "totalTermFreq")
-        .collect()
-        .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
-        .toMap
-    if (missing.nonEmpty) {
-      // bounded driver memory: shed HALF instead of clearing, so a workload
-      // cycling around the bound keeps a warm working set rather than
-      // thrashing from zero (reads above resolved before any shed)
-      if (statsCache.size > 65536)
-        statsCache.keysIterator.take(statsCache.size / 2).foreach(statsCache.remove)
-      missing.foreach(t => statsCache.put((field, t), found.get(t)))
-    }
-    cached.collect { case (t, Some(v)) => t -> v } ++ found
+    val table = index.termTable
+    terms.distinct.flatMap { t =>
+      table.get(field, t).map(e => t -> ((e.docFreq, e.totalTermFreq)))
+    }.toMap
   }
 
   /** Numeric docvalue view of a column: timestamps (incl. NTZ, read as UTC —
@@ -302,12 +281,6 @@ class Searcher(val index: Index) extends Serializable {
     */
   var fuzzyGramMinDictSize: Long = 1000000L
 
-  // one count job, memoized; parquet-backed dictionaries answer from footer
-  // metadata. Consulted on EVERY fuzzy query regardless of grams layout —
-  // the size gate applies uniformly, so a loaded stored-grams index also
-  // pays this one-time count on its first fuzzy query.
-  private lazy val dictTermCount: Long = index.termDict.count()
-
   /** Dictionary view narrowed by the q-gram count filter: a term within
     * (restricted-Damerau) distance k of `q` loses at most q+1 = 4 gram
     * occurrences per edit (a transposition spans 4 padded trigrams; other
@@ -324,7 +297,7 @@ class Searcher(val index: Index) extends Serializable {
     val qg = Searcher.padGrams(q)
     val t = qg.length - 4 * maxEdits
     // size-gated regardless of layout — see fuzzyGramMinDictSize
-    val gramsWorthIt = dictTermCount >= fuzzyGramMinDictSize
+    val gramsWorthIt = index.termTable.size >= fuzzyGramMinDictSize
     if (t < 1 || !gramsWorthIt) index.termDict
     else {
       val cand = termGrams
@@ -398,54 +371,30 @@ class Searcher(val index: Index) extends Serializable {
       .flatMap { case (f, n, d) => PostingCodec.decodeDocIds(f, n, d) }
       .toDF("docId")
 
-  /** Driver-collect cap for rare-term block ranges (the literal-pushdown
-    * pruning path); above it [[rareCoveragePruner]] degrades to the
-    * distributed bucket semi-join. Test-visible so specs can force the
+  /** Block-count cap for the literal range pruning path: a rare term with
+    * more blocks than this takes the distributed bucket semi-join in
+    * [[rareCoveragePruner]] instead. Test-visible so specs can force the
     * fallback plan.
     */
   private[graft] var maxRareDriverBlocks = 4096
 
-  /** Memoized per (field, term): the rare term's block ranges are immutable
-    * for an index view, so repeated conjunctive/positional queries skip the
-    * bounded driver fetch (bust the cache by constructing a new Searcher —
-    * which every index mutation already does).
-    */
-  private val prunerCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String, Int), DataFrame => DataFrame]
-
   /** Block pruner from the rarest term's docId coverage, shared by the
-    * conjunctive and positional paths. The rare term's (firstDocId,
-    * lastDocId) block ranges are collected when few (bounded driver fetch),
-    * merged, and pushed down as LITERAL range predicates — wider terms'
-    * blocks outside every rare range prune at the parquet scan via min/max
-    * stats, with no extra job and no shuffle. Collecting is sound at scale:
-    * a term with df 10⁶ spans ≤ df/128 blocks; genuinely hot-everywhere
-    * "rare" terms overflow the cap and degrade to the distributed
-    * bucket semi-join (the round-2 plan). Range pruning is strictly finer
-    * than bucket pruning: blocks never span a salt bucket, and only
+    * conjunctive and positional paths. The rare term's merged
+    * (firstDocId, lastDocId) block ranges come from the index's term table
+    * (no Spark job) and are pushed down as LITERAL range predicates — wider
+    * terms' blocks outside every rare range prune at the parquet scan via
+    * min/max stats, with no extra job and no shuffle. A term spans at
+    * least df/128 blocks, so a hot-everywhere "rarest" term exceeds
+    * [[maxRareDriverBlocks]] and degrades to the distributed bucket
+    * semi-join (the round-2 plan). Range pruning is strictly finer than
+    * bucket pruning: blocks never span a salt bucket, and only
     * touching/overlapping ranges merge, so the merged set covers exactly the
     * rare term's blocks' union.
     */
   private def rareCoveragePruner(field: String, rareTerm: String): DataFrame => DataFrame = {
-    if (prunerCache.size > 4096) // bounded driver memory: shed half, keep a warm set
-      prunerCache.keysIterator.take(prunerCache.size / 2).foreach(prunerCache.remove)
-    prunerCache.getOrElseUpdate((field, rareTerm, maxRareDriverBlocks),
-      computeRarePruner(field, rareTerm))
-  }
-
-  private def computeRarePruner(field: String, rareTerm: String): DataFrame => DataFrame = {
-    val maxDriverBlocks = maxRareDriverBlocks
-    val few = index.blocks
-      .filter(col("field") === field && col("term") === rareTerm)
-      .select(col("firstDocId"), col("lastDocId"))
-      .as[(Long, Long)].take(maxDriverBlocks + 1)
-    if (few.length <= maxDriverBlocks) {
-      val merged = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-      few.sortBy(_._1).foreach { case (f, l) =>
-        if (merged.nonEmpty && f <= merged.last._2 + 1)
-          merged(merged.length - 1) = (merged.last._1, math.max(merged.last._2, l))
-        else merged += ((f, l))
-      }
+    val entry = index.termTable.get(field, rareTerm)
+    if (entry.fold(0)(_.blockCount) <= maxRareDriverBlocks) {
+      val merged = entry.fold(Seq.empty[(Long, Long)])(_.ranges)
       if (merged.isEmpty) (wide: DataFrame) => wide.limit(0)
       else if (merged.length <= 256) {
         val cond = merged.map { case (f, l) =>

@@ -180,18 +180,32 @@ object DocIds {
   * docCount/norms without a second tokenize pass and is excluded from real
   * posting reads.
   */
-final class Index(
+final class Index private[index] (
     val spark: SparkSession,
     val schema: IndexSchema,
     val docs: DataFrame, // source columns + docId + __sha256_<textField>
     val blocks: Dataset[PostingBlock],
     val termDict: DataFrame, // (field, term, docFreq, totalTermFreq)
     val fieldStats: Map[String, FieldStats],
-    val deletes: Option[DataFrame] = None, // tombstoned docIds (liveDocs bits)
+    val deletes: Option[DataFrame], // tombstoned docIds (liveDocs bits)
     // stored trigram candidate index over the dictionary (save() layout);
     // absent => derived lazily by the searcher
-    val termGrams: Option[DataFrame] = None
+    val termGrams: Option[DataFrame],
+    // the term table's holder; a withDeletes view passes its base's
+    @transient terms: TermTable.Lazy
 ) {
+  def this(spark: SparkSession, schema: IndexSchema, docs: DataFrame,
+      blocks: Dataset[PostingBlock], termDict: DataFrame, fieldStats: Map[String, FieldStats],
+      deletes: Option[DataFrame] = None, termGrams: Option[DataFrame] = None) =
+    this(spark, schema, docs, blocks, termDict, fieldStats, deletes, termGrams,
+      new TermTable.Lazy(termDict, blocks))
+
+  /** The driver-resident [[TermTable]] the searcher plans from (term
+    * statistics, block counts, rare-term block ranges). Built on first use,
+    * not at build or load time; shared with every [[withDeletes]] view.
+    */
+  private[graft] def termTable: TermTable = terms.get
+
   def numDocs: Long = docs.count()
 
   /** Live doc count (deletes are tombstones until an expunge/rebuild,
@@ -204,11 +218,12 @@ final class Index(
 
   /** Tombstone additional docIds (reference IndexWriter.delete,
     * indexers.py:578-586): term statistics intentionally keep counting
-    * deleted docs until a rebuild, exactly like Lucene before a merge.
+    * deleted docs until a rebuild, exactly like Lucene before a merge — so
+    * the view shares this index's term table.
     */
   def withDeletes(ids: DataFrame): Index = {
     val all = deletes.map(_.unionByName(ids).distinct()).getOrElse(ids.distinct())
-    new Index(spark, schema, docs, blocks, termDict, fieldStats, Some(all))
+    new Index(spark, schema, docs, blocks, termDict, fieldStats, Some(all), None, terms)
   }
 
   /** Append new source rows as a fresh segment: new docIds start past the

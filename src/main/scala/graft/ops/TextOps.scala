@@ -108,9 +108,10 @@ object TextOps {
     * taken on the PREVIOUS category's redacted text, since an email's host
     * part can itself parse as an IPv4 (`a@1.2.3.4.com`). One Scala UDF
     * runs the three java.util.regex passes (the engine Spark's native
-    * regexp functions use). Returns struct(clean, n_emails, n_ips,
-    * n_phones); a null text gives a non-null struct whose four fields are
-    * all null.
+    * regexp functions use) and returns the named struct itself
+    * ([[PiiRedaction]]: clean, n_emails, n_ips, n_phones), so reading all
+    * four fields calls it once per row; a null text gives a non-null struct
+    * whose four fields are all null.
     */
   def redactPii(text: Column): Column = {
     // ONE matcher walk per category does the count AND the replacement
@@ -128,8 +129,8 @@ object TextOps {
     val ipP = java.util.regex.Pattern.compile(
       "\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b")
     val phoneP = java.util.regex.Pattern.compile("\\+\\d[\\d\\- ]{7,}\\d")
-    val f = udf((t: String) => {
-      if (t == null) null
+    udf((t: String) => {
+      if (t == null) PiiRedaction(null, None, None, None)
       else {
         def pass(s: String, p: java.util.regex.Pattern, repl: String): (String, Int) = {
           val m = p.matcher(s)
@@ -150,16 +151,14 @@ object TextOps {
         val (afterEmail, nEmails) = pass(t, emailP, "<EMAIL>")
         val (afterIp, nIps) = pass(afterEmail, ipP, "<IP>")
         val (clean, nPhones) = pass(afterIp, phoneP, "<PHONE>")
-        (clean, nEmails, nIps, nPhones)
+        PiiRedaction(clean, Some(nEmails), Some(nIps), Some(nPhones))
       }
-    })
-    val a = f(text)
-    struct(
-      a.getField("_1").as("clean"),
-      a.getField("_2").as("n_emails"),
-      a.getField("_3").as("n_ips"),
-      a.getField("_4").as("n_phones"))
+    }).apply(text)
   }
+
+  /** [[redactPii]]'s result struct; its field names are the column names. */
+  final case class PiiRedaction(clean: String, n_emails: Option[Int], n_ips: Option[Int],
+      n_phones: Option[Int])
 
   /** C4 line/page cleaning (Raffel et al., "Exploring the Limits of
     * Transfer Learning with a Unified Text-to-Text Transformer", JMLR 2020,
