@@ -59,10 +59,6 @@ object Searcher {
   private[exec] def saltBucket: Column =
     shiftrightunsigned(col("firstDocId"), graft.index.IndexBuilder.SaltShift)
 
-  /** Padded trigrams of a term — see [[graft.index.TermGrams.padGrams]]. */
-  private[graft] def padGrams(s: String): Seq[String] =
-    graft.index.TermGrams.padGrams(s)
-
   /** Fuzzy-expansion predicate over the term dictionary. Cheap filters run
     * first (Catalyst And short-circuits left-to-right): a length window —
     * |len(term) − len(q)| ≤ maxEdits is necessary for any edit distance — and
@@ -189,9 +185,8 @@ class Searcher(val index: Index) extends Serializable {
       constantOverTerms(f, col("term").rlike("^(?:" + pat + ")$"), 1.0)
     case Fuzzy(f, t, maxEdits, prefixLen, transpositions) =>
       // edit-distance expansion incl. the exact term (FuzzyQuery semantics,
-      // constant score); the trigram prefilter narrows the dictionary first
-      constantOverTerms(f, Searcher.fuzzyCond(t, maxEdits, prefixLen, transpositions), 1.0,
-        dict = fuzzyPrefiltered(f, t, maxEdits))
+      // constant score) over the dictionary scan
+      constantOverTerms(f, Searcher.fuzzyCond(t, maxEdits, prefixLen, transpositions), 1.0)
 
     case Points(f, vs) =>
       index.docs.filter(numericCol(f).isin(vs: _*))
@@ -222,19 +217,21 @@ class Searcher(val index: Index) extends Serializable {
   }
 
   /** Multi-term queries rewrite to a constant-score doc-set union
-    * (Lucene CONSTANT_SCORE rewrite; SURVEY.md §4.2). Small expansions are
-    * collected and pushed down as an `isin` scan filter; large ones stay
-    * distributed via a semi-join against the term dictionary.
+    * (Lucene CONSTANT_SCORE rewrite; SURVEY.md §4.2). `knownTerms` (a term
+    * set) read the blocks directly; otherwise `termCond` filters a scan of
+    * the term dictionary. Small expansions are collected and pushed down as
+    * an `isin` scan filter; large ones stay distributed via a semi-join
+    * against the filtered dictionary.
     */
   private def constantOverTerms(field: String, termCond: Column, boost: Double,
-      knownTerms: Option[Seq[String]] = None, dict: DataFrame = null): DataFrame = {
+      knownTerms: Option[Seq[String]] = None): DataFrame = {
     val matchedDocs: DataFrame = knownTerms match {
       case Some(ts) =>
         // "" is the norms-sentinel pseudo-term — never a real match
         val real = ts.filter(_.nonEmpty)
         index.blocks.filter(col("field") === field && col("term").isin(real: _*)).toDF()
       case None =>
-        val termsDf = Option(dict).getOrElse(index.termDict)
+        val termsDf = index.termDict
           .filter(col("field") === field && col("term") =!= "" && termCond)
           .select("term")
         val small = termsDf.as[String].take(MaxExpandedTerms + 1)
@@ -251,62 +248,6 @@ class Searcher(val index: Index) extends Serializable {
       .flatMap { case (f, n, d) => PostingCodec.decodeDocIds(f, n, d) }
       .toDF("docId").distinct()
       .select(col("docId"), lit(boost).as("score"))
-  }
-
-  // ------------------------------------------------- fuzzy candidate pruning
-
-  /** Trigram inverted index over the term dictionary: (field, gram, term).
-    * The save() layout materializes it range-laid-out by (field, gram)
-    * (parquet min/max pruning per gram lookup — the serving shape); an
-    * in-memory or pre-grams index derives it lazily from the (cached)
-    * termDict and pins it on first fuzzy use.
-    */
-  private lazy val termGrams: DataFrame = index.termGrams.getOrElse {
-    // shared bounded cache — see TermGrams.cachedOf (one pinned copy per
-    // dictionary instance, evicted+unpersisted when superseded)
-    graft.index.TermGrams.cachedOf(index.termDict)
-  }
-
-  /** Cost gate for the trigram prefilter: the gram route always costs extra
-    * STAGES per query (gram-count aggregation + semi-join against the
-    * dictionary) on top of whatever produced the grams, so it only pays off
-    * once the dictionary is large enough (≳10⁶ terms) that the full
-    * pushed-down length-window scan it replaces dominates. Below the gate the
-    * plain scan wins AT EVERY LAYOUT — a stored `termgrams/` directory only
-    * removes the one-time derivation cost, not the per-query stages
-    * (measured: stored-grams route 0.32 s vs 0.13 s plain scan on a ~10⁴-term
-    * dictionary at sf0.1). Above it, the stored layout serves the grams with
-    * pushed-down point reads and the derived path persists them once.
-    * Tunable for tests and unusual corpora.
-    */
-  var fuzzyGramMinDictSize: Long = 1000000L
-
-  /** Dictionary view narrowed by the q-gram count filter: a term within
-    * (restricted-Damerau) distance k of `q` loses at most q+1 = 4 gram
-    * occurrences per edit (a transposition spans 4 padded trigrams; other
-    * edits 3), so it must share ≥ |grams(q)| − 4k of q's distinct grams —
-    * terms below the threshold are provably outside the distance and never
-    * reach the O(|a|·|b|) distance computation. Lucene walks a Levenshtein
-    * automaton over the FST in O(matches); this is the equivalent
-    * set-algebra prune: candidates come from |grams(q)| posting-list
-    * lookups instead of a dictionary scan. When the threshold is
-    * non-positive (short queries — bench-corpus scale), the filter is
-    * vacuous and the full length-window scan remains (already cheap there).
-    */
-  private def fuzzyPrefiltered(field: String, q: String, maxEdits: Int): DataFrame = {
-    val qg = Searcher.padGrams(q)
-    val t = qg.length - 4 * maxEdits
-    // size-gated regardless of layout — see fuzzyGramMinDictSize
-    val gramsWorthIt = index.termTable.size >= fuzzyGramMinDictSize
-    if (t < 1 || !gramsWorthIt) index.termDict
-    else {
-      val cand = termGrams
-        .filter(col("field") === field && col("gram").isin(qg: _*))
-        .groupBy("field", "term").agg(org.apache.spark.sql.functions.count(lit(1)).as("__g"))
-        .filter(col("__g") >= t)
-        .select("field", "term")
-      index.termDict.join(cand, Seq("field", "term"), "left_semi")
-    }
   }
 
   def wildcardToRegex(pat: String): String = {
@@ -371,49 +312,33 @@ class Searcher(val index: Index) extends Serializable {
       .flatMap { case (f, n, d) => PostingCodec.decodeDocIds(f, n, d) }
       .toDF("docId")
 
-  /** Block-count cap for the literal range pruning path: a rare term with
-    * more blocks than this takes the distributed bucket semi-join in
-    * [[rareCoveragePruner]] instead. Test-visible so specs can force the
-    * fallback plan.
-    */
-  private[graft] var maxRareDriverBlocks = 4096
-
   /** Block pruner from the rarest term's docId coverage, shared by the
     * conjunctive and positional paths. The rare term's merged
     * (firstDocId, lastDocId) block ranges come from the index's term table
-    * (no Spark job) and are pushed down as LITERAL range predicates — wider
-    * terms' blocks outside every rare range prune at the parquet scan via
-    * min/max stats, with no extra job and no shuffle. A term spans at
-    * least df/128 blocks, so a hot-everywhere "rarest" term exceeds
-    * [[maxRareDriverBlocks]] and degrades to the distributed bucket
-    * semi-join (the round-2 plan). Range pruning is strictly finer than
-    * bucket pruning: blocks never span a salt bucket, and only
-    * touching/overlapping ranges merge, so the merged set covers exactly the
-    * rare term's blocks' union.
+    * (no Spark job) and are pushed down as LITERAL predicates, so wider
+    * terms' blocks outside the coverage prune at the parquet scan via
+    * min/max stats, with no extra job and no shuffle: an OR of range
+    * predicates for up to 256 merged ranges, and above that a literal
+    * `InSet` of the salt buckets the ranges touch (coarser, but a bounded
+    * expression however many blocks the term has). Both cover every block
+    * of the rare term: blocks never span a salt bucket, and only
+    * touching/overlapping ranges merge, so the merged set is exactly the
+    * union of the rare term's blocks.
     */
   private def rareCoveragePruner(field: String, rareTerm: String): DataFrame => DataFrame = {
-    val entry = index.termTable.get(field, rareTerm)
-    if (entry.fold(0)(_.blockCount) <= maxRareDriverBlocks) {
-      val merged = entry.fold(Seq.empty[(Long, Long)])(_.ranges)
-      if (merged.isEmpty) (wide: DataFrame) => wide.limit(0)
-      else if (merged.length <= 256) {
-        val cond = merged.map { case (f, l) =>
-          col("lastDocId") >= f && col("firstDocId") <= l
-        }.reduce(_ || _)
-        (wide: DataFrame) => wide.filter(cond)
-      } else {
-        // too many ranges for an OR chain: literal bucket InSet instead
-        val bkts = merged.flatMap { case (f, l) =>
-          (f >> graft.index.IndexBuilder.SaltShift) to (l >> graft.index.IndexBuilder.SaltShift)
-        }.distinct
-        (wide: DataFrame) => wide.filter(Searcher.saltBucket.isin(bkts.toSeq: _*))
-      }
+    val merged = index.termTable.get(field, rareTerm).fold(Seq.empty[(Long, Long)])(_.ranges)
+    if (merged.isEmpty) (wide: DataFrame) => wide.limit(0)
+    else if (merged.length <= 256) {
+      val cond = merged.map { case (f, l) =>
+        col("lastDocId") >= f && col("firstDocId") <= l
+      }.reduce(_ || _)
+      (wide: DataFrame) => wide.filter(cond)
     } else {
-      val bucket = Searcher.saltBucket
-      val rareBuckets = index.blocks
-        .filter(col("field") === field && col("term") === rareTerm)
-        .select(bucket.as("__bkt")).distinct()
-      (wide: DataFrame) => wide.join(rareBuckets, bucket === col("__bkt"), "left_semi")
+      // too many ranges for an OR chain: literal bucket InSet instead
+      val bkts = merged.flatMap { case (f, l) =>
+        (f >> graft.index.IndexBuilder.SaltShift) to (l >> graft.index.IndexBuilder.SaltShift)
+      }.distinct
+      (wide: DataFrame) => wide.filter(Searcher.saltBucket.isin(bkts.toSeq: _*))
     }
   }
 
@@ -508,8 +433,8 @@ class Searcher(val index: Index) extends Serializable {
     * no further shuffle. Score-only routes (single field) project away the
     * position/payload/offset blobs — often the widest columns — before the
     * exchange, so parquet never reads them, and rebuild the blocks after it;
-    * `coShuffled` rows in that 10-column layout (WAND's tombstones beyond
-    * the broadcast cap) ride the same exchange.
+    * `coShuffled` rows in that 10-column layout (WAND's tombstones) ride the
+    * same exchange.
     */
   private def bucketBlocks(keys: Seq[(String, String)], prune: DataFrame => DataFrame,
       withPositions: Boolean, coShuffled: Option[DataFrame] = None): Dataset[PostingBlock] = {
@@ -660,58 +585,6 @@ class Searcher(val index: Index) extends Serializable {
   lazy val wandDecoded: org.apache.spark.util.LongAccumulator =
     spark.sparkContext.longAccumulator("graft.wandDecodedBlocks")
 
-  /** Largest tombstone set WAND will broadcast as a liveDocs filter — the
-    * in-memory analogue of Lucene's per-segment liveDocs bitsets (8 bytes ×
-    * 4M ≈ 32 MB, comfortably under executor broadcast budgets). Beyond it
-    * WAND still runs: the delete table CO-SHUFFLES with the posting blocks
-    * on the same docId salt bucket (one narrow docId-only exchange per
-    * query) and each partition assembles its own sorted liveDocs — no
-    * driver collect, no ceiling. The broadcast path stays preferred under
-    * the cap because its one-time collect amortizes across every query on
-    * this searcher; `forceMergeDeletes()`+`vacuumDeletes()` remain the
-    * operational pressure valve that restores it.
-    *
-    * LATCHES on the first search (the liveDocs set is computed once per
-    * searcher, like a Lucene reader pinning its .liv bits): assigning it
-    * after any query is an error, not a silent no-op (advisor r5).
-    */
-  def wandMaxTombstones: Int = wandMaxTombstones0
-  // synchronized on `this` — the SAME monitor the lazy-val initializer below
-  // holds while it runs (Scala lazy vals initialize inside synchronized(this)),
-  // so a setter racing a first search either completes before the initializer
-  // reads the cap, or blocks until initialization finishes and then THROWS on
-  // the latch — never a silently-ignored assignment (advisor r6)
-  def wandMaxTombstones_=(v: Int): Unit = this.synchronized {
-    require(!wandTombstonesLatched,
-      "wandMaxTombstones latches on the first search — set it before querying " +
-        "(or open a fresh Searcher on the index)")
-    wandMaxTombstones0 = v
-  }
-  private var wandMaxTombstones0: Int = 4 << 20
-  private var wandTombstonesLatched = false
-
-  /** Sorted tombstoned docIds for the WAND cursors (None = no deletes OR the
-    * set overflowed the broadcast cap — [[wandPartitions]] then ships the
-    * deletes through the block shuffle instead). Deletes are immutable per
-    * Index instance, so one collect+sort+broadcast serves every query on
-    * this searcher (Lucene NRT readers likewise pin liveDocs per reader).
-    */
-  private lazy val (wandTombstones, wandTombstonesOverflow):
-      (Option[org.apache.spark.broadcast.Broadcast[Array[Long]]], Boolean) = {
-    wandTombstonesLatched = true
-    index.deletes match {
-      case None => (None, false)
-      case Some(d) =>
-        val ids = d.select(col("docId").cast("long")).distinct()
-          .limit(wandMaxTombstones0 + 1).as[Long].collect()
-        if (ids.length > wandMaxTombstones0) (None, true)
-        else {
-          java.util.Arrays.sort(ids)
-          (Some(spark.sparkContext.broadcast(ids)), false)
-        }
-    }
-  }
-
   /** Match a query shape WAND can serve — returns (field, weighted terms,
     * tie): SHOULD-only boolean over Terms of one field (with optional
     * boosts) or a bare (possibly boosted) Term, both with tie = 1.0 (the
@@ -784,19 +657,20 @@ class Searcher(val index: Index) extends Serializable {
 
   /** Per-partition WAND results: (top-k docIds, their scores, docs scored,
     * pruned?) — one row per salt-bucket partition. [[searchWand]] flattens
-    * the tops; [[searchHits]] also folds the count accounting.
+    * the tops; [[searchHits]] also folds the count accounting. A view with
+    * deletes ships its tombstones through the same salt-bucket exchange as
+    * the blocks, so each partition filters against its own buckets'
+    * liveDocs (the analogue of Lucene's per-segment liveDocs bits).
     */
   private def wandPartitions(field: String, weights: Seq[(String, Double)], avgdl: Double,
       k: Int, tie: Double = 1.0):
       org.apache.spark.sql.Dataset[(Array[Long], Array[Double], Long, Boolean)] = {
     val acc = wandDecoded // local val: the closure must not capture `this`
-    val tomb = wandTombstones.orNull // Broadcast is serializable; `this` is not shipped
-    // Broadcast-cap overflow: the deletes CO-SHUFFLE with the blocks on the
-    // same salt bucket (blocks never span one), tagged numDocs = -1 — a real
-    // block always has numDocs >= 1. One narrow (docId-only) exchange per
-    // query instead of a driver collect; each partition then sees exactly
-    // the tombstones its docId range can contain.
-    val coShuffledTombs = if (!wandTombstonesOverflow) None else Some(index.deletes.get.select(
+    // tombstones ride the block exchange as numDocs = -1 rows (a real block
+    // always has numDocs >= 1); blocks never span a salt bucket, so each
+    // partition sees exactly the tombstones its docId range can contain,
+    // with no driver collect and no size ceiling
+    val coShuffledTombs = index.deletes.map(_.select(
       lit("").as("term"), col("docId").cast("long").as("firstDocId"),
       col("docId").cast("long").as("lastDocId"), lit(-1).as("numDocs"),
       lit(0).as("maxTf"), lit(0L).as("sumTf"), lit(0).as("minDlq"),
@@ -809,9 +683,8 @@ class Searcher(val index: Index) extends Serializable {
         // per-bucket liveDocs from co-shuffled rows: sorted with possible
         // duplicates (the delete table is append-only) — binarySearch still
         // decides
-        val sorted =
-          if (tomb != null) tomb.value
-          else { val ids = tombRows.map(_.firstDocId); java.util.Arrays.sort(ids); ids }
+        val sorted = tombRows.map(_.firstDocId)
+        java.util.Arrays.sort(sorted)
         val deleted: Long => Boolean =
           if (sorted.isEmpty) _ => false
           else d => java.util.Arrays.binarySearch(sorted, d) >= 0
@@ -1166,15 +1039,15 @@ class Searcher(val index: Index) extends Serializable {
   // --------------------------------------------------- dictionary/introspect
 
   /** Ordered term-dictionary slice (reference IndexReader.terms,
-    * indexers.py:220-246): prefix scan, range scan, or fuzzy scan.
-    * `minPrefix` is the reference's fuzzy `prefix=` knob (FuzzyTermsEnum
-    * prefixLength): the first N characters must match exactly — a cheap
-    * dictionary-side range narrowing before any distance math.
+    * indexers.py:220-246): prefix scan, range scan, or fuzzy scan. The
+    * fuzzy scan filters the dictionary with [[Searcher.fuzzyCond]] (length
+    * window and prefix before the distance). `minPrefix` is the
+    * reference's fuzzy `prefix=` knob (FuzzyTermsEnum prefixLength): the
+    * first N characters must match exactly.
     */
   def terms(field: String, prefix: String = "", stop: String = null,
       counts: Boolean = false, distance: Int = 0, minPrefix: Int = 0): DataFrame = {
-    var td = (if (distance > 0) fuzzyPrefiltered(field, prefix, distance) else index.termDict)
-      .filter(col("field") === field && col("term") =!= "")
+    var td = index.termDict.filter(col("field") === field && col("term") =!= "")
     td =
       if (distance > 0) // FuzzyTermsEnum semantics: transposition = 1 edit
         td.filter(Searcher.fuzzyCond(prefix, distance, prefixLen = minPrefix, transpositions = true))
@@ -1239,14 +1112,14 @@ class Searcher(val index: Index) extends Serializable {
     * ≤ maxEdits with transposition = 1 edit (LuceneLevenshteinDistance),
     * ranked by normalized similarity (1 − dist/min(|query|,|term|)) then
     * popularity — pins the reference's `suggest("text","write") ==
-    * [writs, writ, written]` ordering. Length-window + first-letter filters
-    * run before the distance so a web-scale dictionary scans cheaply.
+    * [writs, writ, written]` ordering. One scan of the term dictionary:
+    * the length-window and first-letter filters run before the distance.
     */
   def suggest(field: String, value: String, k: Int = 10, maxEdits: Int = 2): DataFrame = {
     val dist = Searcher.damerau(col("term"), lit(value))
     val sim = lit(1.0) - dist.cast("double") /
       least(length(col("term")), lit(value.length)).cast("double")
-    fuzzyPrefiltered(field, value, maxEdits)
+    index.termDict
       .filter(col("field") === field && col("term") =!= "" && col("term") =!= value &&
         Searcher.fuzzyCond(value, maxEdits, prefixLen = 1, transpositions = true))
       .select(col("term"), col("docFreq"), dist.as("dist"), sim.as("sim"))

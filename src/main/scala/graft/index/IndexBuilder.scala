@@ -173,7 +173,11 @@ object DocIds {
 }
 
 /** The materialized index: compressed posting blocks + derived term
-  * dictionary + the doc store (source rows + docId + content sha256).
+  * dictionary + the doc store (source rows + docId + content sha256) +
+  * optional tombstones. [[save]] writes exactly these tables (postings,
+  * docs, termdict and, when present, deletes) plus a manifest; the searcher
+  * plans from the driver-resident [[TermTable]] built from the postings and
+  * the term dictionary, and fuzzy/suggest expansions scan the dictionary.
   *
   * Table shapes follow SURVEY.md §1.5. The sentinel term "" carries one
   * entry per (doc, field) with tf=0 and the quantized field length — it gives
@@ -188,16 +192,13 @@ final class Index private[index] (
     val termDict: DataFrame, // (field, term, docFreq, totalTermFreq)
     val fieldStats: Map[String, FieldStats],
     val deletes: Option[DataFrame], // tombstoned docIds (liveDocs bits)
-    // stored trigram candidate index over the dictionary (save() layout);
-    // absent => derived lazily by the searcher
-    val termGrams: Option[DataFrame],
     // the term table's holder; a withDeletes view passes its base's
     @transient terms: TermTable.Lazy
 ) {
   def this(spark: SparkSession, schema: IndexSchema, docs: DataFrame,
       blocks: Dataset[PostingBlock], termDict: DataFrame, fieldStats: Map[String, FieldStats],
-      deletes: Option[DataFrame] = None, termGrams: Option[DataFrame] = None) =
-    this(spark, schema, docs, blocks, termDict, fieldStats, deletes, termGrams,
+      deletes: Option[DataFrame] = None) =
+    this(spark, schema, docs, blocks, termDict, fieldStats, deletes,
       new TermTable.Lazy(termDict, blocks))
 
   /** The driver-resident [[TermTable]] the searcher plans from (term
@@ -223,7 +224,7 @@ final class Index private[index] (
     */
   def withDeletes(ids: DataFrame): Index = {
     val all = deletes.map(_.unionByName(ids).distinct()).getOrElse(ids.distinct())
-    new Index(spark, schema, docs, blocks, termDict, fieldStats, Some(all), None, terms)
+    new Index(spark, schema, docs, blocks, termDict, fieldStats, Some(all), terms)
   }
 
   /** Append new source rows as a fresh segment: new docIds start past the
@@ -293,15 +294,17 @@ final class Index private[index] (
     // Range-layout postings by (field, term) so per-term query filters prune
     // whole files via parquet min/max stats; docs by docId for id lookups.
     //
-    // The four table writes are INDEPENDENT (each reads only the build's
+    // The three table writes are INDEPENDENT (each reads only the build's
     // cached output), so they run CONCURRENTLY from a small driver pool
     // (guide §2.6): Spark schedules jobs FIFO, and each write's straggler
     // tail is back-filled by the next write's tasks instead of idling the
     // executors — measured 2.1 s → ~1.2 s for the sf0.1 save. Failures
-    // propagate: any write's exception rethrows at the await.
+    // propagate: save() waits for EVERY write to finish, then rethrows the
+    // first failure, so no write job outlives a failed save() and no
+    // manifest is written.
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutorService(pool)
     try {
@@ -321,18 +324,9 @@ final class Index private[index] (
           termDict.repartitionByRange(col("field"), col("term"))
             .sortWithinPartitions("field", "term")
             .write.mode("overwrite").parquet(s"$dir/termdict")
-        },
-        Future {
-          // trigram candidate index for fuzzy/suggest, range-laid-out by
-          // (field, gram) so a query's |grams(q)| lookups prune whole files
-          // via parquet min/max stats — the serving-grade form of the
-          // prefilter the searcher otherwise derives per process
-          TermGrams.of(termDict)
-            .repartitionByRange(col("field"), col("gram"))
-            .sortWithinPartitions("field", "gram")
-            .write.mode("overwrite").parquet(s"$dir/termgrams")
         })
-      writes.foreach(Await.result(_, Duration.Inf))
+      writes.foreach(Await.ready(_, Duration.Inf))
+      writes.foreach(_.value.get.get)
     } finally pool.shutdown()
     deletes match {
       case Some(d) => d.write.mode("overwrite").parquet(s"$dir/deletes")
@@ -653,55 +647,6 @@ object IndexBuilder {
       readPostings(spark, s"$dir/postings").as[PostingBlock],
       spark.read.parquet(s"$dir/termdict"),
       manifest.fieldStats,
-      deletes,
-      if (fs.exists(new org.apache.hadoop.fs.Path(s"$dir/termgrams")))
-        Some(spark.read.parquet(s"$dir/termgrams"))
-      else None // pre-grams layout: the searcher derives it
-    )
-  }
-}
-
-/** Trigram q-gram signatures over dictionary terms — the fuzzy/suggest
-  * candidate prefilter (see Searcher.fuzzyPrefiltered for the distance
-  * bound).
-  */
-object TermGrams {
-
-  /** Padded trigrams of a term (distinct). Static so the UDF closure stays
-    * slim.
-    */
-  def padGrams(s: String): Seq[String] = {
-    val p = "\u0001\u0001" + s + "\u0002\u0002" // sentinel chars no analyzer can emit
-    (0 to p.length - 3).map(i => p.substring(i, i + 3)).distinct
-  }
-
-  /** (field, term, gram) rows for every dictionary term. */
-  def of(termDict: DataFrame): DataFrame = {
-    val g = udf((t: String) => padGrams(t))
-    termDict.filter(col("term") =!= "")
-      .select(col("field"), col("term"), explode(g(col("term"))).as("gram"))
-  }
-
-  // Derived-grams cache, keyed by termDict REFERENCE identity: Searchers over
-  // the same Index (and views made via withDeletes, which share the termDict
-  // DataFrame) reuse one pinned grams table instead of each persisting their
-  // own; superseded dictionaries (writer refresh re-opens the index) age out
-  // of the access-ordered bound and unpersist — long-lived writer sessions no
-  // longer accumulate cached copies until GC.
-  private val derivedCache =
-    new java.util.LinkedHashMap[AnyRef, DataFrame](8, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[AnyRef, DataFrame]): Boolean =
-        if (size > 4) { e.getValue.unpersist(false); true } else false
-    }
-
-  /** [[of]], persisted and memoized per dictionary instance (bounded LRU). */
-  def cachedOf(termDict: DataFrame): DataFrame = derivedCache.synchronized {
-    val hit = derivedCache.get(termDict)
-    if (hit != null) hit
-    else {
-      val g = of(termDict).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      derivedCache.put(termDict, g)
-      g
-    }
+      deletes)
   }
 }

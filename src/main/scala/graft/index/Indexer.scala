@@ -656,7 +656,7 @@ final class Indexer(
     * scale. The tombstone table is append-only (pins name its part-files),
     * so after [[forceMergeDeletes]]/merges purge the underlying docs, the
     * entries remain as no-ops yet every open still anti-joins them and WAND
-    * still broadcasts them: a long-lived 100 TB index accumulates an
+    * still shuffles them: a long-lived 100 TB index accumulates an
     * unbounded dead-tombstone working set. Lucene drops whole .liv files at
     * merge; here reclaim is an explicit vacuum with the SAME declared-pin
     * contract as [[vacuumMerged]] — if any outstanding pin names a current

@@ -4,10 +4,10 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Driver-resident term table of an [[Index]]: per (field, term) the
-  * dictionary statistics (`docFreq`, `totalTermFreq`), the term's block
-  * count and its merged `(firstDocId, lastDocId)` block ranges — the
-  * planner's whole view of the postings. It plays the role of the terms
-  * index a Lucene reader loads once when it opens: planning a query
+  * dictionary statistics (`docFreq`, `totalTermFreq`) and the term's merged
+  * `(firstDocId, lastDocId)` block ranges — the planner's whole view of
+  * the postings. It plays the role of the terms index a Lucene reader
+  * loads once when it opens: planning a query
   * (idf weights, rarest-first order, the rare-coverage range filter) reads
   * it with no Spark job. Immutable; built by two collects on first use
   * (see [[TermTable.Lazy]]); never shipped to executors.
@@ -25,12 +25,11 @@ final class TermTable private (
 
 object TermTable {
 
-  /** One term: dictionary statistics, block count, and the term's block
-    * ranges merged where they touch or overlap, flattened as
+  /** One term: dictionary statistics and the term's block ranges merged
+    * where they touch or overlap, flattened as
     * `[first0, last0, first1, last1, …]` in ascending docId order.
     */
-  final class Entry(val docFreq: Long, val totalTermFreq: Long, val blockCount: Int,
-      rangeBounds: Array[Long]) {
+  final class Entry(val docFreq: Long, val totalTermFreq: Long, rangeBounds: Array[Long]) {
     def ranges: Seq[(Long, Long)] =
       rangeBounds.grouped(2).map(a => (a(0), a(1))).toSeq
   }
@@ -75,7 +74,7 @@ object TermTable {
       val (f, t) = (r.getString(0), r.getString(1))
       val bs = ranges.getOrElse((f, t), Array.empty[(Long, Long)])
       byField.getOrElseUpdate(f, new java.util.HashMap[String, Entry]())
-        .put(t, new Entry(r.getLong(2), r.getLong(3), bs.length, mergeRanges(bs)))
+        .put(t, new Entry(r.getLong(2), r.getLong(3), mergeRanges(bs)))
     }
     new TermTable(byField.toMap)
   }

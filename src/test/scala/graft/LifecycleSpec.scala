@@ -73,6 +73,28 @@ class LifecycleSpec extends SparkTestBase {
     assert(s.count(Q.phrase("content", "hello", "monde")) === 1)
   }
 
+  test("save waits for every table write before rethrowing a failure") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-save-fail").toString
+    // the docs write fails at once; the termdict write is still sleeping
+    // in its UDF when that failure surfaces
+    val failDocs = udf((d: Long) => {
+      if (d >= 0) throw new IllegalStateException("docs write fails"); d
+    })
+    val slowTerms = udf((t: String) => { if (t == "hello") Thread.sleep(3000); t })
+    val broken = new Index(spark, schema, base.docs.withColumn("docId", failDocs(col("docId"))),
+      base.blocks, base.termDict.withColumn("term", slowTerms(col("term"))), base.fieldStats)
+    intercept[Exception](broken.save(dir))
+    // job-end events reach the status tracker through the async listener
+    // bus, hence the short grace, well under the termdict write's sleep
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.{Millis, Span}
+    eventually(timeout(Span(500, Millis)), interval(Span(20, Millis))) {
+      assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty,
+        "a table write outlived the failed save()")
+    }
+    assert(!new java.io.File(s"$dir/manifest").exists)
+  }
+
   test("tombstones survive save/load; empty index append/union/query work") {
     val dir = java.nio.file.Files.createTempDirectory("graft-del-save").toString
     new Searcher(base).delete(Term("lang", "en")).index.save(dir)

@@ -272,7 +272,7 @@ class MergeSpec extends SparkTestBase {
     assert(w.count(AllDocs) === 3L)
     // the surviving (pinned) tombstone is VACUOUS — the purge half did run;
     // once the pin is no longer declared, a vacuum drops exactly that row
-    // and the next searcher's WAND liveDocs broadcast is empty
+    // and the next searcher's WAND liveDocs are empty
     assert(w.vacuumDeletes() === 1L)
     assert(!new java.io.File(s"$dir/deletes").exists)
     w.close()

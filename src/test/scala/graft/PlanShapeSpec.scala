@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.{FileSourceScanExec, UnionExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
@@ -14,8 +14,9 @@ import graft.query.{Query => Q, _}
   * index: exchange counts, parquet pushdown, the top-k operator, semi-joins
   * and broadcasts. The term, OR (WAND), AND (conjunction) and positional
   * routes each run exactly ONE hash exchange of compressed blocks on the
-  * docId salt bucket, and the score-only routes never read the positions
-  * blob. Queries execute first so AQE's final plan is inspected.
+  * docId salt bucket (over a deletes view, WAND's tombstones ride that same
+  * exchange), and the score-only routes never read the positions blob.
+  * Queries execute first so AQE's final plan is inspected.
   */
 class PlanShapeSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
@@ -40,11 +41,11 @@ class PlanShapeSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       p.contains("BroadcastExchange") || p.contains("BroadcastHashJoin")), plan)
   }
 
-  private def saltExchanges(plan: org.apache.spark.sql.execution.SparkPlan): Int =
+  private def saltExchanges(plan: org.apache.spark.sql.execution.SparkPlan): Seq[ShuffleExchangeExec] =
     collect(plan) {
       case e: ShuffleExchangeExec
           if e.outputPartitioning.toString.startsWith("hashpartitioning(shiftrightunsigned(firstDocId") => e
-    }.length
+    }
 
   private def postingsReadSchemas(plan: org.apache.spark.sql.execution.SparkPlan): Seq[Seq[String]] =
     collect(plan) { case s: FileSourceScanExec => s.requiredSchema.fieldNames.toSeq }
@@ -52,6 +53,10 @@ class PlanShapeSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   private lazy val parse = Term("content", "parse")
   private lazy val merge = Term("content", "merge")
+
+  private val overDeletes = "bool_or (WAND) over deletes"
+  private lazy val deletesView: Searcher =
+    new Searcher(searcher.index.withDeletes(spark.range(0, 5000, 3).toDF("docId")))
 
   // route -> (query, expected string shape, salt exchanges, score-only)
   private lazy val routes: Seq[(String, () => DataFrame, (Int, Boolean, Boolean, Boolean, Boolean),
@@ -73,7 +78,9 @@ class PlanShapeSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       (4, true, true, false, true), None, false),
     ("sorted", () => searcher.search(parse, 10, sorts = Seq(SortSpec("lang"))),
       (2, true, true, false, true), None, false),
-    ("fuzzy (trigram-prefiltered expansion)", () => searcher.search(Fuzzy("content", "mergebatch", 1), 10),
+    (overDeletes, () => deletesView.search(Q.any(parse, merge), 10),
+      (2, true, true, false, false), Some(1), true),
+    ("fuzzy (dictionary scan expansion)", () => searcher.search(Fuzzy("content", "mergebatch", 1), 10),
       (1, false, true, false, false), None, false),
     ("facets_multi (one pass, N fields)", () => searcher.facetsMulti(parse, Seq("lang", "repo")),
       (4, true, false, false, true), None, false))
@@ -82,7 +89,10 @@ class PlanShapeSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     test(s"plan shape: $label") {
       val (got, plan) = shape(df())
       assert(got === expected)
-      salt.foreach(n => assert(saltExchanges(plan) === n, "salt-bucket hash exchanges"))
+      salt.foreach(n => assert(saltExchanges(plan).length === n, "salt-bucket hash exchanges"))
+      if (label == overDeletes) // blocks + co-shuffled tombstones feed the one salt exchange
+        assert(saltExchanges(plan).count(_.find(_.isInstanceOf[UnionExec]).isDefined) === 1,
+          "tombstones ride the salt exchange")
       if (scoreOnly) {
         val schemas = postingsReadSchemas(plan)
         assert(schemas.nonEmpty, "postings scan expected")

@@ -112,7 +112,7 @@ class ScaleSpec extends SparkTestBase {
     assert(bad === 0L)
   }
 
-  test("positional/conjunctive pruning: literal block-range predicates; semi-join fallback above the cap") {
+  test("positional/conjunctive pruning: literal block-range predicates, no semi-join") {
     val s = new Searcher(IndexBuilder.build(corpus, schema, numPartitions = 4))
     def planOf(df: org.apache.spark.sql.DataFrame): String = {
       df.collect()
@@ -128,71 +128,75 @@ class ScaleSpec extends SparkTestBase {
     // aggregate of unioned full postings)
     val andPlan = planOf(s.search(Query.all(Term("content", "parse"), Term("content", "merge")), 10))
     assert(!andPlan.contains("LeftSemi") && andPlan.contains("lastDocId"), andPlan.take(1500))
-    // above the driver cap the pruner degrades to the distributed bucket
-    // semi-join (the cluster-scale posture for a hot "rarest" term) — same
-    // results either way
-    val base = s.search(Query.phrase("content", "we", "the", "people"), 10)
-      .collect().map(_.getLong(0)).toSeq
-    s.maxRareDriverBlocks = 0
-    val fbPlan = planOf(s.search(Query.phrase("content", "we", "the", "people"), 10))
-    assert(fbPlan.contains("LeftSemi"), fbPlan.take(1500))
-    assert(s.search(Query.phrase("content", "we", "the", "people"), 10)
-      .collect().map(_.getLong(0)).toSeq === base)
-    s.maxRareDriverBlocks = 4096
     // groupBy ranks groups without an unpartitioned window
     val gPlan = planOf(s.groupBy("lang", Term("content", "def"), groups = 2))
     assert(!gPlan.contains("Window [dense_rank"), gPlan.take(1500))
   }
 
-  test("fuzzy trigram prefilter: identical results, candidates ≪ dictionary, fallback for short queries") {
+  test("wide rarest term (>256 block ranges): bucket InSet pruner, no semi-join") {
+    import spark.implicits._
+    // one doc per salt bucket (docId = i << SaltShift, the gaps Index.append
+    // leaves): each term gets one block per doc and no two block ranges
+    // touch, so "rare" (300 docs) has 300 merged ranges, above the
+    // 256-range cap on the OR of range predicates
+    val src = (0 until 600).map { i =>
+      val text =
+        if (i % 6 == 0) (if (i % 4 == 0) "rare alpha" else "alpha rare")
+        else if (i % 4 == 0) "rare wide alpha"
+        else if (i % 2 == 0) "wide alpha rare"
+        else "wide alpha"
+      ("r", f"p$i%04d", "c", text)
+    }.toDF("repo", "path", "commit", "content")
+    val wideSchema = IndexSchema(Seq("repo", "path", "commit"),
+      Map("content" -> TextField("standard", positions = true)))
+    val docs = IndexBuilder.prepareDocs(src, wideSchema, 4)
+      .withColumn("docId", col("docId") * (1L << IndexBuilder.SaltShift)).cache()
+    val blocks = IndexBuilder.blocksOf(IndexBuilder.tokensOf(docs, wideSchema), wideSchema, 4).cache()
+    val idx = new Index(spark, wideSchema, docs, blocks, IndexBuilder.termDictOf(blocks),
+      IndexBuilder.fieldStatsOf(blocks))
+    assert(idx.termTable.get("content", "rare").get.ranges.length === 300)
+    // driver-side truth from the stored text
+    val texts = docs.select("docId", "content").as[(Long, String)].collect()
+    def truth(p: String => Boolean): Set[Long] = texts.collect { case (d, t) if p(t) => d }.toSet
+    val s = new Searcher(idx)
+    def hits(q: Query): (Set[Long], String) = {
+      val df = s.search(q, 1000)
+      val ids = df.collect().map(_.getLong(0))
+      assert(ids.distinct.length === ids.length, s"duplicate docIds for $q")
+      (ids.toSet, df.queryExecution.executedPlan.toString)
+    }
+    val (andIds, andPlan) = hits(Query.all(Term("content", "rare"), Term("content", "wide")))
+    assert(andIds === truth(t => t.contains("rare") && t.contains("wide")))
+    val (phraseIds, phrasePlan) = hits(Query.phrase("content", "rare", "wide"))
+    assert(phraseIds === truth(_.contains("rare wide")))
+    assert(andIds.size === 200 && phraseIds.size === 100)
+    // the salt-bucket literal set filter, not a semi-join
+    val bucketInSet = """shiftrightunsigned\(firstDocId#\d+L?, \d+\) (INSET|IN \()""".r
+    Seq(andPlan, phrasePlan).foreach { p =>
+      assert(bucketInSet.findFirstIn(p).isDefined, p.take(3000))
+      assert(!p.contains("LeftSemi"), p.take(1500))
+    }
+    blocks.unpersist()
+    docs.unpersist()
+  }
+
+  test("fuzzy terms equal a driver-side Damerau filter, before and after save/load") {
     val s = new Searcher(IndexBuilder.build(corpus, schema, numPartitions = 4))
-    // the cost gate bypasses the grams derivation for this tiny dictionary —
-    // assert the default plan is the plain length-window scan, then force the
-    // grams path for the pruning-evidence assertions below
-    val gated = s.terms("content", "mergebatch", distance = 1)
-    gated.collect()
-    assert(!gated.queryExecution.executedPlan.toString.contains("LeftSemi"))
-    s.fuzzyGramMinDictSize = 0L
     val dict = s.index.termDict
       .filter(col("field") === "content" && col("term") =!= "")
       .select("term").collect().map(_.getString(0))
     for (q <- Seq("scanhash", "mergebatch", "tokeniz"); k <- Seq(1, 2)) {
-      // gram-prefiltered expansion == the raw length-window scan's expansion
+      // dictionary-scan expansion == the raw Damerau filter's expansion
       val got = s.terms("content", q, distance = k).collect().map(_.getString(0)).toSeq
       val raw = dict.filter(t => graft.util.EditDistance.damerau(t, q) <= k).sorted.toSeq
       assert(got === raw, s"q=$q k=$k")
     }
-    // the filter provably engages and prunes: count candidates with an
-    // independent driver-side reimplementation of the q-gram bound
-    val qg = Searcher.padGrams("mergebatch").toSet
-    val threshold = qg.size - 4 // maxEdits 1, transposition spans 4 trigrams
-    val candidates = dict.count(t => Searcher.padGrams(t).count(qg.contains) >= threshold)
-    assert(candidates < dict.length / 5, s"$candidates of ${dict.length}")
-    // plan evidence: the gram semi-join is present for long queries...
-    val longQ = s.terms("content", "mergebatch", distance = 1)
-    longQ.collect()
-    assert(longQ.queryExecution.executedPlan.toString.contains("LeftSemi"))
-    // ...and absent (vacuous threshold → full scan) for short ones
-    val shortQ = s.terms("content", "ab", distance = 2)
-    shortQ.collect()
-    assert(!shortQ.queryExecution.executedPlan.toString.contains("LeftSemi"))
-    // save() materializes the gram table; a loaded index serves the filter
-    // from parquet with the gram lookups pushed down to the scan. The SIZE
-    // gate applies at every layout (the stored table removes derivation
-    // cost, not the per-query stages), so force it for the plan assertion.
-    val dir = Files.createTempDirectory("graft-grams").toString
+    // a saved-then-loaded index expands identically
+    val dir = Files.createTempDirectory("graft-fuzzy").toString
     s.index.save(dir)
     val loaded = new Searcher(IndexBuilder.load(spark, dir))
-    val storedGated = loaded.terms("content", "mergebatch", distance = 1)
-    storedGated.collect()
-    assert(!storedGated.queryExecution.executedPlan.toString.contains("termgrams"))
-    loaded.fuzzyGramMinDictSize = 0L
-    val stored = loaded.terms("content", "mergebatch", distance = 1)
-    val viaStored = stored.collect().map(_.getString(0)).toSeq
-    assert(viaStored === s.terms("content", "mergebatch", distance = 1)
-      .collect().map(_.getString(0)).toSeq)
-    val p2 = stored.queryExecution.executedPlan.toString
-    assert(p2.contains("termgrams") && p2.contains("PushedFilters"), p2.take(1200))
+    assert(loaded.terms("content", "mergebatch", distance = 1).collect().map(_.getString(0)).toSeq ===
+      s.terms("content", "mergebatch", distance = 1).collect().map(_.getString(0)).toSeq)
   }
 
   test("hot-term spanOr: streaming k-way merge ≡ union of per-term positions") {

@@ -304,12 +304,11 @@ class WandSpec extends SparkTestBase {
     else assert(r.total.value <= liveCount && r.total.value >= 10L)
   }
 
-  test("WAND beyond the broadcast cap: deletes co-shuffle with the blocks " +
-      "(per-bucket liveDocs, no driver collect) and stay exact") {
+  test("WAND over a multi-bucket delete set: per-bucket liveDocs stay exact") {
     import spark.implicits._
     // a multi-bucket view (>8192 docs => several salt buckets) with a heavy
-    // delete set spanning buckets, and the broadcast cap forced to 0 so
-    // EVERY tombstone overflows into the co-partitioned path
+    // delete set spanning buckets: the tombstones co-shuffle with the blocks
+    // and each partition filters against its own buckets' liveDocs
     val bigIdx = IndexBuilder.build(CodeCorpus.generate(spark, 20000, 8), schema,
       numPartitions = 8).cached()
     val sPlain = new Searcher(bigIdx)
@@ -318,7 +317,6 @@ class WandSpec extends SparkTestBase {
       (0L until 20000L by 7L) // bulk tombstones across every bucket
     val delView = bigIdx.withDeletes(deadIds.distinct.toDF("docId"))
     val sDel = new Searcher(delView)
-    sDel.wandMaxTombstones = 0 // before any search: forces the overflow path
     def exhaust(k: Int): Seq[(Long, Long)] = {
       sDel.wandEnabled = false
       try sDel.search(q, k).collect()
@@ -329,19 +327,16 @@ class WandSpec extends SparkTestBase {
       sDel.wandDecoded.reset()
       val got = sDel.search(q, k).collect()
         .map(r => (r.getLong(0), math.round(r.getDouble(1) * 1e9))).toSeq
-      assert(sDel.wandDecoded.value > 0, "WAND route not taken on the overflow path")
+      assert(sDel.wandDecoded.value > 0, "WAND route not taken over the deletes")
       assert(got === exhaust(k), s"k=$k")
       assert(got.map(_._1).toSet.intersect(deadIds.toSet).isEmpty,
         "a tombstoned doc surfaced in the top-k")
     }
-    // searchHits contract holds on the overflow path too
+    // searchHits contract holds over the deletes too
     val r = sDel.searchHits(q, 10)
     val liveCount = sDel.count(q)
     if (r.total.exact) assert(r.total.value === liveCount)
     else assert(r.total.value <= liveCount && r.total.value >= 10L)
-    // the cap LATCHES at first search: late assignment is an error, not a
-    // silent no-op (advisor r5)
-    assertThrows[IllegalArgumentException] { sDel.wandMaxTombstones = 4 << 20 }
     bigIdx.blocks.unpersist()
     bigIdx.docs.unpersist()
   }
