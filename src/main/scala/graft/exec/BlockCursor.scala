@@ -10,8 +10,8 @@ import graft.index.{Posting, PostingBlock, PostingCodec}
   * enum). Blocks sort by firstDocId and never overlap, so their
   * [firstDocId, lastDocId] skip pointers order them; one block is decoded
   * at a time, and only when a seek lands inside it. Nothing decodes at
-  * construction: call [[next]] or [[advanceTo]] to position the cursor.
-  * `curDoc == Long.MaxValue` ⇔ exhausted.
+  * construction: call [[next]], [[advanceTo]] or [[start]] to position the
+  * cursor. `curDoc == Long.MaxValue` ⇔ exhausted.
   */
 class BlockCursor(blocksIn: Array[PostingBlock], withPositions: Boolean) {
   val blocks: Array[PostingBlock] = blocksIn.sortBy(_.firstDocId)
@@ -20,22 +20,37 @@ class BlockCursor(blocksIn: Array[PostingBlock], withPositions: Boolean) {
   private var pi = 0
   var curDoc: Long = -1L
   var decodedBlocks: Long = 0L
+  // positioned by [[start]] on blocks(bi)'s first doc, block not decoded yet
+  private var atUndecodedHead = false
 
   /** Index of the block the cursor sits in (blocks.length once exhausted). */
   def blockIndex: Int = bi
 
   /** The posting at [[curDoc]]. */
-  def posting: Posting = decoded(pi)
+  def posting: Posting = {
+    if (atUndecodedHead) decode()
+    decoded(pi)
+  }
 
   private def decode(): Unit = {
     decoded = BlockCursor.decode(blocks(bi), withPositions)
     decodedBlocks += 1
     pi = 0
+    atUndecodedHead = false
   }
 
-  private def exhaust(): Unit = { curDoc = Long.MaxValue; decoded = null }
+  private def exhaust(): Unit = { curDoc = Long.MaxValue; decoded = null; atUndecodedHead = false }
+
+  /** Position on the first doc WITHOUT decoding: a block's firstDocId is
+    * its first posting's docId, so the first block decodes only when that
+    * doc is read ([[posting]]) or passed.
+    */
+  def start(): Unit =
+    if (blocks.isEmpty) exhaust()
+    else { bi = 0; decoded = null; curDoc = blocks(0).firstDocId; atUndecodedHead = true }
 
   def next(): Unit = {
+    if (atUndecodedHead) decode() // decoded(0) is curDoc; step past it below
     if (decoded == null) {
       if (bi >= blocks.length) { exhaust(); return }
       decode()
@@ -52,7 +67,9 @@ class BlockCursor(blocksIn: Array[PostingBlock], withPositions: Boolean) {
     * `target` WITHOUT decoding it; false once no block can hold `target`.
     */
   def skipTo(target: Long): Boolean = {
-    while (bi < blocks.length && blocks(bi).lastDocId < target) { bi += 1; decoded = null }
+    while (bi < blocks.length && blocks(bi).lastDocId < target) {
+      bi += 1; decoded = null; atUndecodedHead = false
+    }
     bi < blocks.length
   }
 

@@ -3,7 +3,7 @@ package graft.exec
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 
-import graft.index.{Index, Posting, PostingBlock, PostingCodec}
+import graft.index.{Index, IndexBuilder, Posting, PostingBlock, PostingCodec}
 import graft.query._
 
 /** Lucene BM25Similarity parity (SURVEY.md §4.3):
@@ -58,6 +58,26 @@ object Searcher {
     */
   private[exec] def saltBucket: Column =
     shiftrightunsigned(col("firstDocId"), graft.index.IndexBuilder.SaltShift)
+
+  /** The running top-k of one task's WAND buckets. Each task deserializes
+    * its own copy of the kernel closure that holds it, so it is never
+    * shared between tasks.
+    */
+  private[exec] final class TaskTopK extends Serializable {
+    var top: Array[(Long, Double)] = Array.empty
+  }
+
+  /** A posting block's score-only columns (no field, positions, payloads or
+    * offsets): what score-only routes read and group, rebuilt into a
+    * [[PostingBlock]] inside the kernel. Read by name, so the salt column
+    * beside them is ignored.
+    */
+  private[exec] final case class ScoreBlock(term: String, firstDocId: Long, lastDocId: Long,
+      numDocs: Int, maxTf: Int, sumTf: Long, minDlq: Int, docsBlob: Array[Byte],
+      freqsBlob: Array[Byte], normsBlob: Array[Byte]) {
+    def toBlock(field: String): PostingBlock = PostingBlock(field, term, firstDocId, lastDocId,
+      numDocs, maxTf, sumTf, minDlq, docsBlob, freqsBlob, normsBlob, Array.empty[Byte])
+  }
 
   /** Fuzzy-expansion predicate over the term dictionary. Cheap filters run
     * first (Catalyst And short-circuits left-to-right): a length window —
@@ -266,9 +286,12 @@ class Searcher(val index: Index) extends Serializable {
     * the FULL postings of every clause into the aggregate — for
     * `rare AND the`, the hot term's postings shuffle in their entirety even
     * though only docs containing `rare` can match. Here the compressed
-    * blocks are pruned to the rarest term's salt buckets, co-partitioned by
+    * blocks are pruned to the rarest term's coverage, grouped by salt
     * bucket, and merge-intersected rarest-first with score-only decode —
-    * the conjunctive twin of the phrase path.
+    * the conjunctive twin of the phrase path. MUST_NOT terms of the same
+    * field ride the same pruned blocks into the kernel, which drops every
+    * candidate they contain (Lucene's ReqExclScorer); any other MUST_NOT
+    * clause is a `left_anti` join after it.
     */
   private def evalTermConjunction(field: String, mustTerms: Seq[String],
       filterTerms: Seq[String], notQueries: Seq[Query] = Nil): DataFrame = {
@@ -285,28 +308,28 @@ class Searcher(val index: Index) extends Serializable {
     val prune = rareCoveragePruner(field, order.head)
     val ord = order.toArray
     val avgdl = st.avgdl
-    val base = bucketBlocks(order.map((field, _)), prune, withPositions = false)
-      .mapPartitions(it => Conjunction.scorePartition(ord, weights, avgdl, it))
-      .toDF("docId", "score")
-    // MUST_NOT anti-joins run docIds-only (no freq/norm decode) and — for
-    // same-field terms — against blocks pruned to the rare coverage: docs
-    // outside it cannot appear in `base`, so `rare AND NOT the` never decodes
-    // the bulk of `the`'s postings.
-    notQueries.foldLeft(base) { (d, nq) =>
+    // same-field NOT terms absent from the index exclude nothing
+    val (sameField, otherNots) = notQueries.partition {
+      case Term(f, _) => f == field
+      case _          => false
+    }
+    val notTerms = sameField.collect { case Term(_, t) => t }.distinct
+    val excl = termStats(field, notTerms).keys.toArray.sorted
+    val base = bucketBlocks((order ++ excl).map((field, _)), prune, withPositions = false) { it =>
+      Conjunction.scorePartition(ord, weights, avgdl, it, excl)
+    }.toDF("docId", "score")
+    otherNots.foldLeft(base) { (d, nq) =>
       val notIds = nq match {
-        case Term(f, t) if f == field => docIdsOf(f, t, prune)
-        case Term(f, t)               => docIdsOf(f, t, identity)
-        case other                    => evalInner(other).select("docId")
+        case Term(f, t) => docIdsOf(f, t)
+        case other      => evalInner(other).select("docId")
       }
       d.join(notIds, Seq("docId"), "left_anti")
     }
   }
 
   /** docId-only postings decode (docsBlob alone — no freqs/norms read). */
-  private def docIdsOf(field: String, term: String,
-      prune: DataFrame => DataFrame): DataFrame =
-    prune(index.blocks.filter(col("field") === field && col("term") === term)
-        .select(col("firstDocId"), col("lastDocId"), col("numDocs"), col("docsBlob")))
+  private def docIdsOf(field: String, term: String): DataFrame =
+    index.blocks.filter(col("field") === field && col("term") === term)
       .select(col("firstDocId"), col("numDocs"), col("docsBlob"))
       .as[(Long, Int, Array[Byte])]
       .flatMap { case (f, n, d) => PostingCodec.decodeDocIds(f, n, d) }
@@ -349,7 +372,7 @@ class Searcher(val index: Index) extends Serializable {
   private def evalBool(clauses: Seq[(Occur.Value, Query)]): DataFrame = {
     if (clauses.isEmpty) return emptyMatches
     // Route ALL-positive-term-conjunctions (≥2 clauses, one field, no SHOULD)
-    // through the merge-intersect fast path; MUST_NOT clauses anti-join after.
+    // through the merge-intersect fast path, MUST_NOT clauses included.
     val positives = clauses.filter(c => c._1 == Occur.Must || c._1 == Occur.Filter)
     val posTerms = positives.collect { case (o, Term(f, t)) => (o, f, t) }
     if (!clauses.exists(_._1 == Occur.Should) && positives.length >= 2 &&
@@ -404,15 +427,15 @@ class Searcher(val index: Index) extends Serializable {
     * Per-doc per-key position lists for docs containing ALL `required` keys
     * (rarest-first), as (docId, dlq, lists) with lists in
     * `required ++ optional` order; `optional` keys (span-Or branches,
-    * Not-excludes) attach to surviving docs. Only COMPRESSED blocks shuffle,
-    * never decoded postings of `the`-class hot terms:
+    * Not-excludes) attach to surviving docs. Only COMPRESSED blocks are
+    * read and grouped, never decoded postings of `the`-class hot terms:
     *  1. rare-coverage pruning drops whole blocks of the wider keys before
-    *     anything shuffles or decodes (see [[rareCoveragePruner]]);
-    *  2. one narrow shuffle of the surviving COMPRESSED blocks
-    *     ([[bucketBlocks]]);
-    *  3. per partition, [[PhraseMatcher.intersectKeyed]]: a wider key's block
+    *     anything is grouped or decoded (see [[rareCoveragePruner]]);
+    *  2. the surviving COMPRESSED blocks group by salt bucket
+    *     ([[bucketBlocks]]: no exchange over a saved index);
+    *  3. per bucket, [[PhraseMatcher.intersectKeyed]]: a wider key's block
     *     is never decoded unless its docId range still holds a candidate.
-    * With no required keys (pure disjunction) every key's blocks shuffle —
+    * With no required keys (pure disjunction) every key's blocks are read —
     * no pruning is sound.
     */
   private def positionalMatchesKeys(required: Seq[(String, String)], optional: Seq[(String, String)],
@@ -422,39 +445,50 @@ class Searcher(val index: Index) extends Serializable {
     }
     val req = required.toArray
     val opt = optional.toArray
-    bucketBlocks(required ++ optional, prune, withPositions = true)
-      .mapPartitions(it => PhraseMatcher.intersectKeyed(req, opt, dlqField, it))
+    bucketBlocks(required ++ optional, prune, withPositions = true)(it =>
+      PhraseMatcher.intersectKeyed(req, opt, dlqField, it))
   }
 
-  /** The one salt-bucket exchange behind WAND, term conjunction and
-    * positional matching: the blocks of `keys`, pruned, then ONE hash
-    * exchange on `firstDocId >>> SaltShift`, so each partition holds whole
-    * buckets of every key (blocks never span one) and the kernels run with
-    * no further shuffle. Score-only routes (single field) project away the
-    * position/payload/offset blobs — often the widest columns — before the
-    * exchange, so parquet never reads them, and rebuild the blocks after it;
-    * `coShuffled` rows in that 10-column layout (WAND's tombstones) ride the
-    * same exchange.
+  /** The one salt-bucket runtime behind WAND, term conjunction and
+    * positional matching: the blocks of `keys`, pruned, grouped by their
+    * salt bucket (`firstDocId >>> SaltShift`; blocks never span one), and
+    * `kernel` run once per bucket over every key's blocks of it.
+    *
+    * The grouping requires the input clustered by the salt column. A saved
+    * index loads bucketed on its stored salt column, so the scan already is
+    * and no exchange runs; a built, appended or pre-bucketing index (or a
+    * `withDeletes` view's tombstones) gets ONE hash exchange on salt from
+    * Spark's EnsureRequirements. The same code serves both. (A
+    * `repartition(n, salt)` here would be removed as redundant over the
+    * bucketed scan, after which DisableUnnecessaryBucketedScan turns the
+    * bucketing off and a partition no longer holds whole buckets.)
+    *
+    * Score-only routes (single field) project away the position/payload/
+    * offset blobs — often the widest columns — so parquet never reads them,
+    * and rebuild the blocks inside the kernel; `coShuffled` rows in that
+    * layout, led by their salt column (WAND's tombstones), join the same
+    * groups.
     */
-  private def bucketBlocks(keys: Seq[(String, String)], prune: DataFrame => DataFrame,
-      withPositions: Boolean, coShuffled: Option[DataFrame] = None): Dataset[PostingBlock] = {
+  private def bucketBlocks[U: org.apache.spark.sql.Encoder](keys: Seq[(String, String)],
+      prune: DataFrame => DataFrame, withPositions: Boolean,
+      coShuffled: Option[DataFrame] = None)(
+      kernel: Iterator[PostingBlock] => Iterator[U]): Dataset[U] = {
     val fields = keys.map(_._1).distinct
     val cond = fields.map { f =>
       col("field") === f && col("term").isin(keys.filter(_._1 == f).map(_._2).distinct: _*)
     }.reduce(_ || _)
-    val blocks = prune(index.blocks.filter(cond).toDF())
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    if (withPositions) return blocks.repartition(parts, Searcher.saltBucket).as[PostingBlock]
+    val blocks = IndexBuilder.salted(prune(index.blocks.filter(cond).toDF()), "firstDocId")
+    val salt = col(IndexBuilder.SaltColumn)
+    if (withPositions)
+      return blocks.groupBy(salt).as[Long, PostingBlock].flatMapGroups((_, it) => kernel(it))
     require(fields.length == 1, s"score-only blocks carry no field column: $fields")
     val field = fields.head
-    val scoreCols = blocks.select(col("term"), col("firstDocId"), col("lastDocId"),
+    val scoreCols = blocks.select(salt, col("term"), col("firstDocId"), col("lastDocId"),
       col("numDocs"), col("maxTf"), col("sumTf"), col("minDlq"),
       col("docsBlob"), col("freqsBlob"), col("normsBlob"))
     coShuffled.fold(scoreCols)(scoreCols.unionAll)
-      .repartition(parts, Searcher.saltBucket)
-      .as[(String, Long, Long, Int, Int, Long, Int, Array[Byte], Array[Byte], Array[Byte])]
-      .map(t => PostingBlock(field, t._1, t._2, t._3, t._4, t._5, t._6, t._7,
-        t._8, t._9, t._10, Array.empty[Byte]))
+      .groupBy(salt).as[Long, Searcher.ScoreBlock]
+      .flatMapGroups((_, it) => kernel(it.map(_.toBlock(field))))
   }
 
   /** (distinct terms rarest-first, their stats) or None when any term is
@@ -624,10 +658,10 @@ class Searcher(val index: Index) extends Serializable {
   }
 
   /** Block-max WAND top-k over a weighted term disjunction: blocks of the
-    * query terms are co-partitioned by docId salt bucket (blocks never span
-    * one), each partition runs document-at-a-time BMW keeping k candidates,
-    * and a global TakeOrdered merges — one narrow shuffle of blocks, no
-    * groupBy, non-competitive blocks never decoded.
+    * query terms are grouped by docId salt bucket (blocks never span one;
+    * [[bucketBlocks]]), each bucket runs document-at-a-time BMW keeping k
+    * candidates, and a global TakeOrdered merges — no decoded-postings
+    * shuffle, non-competitive blocks never decoded.
     */
   def searchWand(field: String, weightedTerms: Seq[(String, Double)], k: Int,
       tie: Double = 1.0): DataFrame = {
@@ -655,45 +689,53 @@ class Searcher(val index: Index) extends Serializable {
     if (weights.isEmpty) None else Some((weights, st.avgdl))
   }
 
-  /** Per-partition WAND results: (top-k docIds, their scores, docs scored,
-    * pruned?) — one row per salt-bucket partition. [[searchWand]] flattens
-    * the tops; [[searchHits]] also folds the count accounting. A view with
-    * deletes ships its tombstones through the same salt-bucket exchange as
-    * the blocks, so each partition filters against its own buckets'
-    * liveDocs (the analogue of Lucene's per-segment liveDocs bits).
+  /** Per-bucket WAND results: (top-k docIds, their scores, docs scored,
+    * pruned?) — one row per salt bucket. [[searchWand]] flattens the tops;
+    * [[searchHits]] also folds the count accounting. A view with deletes
+    * groups its tombstones with the blocks by salt bucket, so each bucket
+    * filters against its own liveDocs (the analogue of Lucene's
+    * per-segment liveDocs bits).
     */
   private def wandPartitions(field: String, weights: Seq[(String, Double)], avgdl: Double,
       k: Int, tie: Double = 1.0):
       org.apache.spark.sql.Dataset[(Array[Long], Array[Double], Long, Boolean)] = {
     val acc = wandDecoded // local val: the closure must not capture `this`
-    // tombstones ride the block exchange as numDocs = -1 rows (a real block
+    // a task's buckets arrive in ascending salt order (the grouping sorts by
+    // it); each bucket's heap starts from the top-k of the task's earlier
+    // buckets, so WAND prunes as one doc-ordered pass over the task would,
+    // and each bucket emits only its own docs of that heap
+    val taskTop = new Searcher.TaskTopK
+    // tombstones join the block groups as numDocs = -1 rows (a real block
     // always has numDocs >= 1); blocks never span a salt bucket, so each
-    // partition sees exactly the tombstones its docId range can contain,
+    // bucket sees exactly the tombstones its docId range can contain,
     // with no driver collect and no size ceiling
-    val coShuffledTombs = index.deletes.map(_.select(
-      lit("").as("term"), col("docId").cast("long").as("firstDocId"),
+    val coShuffledTombs = index.deletes.map(d => IndexBuilder.salted(d, "docId").select(
+      col(IndexBuilder.SaltColumn), lit("").as("term"), col("docId").cast("long").as("firstDocId"),
       col("docId").cast("long").as("lastDocId"), lit(-1).as("numDocs"),
       lit(0).as("maxTf"), lit(0L).as("sumTf"), lit(0).as("minDlq"),
       lit(null).cast("binary").as("docsBlob"), lit(null).cast("binary").as("freqsBlob"),
       lit(null).cast("binary").as("normsBlob")))
-    bucketBlocks(weights.map(w => (field, w._1)), identity, withPositions = false, coShuffledTombs)
-      .mapPartitions { it =>
-        val all = it.toArray
-        val (tombRows, blocks) = all.partition(_.numDocs < 0)
-        // per-bucket liveDocs from co-shuffled rows: sorted with possible
-        // duplicates (the delete table is append-only) — binarySearch still
-        // decides
-        val sorted = tombRows.map(_.firstDocId)
-        java.util.Arrays.sort(sorted)
-        val deleted: Long => Boolean =
-          if (sorted.isEmpty) _ => false
-          else d => java.util.Arrays.binarySearch(sorted, d) >= 0
-        val byTerm = blocks.groupBy(_.term)
-        val termBlocks = weights.map { case (t, w) => (w, byTerm.getOrElse(t, Array.empty)) }
-        val r = Wand.topkPartitionFull(termBlocks, avgdl, k, deleted, tie)
-        acc.add(r.decodedBlocks)
-        Iterator.single((r.top.map(_._1), r.top.map(_._2), r.scoredDocs, r.pruned))
-      }
+    bucketBlocks(weights.map(w => (field, w._1)), identity, withPositions = false,
+        coShuffledTombs) { it =>
+      val all = it.toArray
+      val (tombRows, blocks) = all.partition(_.numDocs < 0)
+      // per-bucket liveDocs from co-shuffled rows: sorted with possible
+      // duplicates (the delete table is append-only) — binarySearch still
+      // decides
+      val sorted = tombRows.map(_.firstDocId)
+      java.util.Arrays.sort(sorted)
+      val deleted: Long => Boolean =
+        if (sorted.isEmpty) _ => false
+        else d => java.util.Arrays.binarySearch(sorted, d) >= 0
+      val byTerm = blocks.groupBy(_.term)
+      val termBlocks = weights.map { case (t, w) => (w, byTerm.getOrElse(t, Array.empty)) }
+      val r = Wand.topkPartitionFull(termBlocks, avgdl, k, deleted, tie, taskTop.top)
+      val earlier = taskTop.top.iterator.map(_._1).toSet
+      taskTop.top = r.top
+      val own = r.top.filterNot(d => earlier(d._1))
+      acc.add(r.decodedBlocks)
+      Iterator.single((own.map(_._1), own.map(_._2), r.scoredDocs, r.pruned))
+    }
   }
 
   /** Top-k with Lucene's `TotalHits` surfaced from the ACTUAL top-k path
@@ -1305,12 +1347,29 @@ final case class SearchHits(hits: org.apache.spark.sql.DataFrame, total: TotalHi
   */
 object Conjunction {
 
+  /** BM25 scores of the docs holding every `order` term (rarest first) and
+    * none of the `excluded` terms, over one salt bucket's blocks. The
+    * required terms intersect via [[BlockCursor.intersect]]; each excluded
+    * term then drops the candidates it contains through
+    * [[BlockCursor.skipIntersect]], so an excluded block is decoded only
+    * when its docId range holds a live candidate (Lucene's ReqExclScorer).
+    */
   def scorePartition(order: Array[String], weights: Map[String, Double], avgdl: Double,
-      blocks: Iterator[PostingBlock]): Iterator[(Long, Double)] = {
+      blocks: Iterator[PostingBlock], excluded: Array[String] = Array.empty): Iterator[(Long, Double)] = {
     val byTerm = blocks.toArray.groupBy(_.term)
     if (order.exists(!byTerm.contains(_))) return Iterator.empty
     val ws = order.map(weights)
-    BlockCursor.intersect(order.map(byTerm), order.length, withPositions = false).iterator.map { row =>
+    val matched = BlockCursor.intersect(order.map(byTerm), order.length, withPositions = false)
+    val live = excluded.flatMap(byTerm.get).foldLeft(matched) { (rows, notBlocks) =>
+      if (rows.isEmpty) rows
+      else {
+        val dead = new java.util.BitSet(rows.length)
+        BlockCursor.skipIntersect(rows.map(_(0).docId), notBlocks, withPositions = false)(
+          (j, _) => dead.set(j))
+        rows.indices.filterNot(dead.get).map(rows).toArray
+      }
+    }
+    live.iterator.map { row =>
       var score = Bm25.score(row(0).tf.toDouble, row(0).dlq, ws(0), avgdl)
       var k = 1
       while (k < row.length) { score += Bm25.score(row(k).tf.toDouble, row(k).dlq, ws(k), avgdl); k += 1 }
@@ -1328,7 +1387,7 @@ object Conjunction {
 object PhraseMatcher {
 
   /** Per-doc positions of `required ++ optional` keys over one
-    * co-partitioned slice of posting blocks (the executor side of
+    * salt bucket's posting blocks (the executor side of
     * Searcher.positionalMatchesKeys), as (docId, dlq, lists) with lists in
     * key order (absent optional key → empty list).
     *

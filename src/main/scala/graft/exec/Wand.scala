@@ -4,7 +4,7 @@ import scala.collection.mutable
 
 import graft.index.PostingBlock
 
-/** Block-max WAND (BMW) top-k evaluation over one partition's posting blocks
+/** Block-max WAND (BMW) top-k evaluation over one salt bucket's posting blocks
   * (north_rule perf layer; SURVEY.md §4.4).
   *
   * Exact: pivoting uses per-term GLOBAL upper bounds (max block bound), so a
@@ -26,7 +26,7 @@ object Wand {
       extends BlockCursor(bs, withPositions = false) {
     val termUb: Double = blocks.map(blockUpperBound(_, weight, avgdl)).max
 
-    next()
+    start()
 
     /** Upper bound of the block that would contain `target` (no decode);
       * also returns that block's lastDocId as the skip boundary.
@@ -65,9 +65,15 @@ object Wand {
     *        identical to exhaustive scoring over the live view. Block
     *        upper bounds stay valid (they bound live docs' scores too), so
     *        pruning remains exact.
+    * @param carried (docId, score) top-k of lower-docId blocks already
+    *        evaluated (earlier salt buckets of the same task): the heap
+    *        starts from them, so this call prunes exactly as one pass over
+    *        both would from this point on, and its `top` may keep some of
+    *        them.
     */
   def topkPartitionFull(termBlocks: Seq[(Double, Array[PostingBlock])], avgdl: Double,
-      k: Int, deleted: Long => Boolean = _ => false, tie: Double = 1.0): PartitionResult = {
+      k: Int, deleted: Long => Boolean = _ => false, tie: Double = 1.0,
+      carried: Array[(Long, Double)] = Array.empty): PartitionResult = {
     // k == 0 would make the heap "full" while empty and theta undefined;
     // all-hits queries take the exhaustive path (Searcher.search k <= 0)
     require(k > 0, s"WAND needs k > 0 (got $k) — use exhaustive scoring for all-hits")
@@ -81,12 +87,13 @@ object Wand {
       if (tie == 1.0) sm else mx + tie * (sm - mx)
     val cursors = termBlocks.filter(_._2.nonEmpty)
       .map { case (w, bs) => new Cursor(w, avgdl, bs) }.toArray
-    if (cursors.isEmpty) return PartitionResult(Array.empty, 0L, 0L, pruned = false)
+    if (cursors.isEmpty) return PartitionResult(carried, 0L, 0L, pruned = false)
     var scoredDocs = 0L
     var pruned = false
     // head = worst kept entry: smallest score, then largest docId
     val heap = mutable.PriorityQueue.empty[(Double, Long)](
       Ordering.by((sd: (Double, Long)) => (-sd._1, sd._2)))
+    carried.foreach { case (d, sc) => heap.enqueue((sc, d)) }
     def full: Boolean = heap.size >= k
     def theta: Double = if (full) heap.head._1 else -1.0
 

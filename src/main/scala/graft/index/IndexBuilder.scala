@@ -3,7 +3,7 @@ package graft.index
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.{ArrayType, StringType}
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructType}
 
 import graft.analysis.{Analyzer, Analyzers}
 import graft.util.SmallFloat
@@ -223,7 +223,9 @@ final class Index private[index] (
     * the view shares this index's term table.
     */
   def withDeletes(ids: DataFrame): Index = {
-    val all = deletes.map(_.unionByName(ids).distinct()).getOrElse(ids.distinct())
+    // a loaded delete table also carries its stored salt column
+    val all = deletes.map(_.select(col("docId")).unionByName(ids).distinct())
+      .getOrElse(ids.distinct())
     new Index(spark, schema, docs, blocks, termDict, fieldStats, Some(all), terms)
   }
 
@@ -242,7 +244,7 @@ final class Index private[index] (
     import spark.implicits._
     val segBlocks = seg.blocks.map(b =>
       b.copy(firstDocId = b.firstDocId + offset, lastDocId = b.lastDocId + offset))
-    val newBlocks = blocks.unionAll(segBlocks)
+    val newBlocks = IndexBuilder.unsalted(blocks).unionAll(segBlocks)
     val stats = (fieldStats.keySet ++ seg.fieldStats.keySet).map { k =>
       val a = fieldStats.getOrElse(k, FieldStats(0, 0))
       val b = seg.fieldStats.getOrElse(k, FieldStats(0, 0))
@@ -290,31 +292,59 @@ final class Index private[index] (
     this
   }
 
+  /** The salt buckets the field statistics account for, with no Spark job:
+    * a built index numbers its docs densely from 0, so the largest field
+    * docCount spans `ceil(docCount / 2^SaltShift)` buckets. Alignment gaps
+    * of appended segments (and docs with no indexed field) can only make
+    * this smaller than the buckets the docIds span, which puts more salts
+    * in one bucket file.
+    */
+  private def saltBucketsCounted: Long = {
+    val docs = fieldStats.values.map(_.docCount).foldLeft(0L)(math.max)
+    (docs + (1L << IndexBuilder.SaltShift) - 1) >>> IndexBuilder.SaltShift
+  }
+
+  /** Write the index to `dir`: `postings/`, `docs/`, `termdict/`, `deletes/`
+    * (when present) and, last, `manifest`.
+    *
+    * Postings and tombstones are written salt-bucketed: a stored
+    * `salt = firstDocId >>> SaltShift` (`docId >>> SaltShift` for deletes)
+    * column, hashed into `buckets = min(spark.sql.shuffle.partitions, salt
+    * buckets counted)` bucket files (see [[saltBucketsCounted]]), with the
+    * count recorded in the manifest. [[IndexBuilder.load]] reads both back as bucketed relations,
+    * so the searcher's salt-bucket kernels run over the scan with no
+    * exchange (the layout of Cabin's binned scan index: data stored in the
+    * bins queries group by). The write is range-partitioned on (salt, field,
+    * term, firstDocId) and each bucket file sorted by (field, term,
+    * firstDocId), so per-term filters still prune files and row groups by
+    * min/max stats, and the file count stays near write tasks + buckets.
+    * Docs are range-laid-out by docId for id lookups.
+    *
+    * The three table writes are INDEPENDENT (each reads only the build's
+    * cached output), so they run CONCURRENTLY from a small driver pool
+    * (guide §2.6): Spark schedules jobs FIFO, and each write's straggler
+    * tail is back-filled by the next write's tasks instead of idling the
+    * executors — measured 2.1 s → ~1.2 s for the sf0.1 save. Failures
+    * propagate: save() waits for EVERY write to finish, then rethrows the
+    * first failure, so no write job outlives a failed save() and no
+    * manifest is written.
+    */
   def save(dir: String): Unit = {
-    // Range-layout postings by (field, term) so per-term query filters prune
-    // whole files via parquet min/max stats; docs by docId for id lookups.
-    //
-    // The three table writes are INDEPENDENT (each reads only the build's
-    // cached output), so they run CONCURRENTLY from a small driver pool
-    // (guide §2.6): Spark schedules jobs FIFO, and each write's straggler
-    // tail is back-filled by the next write's tasks instead of idling the
-    // executors — measured 2.1 s → ~1.2 s for the sf0.1 save. Failures
-    // propagate: save() waits for EVERY write to finish, then rethrows the
-    // first failure, so no write job outlives a failed save() and no
-    // manifest is written.
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
+    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val postings = IndexBuilder.salted(IndexBuilder.unsalted(blocks).toDF(), "firstDocId")
+    val buckets = math.max(1, math.min(parts.toLong, saltBucketsCounted).toInt)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutorService(pool)
     try {
       val writes = Seq(
         Future {
-          blocks.repartitionByRange(
-              blocks.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
-              col("field"), col("term"), col("firstDocId"))
-            .sortWithinPartitions("field", "term", "firstDocId")
-            .write.mode("overwrite").parquet(s"$dir/postings")
+          org.apache.spark.sql.graft.BucketedParquet.write(
+            postings.repartitionByRange(parts, col(IndexBuilder.SaltColumn), col("field"),
+              col("term"), col("firstDocId")),
+            s"$dir/postings", buckets, IndexBuilder.SaltColumn, Seq("field", "term", "firstDocId"))
         },
         Future {
           docs.repartitionByRange(col("docId")).sortWithinPartitions("docId")
@@ -329,17 +359,24 @@ final class Index private[index] (
       writes.foreach(_.value.get.get)
     } finally pool.shutdown()
     deletes match {
-      case Some(d) => d.write.mode("overwrite").parquet(s"$dir/deletes")
+      case Some(d) =>
+        org.apache.spark.sql.graft.BucketedParquet.write(
+          IndexBuilder.salted(d.select(col("docId")), "docId"),
+          s"$dir/deletes", buckets, IndexBuilder.SaltColumn, Seq("docId"))
       case None => // a stale deletes/ from an earlier save would revive on load
         val path = new org.apache.hadoop.fs.Path(s"$dir/deletes")
         path.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(path, true)
     }
-    IndexManifest.write(spark, s"$dir/manifest", IndexManifest(schema, fieldStats))
+    IndexManifest.write(spark, s"$dir/manifest", IndexManifest(schema, fieldStats, Some(buckets)))
   }
 }
 
-/** Tiny line-oriented manifest (no JSON dependency): schema + field stats. */
-final case class IndexManifest(schema: IndexSchema, fieldStats: Map[String, FieldStats]) {
+/** Tiny line-oriented manifest (no JSON dependency): schema + field stats,
+  * and the salt-bucket count of `postings/` and `deletes/` (None for a
+  * directory saved before they were written bucketed: plain parquet).
+  */
+final case class IndexManifest(schema: IndexSchema, fieldStats: Map[String, FieldStats],
+    buckets: Option[Int] = None) {
   def serialize: String = {
     val sb = new StringBuilder
     sb.append("keys\t").append(schema.keyColumns.mkString(",")).append('\n')
@@ -351,6 +388,7 @@ final case class IndexManifest(schema: IndexSchema, fieldStats: Map[String, Fiel
     fieldStats.toSeq.sortBy(_._1).foreach { case (n, s) =>
       sb.append(s"stats\t$n\t${s.docCount}\t${s.sumTotalTermFreq}\n")
     }
+    buckets.foreach(n => sb.append(s"buckets\t$n\n"))
     sb.toString
   }
 }
@@ -376,6 +414,7 @@ object IndexManifest {
     var keys = Seq.empty[String]
     val fields = Map.newBuilder[String, FieldKind]
     val stats = Map.newBuilder[String, FieldStats]
+    var buckets = Option.empty[Int]
     text.linesIterator.filter(_.nonEmpty).foreach { line =>
       line.split('\t') match {
         case Array("keys", ks)                  => keys = ks.split(',').toSeq
@@ -384,10 +423,11 @@ object IndexManifest {
         case Array("field", n, "keyword", _, _) => fields += n -> KeywordField
         case Array("field", n, "nested", s, _)  => fields += n -> NestedField(s)
         case Array("stats", n, dc, sttf)        => stats += n -> FieldStats(dc.toLong, sttf.toLong)
+        case Array("buckets", n)                => buckets = Some(n.toInt)
         case other => throw new IllegalArgumentException(s"bad manifest line: $line")
       }
     }
-    IndexManifest(IndexSchema(keys, fields.result()), stats.result())
+    IndexManifest(IndexSchema(keys, fields.result()), stats.result(), buckets)
   }
 }
 
@@ -421,6 +461,25 @@ object IndexBuilder {
     * requires for terms like `the`/`import`/`return`.
     */
   val SaltShift = 13
+
+  /** The stored salt-bucket column of bucketed `postings/` and `deletes/`. */
+  val SaltColumn = "salt"
+
+  /** `df` with its [[SaltColumn]] (`idColumn >>> SaltShift`): a bucketed
+    * table's stored column when present, else computed. Grouping on it then
+    * needs an exchange only when the input is not already bucketed.
+    */
+  def salted(df: DataFrame, idColumn: String): DataFrame =
+    if (df.columns.contains(SaltColumn)) df
+    else df.withColumn(SaltColumn, shiftrightunsigned(col(idColumn), SaltShift))
+
+  private val postingEncoder = org.apache.spark.sql.Encoders.product[PostingBlock]
+
+  /** The [[PostingBlock]] columns alone (a loaded index's blocks also carry
+    * the stored salt column).
+    */
+  def unsalted(blocks: Dataset[PostingBlock]): Dataset[PostingBlock] =
+    blocks.select(postingEncoder.schema.fieldNames.toSeq.map(col): _*).as(postingEncoder)
 
   /** First docId of the next salt bucket at or after `id` — segment offsets
     * must be bucket multiples so rebased blocks stay bucket-aligned (docIds
@@ -631,20 +690,33 @@ object IndexBuilder {
   def readPostings(spark: SparkSession, path: String): DataFrame =
     withBlobDefaults(spark.read.option("mergeSchema", "true").parquet(path))
 
+  /** Open an index written by [[Index.save]]. When the manifest records a
+    * bucket count, `postings/` and `deletes/` load as bucketed relations
+    * (no catalog table) whose scans are already clustered by salt bucket;
+    * a directory saved before that layout loads as plain parquet, and the
+    * searcher's salt-bucket grouping then adds the exchange itself.
+    */
   def load(spark: SparkSession, dir: String): Index = {
     import spark.implicits._
     val manifest = IndexManifest.read(spark, s"$dir/manifest")
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def table(name: String, options: Map[String, String], written: StructType): DataFrame =
+      manifest.buckets match {
+        case Some(n) => org.apache.spark.sql.graft.BucketedParquet.read(spark, s"$dir/$name", n,
+          SaltColumn, options, written.add(SaltColumn, LongType))
+        case None => spark.read.options(options).parquet(s"$dir/$name")
+      }
     val deletes =
       if (fs.exists(new org.apache.hadoop.fs.Path(s"$dir/deletes")))
-        Some(spark.read.parquet(s"$dir/deletes"))
+        Some(table("deletes", Map.empty, new StructType().add("docId", LongType)))
       else None
     new Index(
       spark,
       manifest.schema,
       spark.read.parquet(s"$dir/docs"),
-      readPostings(spark, s"$dir/postings").as[PostingBlock],
+      withBlobDefaults(table("postings", Map("mergeSchema" -> "true"), postingEncoder.schema))
+        .as[PostingBlock],
       spark.read.parquet(s"$dir/termdict"),
       manifest.fieldStats,
       deletes)

@@ -33,11 +33,6 @@ object TextOps {
     "fr" -> Seq("le", "la", "les", "et", "un", "une", "est", "pour", "dans", "que"),
     "es" -> Seq("el", "la", "los", "y", "un", "una", "es", "para", "en", "que"))
 
-  /** Count of tokens present in `words` (order-stable fold). */
-  def stopwordHits(toks: Column, words: Seq[String]): Column =
-    aggregate(toks, lit(0),
-      (acc, t) => acc + when(t.isin(words: _*), 1).otherwise(0))
-
   /** Predicted language code by max stopword-hit count; ties break by
     * language-code order (en < de... explicit priority = list order).
     *

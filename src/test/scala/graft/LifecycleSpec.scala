@@ -1,14 +1,17 @@
 package graft
 
 import graft.exec.Searcher
+import graft.fixtures.CodeCorpus
 import graft.index._
 import graft.query.{Query => Q, _}
 
 /** Index lifecycle: tombstone deletes, segment append (add/update),
   * multi-index union with docId rebasing, integrity check.
   */
-class LifecycleSpec extends SparkTestBase {
+class LifecycleSpec extends SparkTestBase
+    with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
   import org.apache.spark.sql.functions._
+  import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
 
   def corpus(rows: (String, String, String, String, String)*) = {
     val s = spark
@@ -101,6 +104,11 @@ class LifecycleSpec extends SparkTestBase {
     val reloaded = new Searcher(IndexBuilder.load(spark, dir))
     assert(reloaded.count(Term("content", "hello")) === 0) // deletes persisted
     assert(reloaded.index.numLiveDocs === 1)
+    // postings and tombstones load bucketed alike: WAND groups both by salt
+    // bucket with no exchange
+    val wand = reloaded.search(Q.any(Term("content", "hello"), Term("content", "world")), 10)
+    assert(wand.collect().map(_.getLong(0)).toSeq === Seq(2L))
+    assert(exchanges(wand).isEmpty, wand.queryExecution.executedPlan.toString)
     // re-saving a delete-free index over the same directory drops the old
     // tombstones instead of resurrecting them on load
     base.save(dir)
@@ -109,10 +117,97 @@ class LifecycleSpec extends SparkTestBase {
     // empty-index edges: append to empty, union with empty, query empty
     val empty = IndexBuilder.build(corpus().limit(0), schema, 2)
     assert(new Searcher(empty).count(Term("content", "hello")) === 0)
+    // an empty index with an empty tombstone set saves and loads: a bucketed
+    // write of no rows leaves no file to read a schema from
+    val emptyDir = java.nio.file.Files.createTempDirectory("graft-empty-save").toString
+    new Searcher(empty).delete(Term("content", "hello")).index.save(emptyDir)
+    val reEmpty = IndexBuilder.load(spark, emptyDir)
+    assert(reEmpty.blocks.count() === 0 && reEmpty.deletes.map(_.count()) === Some(0L))
+    assert(new Searcher(reEmpty).count(Term("content", "hello")) === 0)
     val grown = empty.append(corpus(("r", "p9", "c", "en", "hello void")))
     assert(new Searcher(grown).count(Term("content", "void")) === 1)
     val u = MultiIndex.union(Seq(empty, base))
     assert(new Searcher(u).docFreq("content", "hello") === 2)
+  }
+
+  private def exchanges(df: org.apache.spark.sql.DataFrame): Seq[Exchange] = {
+    df.collect() // so AQE's final plan is inspected
+    collect(df.queryExecution.executedPlan) { case e: Exchange => e }
+  }
+
+  private def saltExchanges(df: org.apache.spark.sql.DataFrame): Int =
+    exchanges(df).count {
+      case e: ShuffleExchangeExec => e.outputPartitioning.toString.startsWith("hashpartitioning(salt")
+      case _                      => false
+    }
+
+  private val codeSchema = IndexSchema(Seq("repo", "path", "commit"),
+    Map("content" -> TextField("code", positions = true), "lang" -> KeywordField))
+
+  private lazy val codeIndex = IndexBuilder.build(CodeCorpus.generate(spark, 3000, 4), codeSchema, 4)
+
+  private lazy val probes: Seq[Q] = {
+    def t(x: String) = Term("content", x)
+    Seq(t("parse"), Q.any(t("parse"), t("merge")), Q.all(t("def"), t("parse")),
+      Bool(Seq(Occur.Must -> t("def"), Occur.Must -> t("parse"), Occur.MustNot -> t("merge"))),
+      Q.phrase("content", "we", "the", "people"))
+  }
+
+  private def top10(s: Searcher, q: Q): Seq[(Long, Long)] =
+    s.search(q, 10).collect().map(r => (r.getLong(0), math.round(r.getDouble(1) * 1e9))).toSeq
+
+  /** The exhaustive `eval` ordering: every match scored, then sorted. */
+  private def evalTop10(s: Searcher, q: Q): Seq[(Long, Long)] =
+    s.eval(q).orderBy(col("score").desc, col("docId").asc).limit(10).collect()
+      .map(r => (r.getLong(0), math.round(r.getDouble(1) * 1e9))).toSeq
+
+  test("a directory saved before bucketing loads and answers like the bucketed layout") {
+    val oldDir = java.nio.file.Files.createTempDirectory("graft-old-layout").toString
+    val newDir = java.nio.file.Files.createTempDirectory("graft-new-layout").toString
+    // the earlier layout: plain parquet tables, a manifest with no bucket line
+    codeIndex.blocks.write.parquet(s"$oldDir/postings")
+    codeIndex.docs.write.parquet(s"$oldDir/docs")
+    codeIndex.termDict.write.parquet(s"$oldDir/termdict")
+    IndexManifest.write(spark, s"$oldDir/manifest", IndexManifest(codeSchema, codeIndex.fieldStats))
+    assert(!IndexManifest.read(spark, s"$oldDir/manifest").serialize.contains("buckets"))
+    codeIndex.save(newDir)
+    val old = new Searcher(IndexBuilder.load(spark, oldDir))
+    val cur = new Searcher(IndexBuilder.load(spark, newDir))
+    assert(IndexManifest.read(spark, s"$newDir/manifest").buckets.nonEmpty)
+    for (q <- probes) {
+      val want = top10(cur, q)
+      assert(want.nonEmpty, q.toString)
+      assert(top10(old, q) === want, q.toString)
+      assert(want === evalTop10(cur, q), q.toString)
+      // the old layout is not bucketed: the salt grouping adds its exchange
+      assert(saltExchanges(old.search(q, 10)) === 1, q.toString)
+      assert(saltExchanges(cur.search(q, 10)) === 0, q.toString)
+    }
+  }
+
+  test("append onto a loaded bucketed index, and its withDeletes view, match eval ordering") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-append-loaded").toString
+    // saved with tombstones, so the loaded view's delete table is bucketed too
+    codeIndex.withDeletes(Seq(0L, 1L, 2L).toDF("docId")).save(dir)
+    val loaded = IndexBuilder.load(spark, dir)
+    val appended = loaded.append(CodeCorpus.generate(spark, 300, 2)
+      .withColumn("repo", concat(lit("zz/"), col("repo"))))
+    val sApp = new Searcher(appended)
+    assert(appended.numLiveDocs === 3297)
+    assert(sApp.search(Term("content", "parse"), 0).collect()
+      .exists(_.getLong(0) >= (1L << IndexBuilder.SaltShift)), "appended segment unreachable")
+    val dead = new Searcher(loaded).search(probes(1), 5).collect().map(_.getLong(0)).toSeq ++
+      (0L until 3000L by 11L)
+    val sDel = new Searcher(loaded.withDeletes(dead.toDF("docId")))
+    for (q <- probes) {
+      val got = top10(sApp, q)
+      assert(got.nonEmpty && got === evalTop10(sApp, q), s"append: $q")
+      assert(got.map(_._1).toSet.intersect(Set(0L, 1L, 2L)).isEmpty, s"tombstoned doc surfaced: $q")
+      val gotDel = top10(sDel, q)
+      assert(gotDel === evalTop10(sDel, q), s"withDeletes: $q")
+      assert(gotDel.map(_._1).toSet.intersect(dead.toSet).isEmpty, s"tombstoned doc surfaced: $q")
+    }
   }
 
   test("positional queries on a positions-less field fail with a clear error") {

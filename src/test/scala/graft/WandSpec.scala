@@ -117,6 +117,56 @@ class WandSpec extends SparkTestBase {
     assert(got(Q.all(Term("content", "def"), Term("content", "zzz_missing"))).isEmpty)
   }
 
+  test("AND-NOT: same-field MUST_NOT terms excluded in the conjunction kernel ≡ the anti-join path") {
+    val schemaKw = IndexSchema(Seq("repo", "path", "commit"),
+      Map("content" -> TextField("code", positions = true), "lang" -> KeywordField))
+    // >8192 docs => salt buckets 0 and 1; the appended segment starts at
+    // bucket 2 and alone holds `zzout`, outside every MUST term's coverage
+    val big = IndexBuilder.build(CodeCorpus.generate(spark, 10000, 8), schemaKw, 4)
+    val appended = big.append(CodeCorpus.generate(spark, 20, 2)
+      .withColumn("repo", concat(lit("zz/"), col("repo")))
+      .withColumn("content", lit("zzout tail")))
+    val dir = java.nio.file.Files.createTempDirectory("graft-andnot").toString
+    appended.save(dir)
+    val loaded = IndexBuilder.load(spark, dir)
+    def t(x: String) = Term("content", x)
+    def andNot(a: String, b: String, nots: graft.query.Query*) =
+      Bool(Seq(Occur.Must -> t(a), Occur.Must -> t(b)) ++ nots.map(Occur.MustNot -> _))
+    // a one-clause SHOULD wrapper keeps the generic anti-join for the NOT
+    def wrapped(q: graft.query.Query) = Bool(Seq(Occur.Should -> q))
+    val cases: Seq[(String, String, Seq[graft.query.Query])] = Seq(
+      ("def", "parse", Seq(t("merge"))),
+      ("def", "parse", Seq(t("the"), t("x7"))), // hot NOT + a rare one
+      ("def", "parse", Seq(t("parse"))), // NOT equals a MUST: no hits
+      ("def", "parse", Seq(t("zzz_missing"))), // NOT absent from the index
+      ("def", "parse", Seq(t("zzout"))), // NOT blocks outside the coverage
+      ("scanhash", "def", Seq(t("class"))),
+      ("def", "parse", Seq(Term("lang", "py")))) // other field: anti-join kept
+    for (idx <- Seq(appended, loaded); (a, b, nots) <- cases) {
+      val s = new Searcher(idx)
+      def all(q: graft.query.Query): Map[Long, Long] = s.search(q, 0).collect()
+        .map(r => r.getLong(0) -> math.round(r.getDouble(1) * 1e9)).toMap
+      val q = andNot(a, b, nots: _*)
+      val got = all(q)
+      val label = s"+$a +$b ${nots.mkString(" -")}"
+      assert(got === all(andNot(a, b, nots.map(wrapped): _*)), label)
+      assert(s.search(q, 10).collect().map(r => (r.getLong(0), math.round(r.getDouble(1) * 1e9))).toSeq ===
+        got.toSeq.sortBy { case (id, sc) => (-sc, id) }.take(10), s"top-10 $label")
+      val plan = { val df = s.search(q, 10); df.collect(); df.queryExecution.executedPlan.toString }
+      val otherField = nots.exists { case Term(f, _) => f != "content"; case _ => false }
+      assert(plan.contains("LeftAnti") === otherField, s"anti-join iff another field's NOT: $label")
+      val conj = all(Q.all(t(a), t(b)))
+      nots match {
+        case Seq(Term("content", n)) if n == a || n == b => assert(got.isEmpty, label)
+        case Seq(Term("content", "zzz_missing" | "zzout")) => assert(got === conj, label)
+        case Seq(Term("content", "merge")) =>
+          assert(got.nonEmpty && got.size < conj.size, label)
+          assert(got === conj -- s.search(t("merge"), 0).collect().map(_.getLong(0)), label)
+        case _ => assert(got.keySet.subsetOf(conj.keySet), label)
+      }
+    }
+  }
+
   test("phrase/near/conjunction stay exact on multi-bucket corpora (>8192 docs)") {
     val big = IndexBuilder.build(CodeCorpus.generate(spark, 10000, 8), schema, 4)
     val sBig = new Searcher(big)
