@@ -112,7 +112,7 @@ object SparkEntry {
     * memory, and query-side execution memory (minhash/ANN sweeps) evicted it
     * between benchmark reps, making warm retrieval slower than cold
     * (BENCH_r01 q_term_topk 0.93 s warm vs 0.18 s cold). Term statistics
-    * and rare-term block ranges are served from the index's driver-resident
+    * and rare-term salt buckets are served from the index's driver-resident
     * term table (built on the first query); the term dictionary stays
     * pinned in executor storage for the expansions that scan it (prefix,
     * wildcard, range, fuzzy, suggest).

@@ -1,6 +1,6 @@
 package graft.exec
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row}
 import org.apache.spark.sql.functions._
 
 import graft.index.{Index, IndexBuilder, Posting, PostingBlock, PostingCodec}
@@ -12,6 +12,12 @@ import graft.query._
   *   dlq  = SmallFloat-quantized doc length stored in the posting block
   *   dlq=0 ⇒ norms omitted (keyword fields) ⇒ denominator tf + k1.
   * Boost multiplies; ties break on ascending docId (collector order).
+  *
+  * [[score]] is the one formula: the executor kernels (WAND, conjunction,
+  * positional and single-term scoring) call it inside their closures, and
+  * the driver and the tests call it directly. There is no column form, so
+  * an index-derived weight or avgdl never becomes a literal in generated
+  * code, and a query shape compiles once whatever its terms.
   */
 object Bm25 {
   val k1 = 1.2
@@ -19,13 +25,6 @@ object Bm25 {
 
   def idf(docCount: Long, docFreq: Long): Double =
     math.log(1.0 + (docCount - docFreq + 0.5) / (docFreq + 0.5))
-
-  /** Codegen-friendly score column over decoded postings (tf, dlq). */
-  def scoreCol(tf: Column, dlq: Column, weight: Double, avgdl: Double): Column = {
-    val norm = when(dlq === 0, lit(k1))
-      .otherwise(lit(k1) * (lit(1.0 - b) + lit(b) * dlq.cast("double") / lit(avgdl)))
-    lit(weight) * tf.cast("double") / (tf.cast("double") + norm)
-  }
 
   def score(tf: Double, dlq: Int, weight: Double, avgdl: Double): Double = {
     val norm = if (dlq == 0) k1 else k1 * (1.0 - b + b * dlq / avgdl)
@@ -53,12 +52,6 @@ object Searcher {
     case x => String.valueOf(x)
   }
 
-  /** A block's docId salt bucket — blocks never span one, so hash-
-    * partitioning on it co-locates every key's blocks of a bucket.
-    */
-  private[exec] def saltBucket: Column =
-    shiftrightunsigned(col("firstDocId"), graft.index.IndexBuilder.SaltShift)
-
   /** The running top-k of one task's WAND buckets. Each task deserializes
     * its own copy of the kernel closure that holds it, so it is never
     * shared between tasks.
@@ -77,6 +70,29 @@ object Searcher {
       freqsBlob: Array[Byte], normsBlob: Array[Byte]) {
     def toBlock(field: String): PostingBlock = PostingBlock(field, term, firstDocId, lastDocId,
       numDocs, maxTf, sumTf, minDlq, docsBlob, freqsBlob, normsBlob, Array.empty[Byte])
+  }
+
+  /** The encoders of the block routes' rows, derived once per JVM:
+    * `spark.implicits` derives a product encoder by Scala reflection at
+    * every call, that is on every query. [[Searcher]] imports these after
+    * `spark.implicits._`; an implicit of the exact type is preferred over
+    * the implicits' generic product encoder.
+    */
+  private[exec] object RouteEncoders {
+    implicit val scoreBlockEnc: Encoder[ScoreBlock] = Encoders.product[ScoreBlock]
+    implicit val postingBlockEnc: Encoder[PostingBlock] = Encoders.product[PostingBlock]
+    implicit val postingEnc: Encoder[Posting] = Encoders.product[Posting]
+    implicit val scoredEnc: Encoder[(Long, Double)] = Encoders.product[(Long, Double)]
+    implicit val wandRowEnc: Encoder[(Array[Long], Array[Double], Long, Boolean)] =
+      Encoders.product[(Array[Long], Array[Double], Long, Boolean)]
+    implicit val positionalRowEnc: Encoder[(Long, Int, Array[Array[Int]])] =
+      Encoders.product[(Long, Int, Array[Array[Int]])]
+    implicit val spansRowEnc: Encoder[(Long, Array[(Int, Int)])] =
+      Encoders.product[(Long, Array[(Int, Int)])]
+    implicit val scoreDecodeEnc: Encoder[(Long, Int, Array[Byte], Array[Byte], Array[Byte])] =
+      Encoders.product[(Long, Int, Array[Byte], Array[Byte], Array[Byte])]
+    implicit val docIdDecodeEnc: Encoder[(Long, Int, Array[Byte])] =
+      Encoders.product[(Long, Int, Array[Byte])]
   }
 
   /** Fuzzy-expansion predicate over the term dictionary. Cheap filters run
@@ -107,6 +123,7 @@ object Searcher {
 class Searcher(val index: Index) extends Serializable {
   private val spark = index.spark
   import spark.implicits._
+  import Searcher.RouteEncoders._
 
   val MaxExpandedTerms = 1024 // Lucene BooleanQuery.maxClauseCount default
 
@@ -228,12 +245,17 @@ class Searcher(val index: Index) extends Serializable {
     case Constant(sub) => evalInner(sub).select(col("docId"), lit(1.0).as("score"))
   }
 
+  /** One term's BM25 scores, computed by [[Bm25.score]] in the decode
+    * closure: the idf weight and avgdl stay out of generated code.
+    */
   private def evalTerm(field: String, term: String, boost: Double, df: Long): DataFrame = {
     val st = index.fieldStats.getOrElse(field, return emptyMatches)
     if (df == 0) return emptyMatches
     val w = boost * Bm25.idf(st.docCount, df)
-    postings(field, term).toDF()
-      .select(col("docId"), Bm25.scoreCol(col("tf"), col("dlq"), w, st.avgdl).as("score"))
+    val avgdl = st.avgdl
+    postings(field, term)
+      .map(p => (p.docId, Bm25.score(p.tf.toDouble, p.dlq, w, avgdl)))
+      .toDF("docId", "score")
   }
 
   /** Multi-term queries rewrite to a constant-score doc-set union
@@ -336,32 +358,37 @@ class Searcher(val index: Index) extends Serializable {
       .toDF("docId")
 
   /** Block pruner from the rarest term's docId coverage, shared by the
-    * conjunctive and positional paths. The rare term's merged
-    * (firstDocId, lastDocId) block ranges come from the index's term table
-    * (no Spark job) and are pushed down as LITERAL predicates, so wider
-    * terms' blocks outside the coverage prune at the parquet scan via
-    * min/max stats, with no extra job and no shuffle: an OR of range
-    * predicates for up to 256 merged ranges, and above that a literal
-    * `InSet` of the salt buckets the ranges touch (coarser, but a bounded
-    * expression however many blocks the term has). Both cover every block
-    * of the rare term: blocks never span a salt bucket, and only
-    * touching/overlapping ranges merge, so the merged set is exactly the
-    * union of the rare term's blocks.
+    * conjunctive and positional paths: keep the blocks in the salt buckets
+    * the rare term touches (read from the index's term table, no Spark
+    * job), as one Catalyst `InSet` over the salted blocks' `salt` column.
+    * Every block of the rare term survives, since blocks never span a salt
+    * bucket.
+    *
+    *  - Over a saved index `salt` is the stored bucket column: Spark's
+    *    bucket pruning drops the untouched bucket files at planning, and
+    *    parquet receives the pushed `In`. A directory saved before
+    *    bucketing computes `salt` from `firstDocId`, so it prunes nothing
+    *    at the scan and keeps its answers.
+    *  - `InSet` over a long reads its set from the generated class's
+    *    references, so every plan of one shape compiles to the same code
+    *    whichever terms it holds. (`isin` stays an `In` up to
+    *    `spark.sql.optimizer.inSetConversionThreshold` values and inlines
+    *    each one.) The set is always a `HashSet`: the generated code casts
+    *    to the set's runtime class, and Scala's small sets have one class
+    *    per size.
+    *  - Inside a touched bucket, a wider term's blocks outside the rare
+    *    term's docIds still reach the kernel, which skip-intersects them
+    *    undecoded.
     */
   private def rareCoveragePruner(field: String, rareTerm: String): DataFrame => DataFrame = {
-    val merged = index.termTable.get(field, rareTerm).fold(Seq.empty[(Long, Long)])(_.ranges)
-    if (merged.isEmpty) (wide: DataFrame) => wide.limit(0)
-    else if (merged.length <= 256) {
-      val cond = merged.map { case (f, l) =>
-        col("lastDocId") >= f && col("firstDocId") <= l
-      }.reduce(_ || _)
-      (wide: DataFrame) => wide.filter(cond)
-    } else {
-      // too many ranges for an OR chain: literal bucket InSet instead
-      val bkts = merged.flatMap { case (f, l) =>
-        (f >> graft.index.IndexBuilder.SaltShift) to (l >> graft.index.IndexBuilder.SaltShift)
-      }.distinct
-      (wide: DataFrame) => wide.filter(Searcher.saltBucket.isin(bkts.toSeq: _*))
+    val buckets = index.termTable.get(field, rareTerm).fold(Seq.empty[Long])(_.buckets)
+    if (buckets.isEmpty) (wide: DataFrame) => wide.limit(0)
+    else {
+      import org.apache.spark.sql.graft.ColumnBridge
+      val inBuckets = ColumnBridge.column(org.apache.spark.sql.catalyst.expressions.InSet(
+        ColumnBridge.expression(col(IndexBuilder.SaltColumn)),
+        scala.collection.immutable.HashSet.from[Any](buckets)))
+      (wide: DataFrame) => wide.filter(inBuckets)
     }
   }
 
@@ -429,8 +456,9 @@ class Searcher(val index: Index) extends Serializable {
     * `required ++ optional` order; `optional` keys (span-Or branches,
     * Not-excludes) attach to surviving docs. Only COMPRESSED blocks are
     * read and grouped, never decoded postings of `the`-class hot terms:
-    *  1. rare-coverage pruning drops whole blocks of the wider keys before
-    *     anything is grouped or decoded (see [[rareCoveragePruner]]);
+    *  1. rare-coverage pruning drops the wider keys' blocks outside the
+    *     rare key's salt buckets before anything is grouped or decoded (see
+    *     [[rareCoveragePruner]]);
     *  2. the surviving COMPRESSED blocks group by salt bucket
     *     ([[bucketBlocks]]: no exchange over a saved index);
     *  3. per bucket, [[PhraseMatcher.intersectKeyed]]: a wider key's block
@@ -450,9 +478,10 @@ class Searcher(val index: Index) extends Serializable {
   }
 
   /** The one salt-bucket runtime behind WAND, term conjunction and
-    * positional matching: the blocks of `keys`, pruned, grouped by their
-    * salt bucket (`firstDocId >>> SaltShift`; blocks never span one), and
-    * `kernel` run once per bucket over every key's blocks of it.
+    * positional matching: the blocks of `keys`, salted (the stored `salt`
+    * column of a saved index, else `firstDocId >>> SaltShift`; blocks
+    * never span a bucket), pruned by `prune` over that salt column, grouped
+    * by it, and `kernel` run once per bucket over every key's blocks of it.
     *
     * The grouping requires the input clustered by the salt column. A saved
     * index loads bucketed on its stored salt column, so the scan already is
@@ -477,7 +506,7 @@ class Searcher(val index: Index) extends Serializable {
     val cond = fields.map { f =>
       col("field") === f && col("term").isin(keys.filter(_._1 == f).map(_._2).distinct: _*)
     }.reduce(_ || _)
-    val blocks = IndexBuilder.salted(prune(index.blocks.filter(cond).toDF()), "firstDocId")
+    val blocks = prune(IndexBuilder.salted(index.blocks.filter(cond).toDF(), "firstDocId"))
     val salt = col(IndexBuilder.SaltColumn)
     if (withPositions)
       return blocks.groupBy(salt).as[Long, PostingBlock].flatMapGroups((_, it) => kernel(it))
@@ -536,15 +565,18 @@ class Searcher(val index: Index) extends Serializable {
   }
 
   /** BM25 over positional matches: `freq` turns a doc's position lists into
-    * its (sloppy) frequency; docs whose frequency is 0 do not match.
+    * its (sloppy) frequency; docs whose frequency is 0 do not match. The
+    * score is [[Bm25.score]] in the same closure, so the summed idf weight
+    * and avgdl stay out of generated code.
     */
   private def scorePositional(required: Seq[(String, String)], optional: Seq[(String, String)],
       dlqField: String, weight: Double, avgdl: Double)(freq: Array[Array[Int]] => Double): DataFrame =
     positionalMatchesKeys(required, optional, dlqField)
-      .map { case (docId, dlq, lists) => (docId, freq(lists), dlq) }
-      .filter(_._2 > 0.0)
-      .toDF("docId", "freq", "dlq")
-      .select(col("docId"), Bm25.scoreCol(col("freq"), col("dlq"), weight, avgdl).as("score"))
+      .flatMap { case (docId, dlq, lists) =>
+        val f = freq(lists)
+        if (f > 0.0) Iterator.single((docId, Bm25.score(f, dlq, weight, avgdl))) else Iterator.empty
+      }
+      .toDF("docId", "score")
 
   // ------------------------------------------------------------ span algebra
 

@@ -202,7 +202,7 @@ final class Index private[index] (
       new TermTable.Lazy(termDict, blocks))
 
   /** The driver-resident [[TermTable]] the searcher plans from (term
-    * statistics, block counts, rare-term block ranges). Built on first use,
+    * statistics, the salt buckets each term's blocks lie in). Built on first use,
     * not at build or load time; shared with every [[withDeletes]] view.
     */
   private[graft] def termTable: TermTable = terms.get

@@ -4,12 +4,11 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Driver-resident term table of an [[Index]]: per (field, term) the
-  * dictionary statistics (`docFreq`, `totalTermFreq`) and the term's merged
-  * `(firstDocId, lastDocId)` block ranges — the planner's whole view of
-  * the postings. It plays the role of the terms index a Lucene reader
-  * loads once when it opens: planning a query
-  * (idf weights, rarest-first order, the rare-coverage range filter) reads
-  * it with no Spark job. Immutable; built by two collects on first use
+  * dictionary statistics (`docFreq`, `totalTermFreq`) and the salt buckets
+  * the term's blocks lie in — the planner's whole view of the postings. It
+  * plays the role of the terms index a Lucene reader loads once when it
+  * opens: planning a query (idf weights, rarest-first order, the
+  * rare-coverage bucket filter) reads it with no Spark job. Immutable; built by two collects on first use
   * (see [[TermTable.Lazy]]); never shipped to executors.
   */
 final class TermTable private (
@@ -25,56 +24,35 @@ final class TermTable private (
 
 object TermTable {
 
-  /** One term: dictionary statistics and the term's block ranges merged
-    * where they touch or overlap, flattened as
-    * `[first0, last0, first1, last1, …]` in ascending docId order.
+  /** One term: dictionary statistics and the distinct salt buckets
+    * (`firstDocId >>> SaltShift`) of its blocks, ascending. A block never
+    * spans a bucket, so the buckets cover every block of the term.
     */
-  final class Entry(val docFreq: Long, val totalTermFreq: Long, rangeBounds: Array[Long]) {
-    def ranges: Seq[(Long, Long)] =
-      rangeBounds.grouped(2).map(a => (a(0), a(1))).toSeq
-  }
-
-  /** Merge block ranges that touch or overlap (`first <= previous last +
-    * 1`) in ascending docId order, so the result covers exactly the union
-    * of the blocks.
-    */
-  private def mergeRanges(blocks: Array[(Long, Long)]): Array[Long] = {
-    val out = scala.collection.mutable.ArrayBuilder.make[Long]
-    var open = false
-    var lo = 0L
-    var hi = 0L
-    blocks.sortBy(_._1).foreach { case (f, l) =>
-      if (open && f <= hi + 1) hi = math.max(hi, l)
-      else {
-        if (open) { out += lo; out += hi }
-        lo = f; hi = l; open = true
-      }
-    }
-    if (open) { out += lo; out += hi }
-    out.result()
+  final class Entry(val docFreq: Long, val totalTermFreq: Long, bucketIds: Array[Long]) {
+    def buckets: Seq[Long] = bucketIds.toSeq
   }
 
   /** Collect the table: the statistics from the index's own `termDict`
-    * and the ranges from the `blocks` metadata columns, grouped and merged
-    * here. Grouping on the executors instead (`collect_list` +
-    * `sort_array` per term) measured slower on a 55K-block index: 0.44-0.63
-    * s per warm build vs 0.36-0.53 s, of which the two narrow collects are
-    * ~0.2 s. The norms sentinel `""` is not a dictionary term and has no
-    * entry.
+    * and the buckets from the `blocks` metadata columns, grouped here.
+    * Grouping on the executors instead (`collect_list` + `sort_array` per
+    * term) measured slower on a 55K-block index: 0.44-0.63 s per warm
+    * build vs 0.36-0.53 s, of which the two narrow collects are ~0.2 s.
+    * The norms sentinel `""` is not a dictionary term and has no entry.
     */
   private def build(termDict: DataFrame, blocks: Dataset[PostingBlock]): TermTable = {
     val spark = blocks.sparkSession
     import spark.implicits._
-    val ranges = blocks.filter(col("term") =!= "")
-      .select(col("field"), col("term"), col("firstDocId"), col("lastDocId"))
-      .as[(String, String, Long, Long)].collect()
-      .groupMap(b => (b._1, b._2))(b => (b._3, b._4))
+    val buckets = blocks.filter(col("term") =!= "")
+      .select(col("field"), col("term"),
+        shiftrightunsigned(col("firstDocId"), IndexBuilder.SaltShift))
+      .as[(String, String, Long)].collect()
+      .groupMap(b => (b._1, b._2))(_._3)
     val byField = scala.collection.mutable.Map.empty[String, java.util.HashMap[String, Entry]]
     termDict.select("field", "term", "docFreq", "totalTermFreq").collect().foreach { r =>
       val (f, t) = (r.getString(0), r.getString(1))
-      val bs = ranges.getOrElse((f, t), Array.empty[(Long, Long)])
+      val bs = buckets.getOrElse((f, t), Array.empty[Long]).distinct.sorted
       byField.getOrElseUpdate(f, new java.util.HashMap[String, Entry]())
-        .put(t, new Entry(r.getLong(2), r.getLong(3), mergeRanges(bs)))
+        .put(t, new Entry(r.getLong(2), r.getLong(3), bs))
     }
     new TermTable(byField.toMap)
   }

@@ -1,9 +1,12 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Attribute, InSet}
 import org.apache.spark.sql.execution.{FileSourceScanExec, UnionExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+import org.apache.spark.sql.functions.{col, concat, lit}
 
 import graft.exec.{Searcher, SortSpec}
 import graft.fixtures.CodeCorpus
@@ -20,7 +23,9 @@ import graft.query.{Query => Q, _}
   * run exactly ONE hash exchange on the salt bucket; over the deletes view
   * the blocks and tombstones meet in it through a Union. The score-only
   * routes never read the positions blob. Queries execute first so AQE's
-  * final plan is inspected.
+  * final plan is inspected. A second query of a shape, over a saved or a
+  * built index, compiles no generated class: no value taken from the index
+  * enters generated code as a literal.
   */
 class PlanShapeSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
@@ -96,6 +101,11 @@ class PlanShapeSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     ("facets_multi (one pass, N fields)", () => searcher.facetsMulti(parse, Seq("lang", "repo")),
       (4, true, false, false, true), None, false))
 
+  // routes led by a rarest term: their scans keep its salt buckets through
+  // one InSet on the stored salt column, which bucket pruning also reads
+  private val rarePruned = Set("bool_and (conjunction intersect)",
+    "bool_and_not (exclusion in the conjunction kernel)", "phrase (bucket intersect)", "span_containing")
+
   routes.foreach { case (label, df, expected, salt, scoreOnly) =>
     test(s"plan shape: $label") {
       val (got, plan) = shape(df())
@@ -109,12 +119,100 @@ class PlanShapeSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
         assert(scans.nonEmpty, "postings scan expected")
         scans.foreach(s => assert(s.bucketedScan, s"postings scan not bucketed: ${s.simpleString(200)}"))
       }
+      if (rarePruned(label)) postingsScans(plan).foreach { s =>
+        val saltSets = s.dataFilters.collect {
+          case InSet(a: Attribute, hset) if a.name == IndexBuilder.SaltColumn => hset
+        }
+        assert(saltSets === Seq(Set(0L)), s.simpleString(2000))
+        assert(s.simpleString(2000).contains("SelectedBucketsCount: 1 out of 1"), s.simpleString(2000))
+      }
       if (scoreOnly) {
         val schemas = postingsScans(plan).map(_.requiredSchema.fieldNames.toSeq)
         assert(schemas.nonEmpty, "postings scan expected")
         schemas.foreach(s => assert(!s.contains("positionsBlob"), s"ReadSchema $s"))
       }
     }
+  }
+
+  // ---------------------------------------------------------------------
+  // Codegen reuse: a second query of a shape compiles no new Java class.
+  // The grown index adds a segment (salt bucket 1) whose docs alone hold
+  // "zebra crossing light", so each second query's rarest term differs
+  // from the warm-up's in docFreq and in docId coverage: salt buckets {1}
+  // against {0, 1}.
+
+  private lazy val grown: Index = built.append(CodeCorpus.generate(spark, 400, 2)
+    .withColumn("commit", lit("grown"))
+    .withColumn("content", concat(col("content"), lit(" zebra crossing light"))))
+
+  private lazy val grownSaved: Searcher = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-codegen").toString
+    grown.save(dir)
+    new Searcher(IndexBuilder.load(spark, dir))
+  }
+
+  private def t(term: String): Term = Term("content", term)
+  private def sp(term: String): SpanQ = Q.span("content", term)
+
+  /** shape -> (warm-up query, second query) */
+  private lazy val shapes: Seq[(String, Q, Q)] = Seq(
+    ("term", t("parse"), t("zebra")),
+    ("or", Q.any(t("parse"), t("merge")), Q.any(t("zebra"), t("scan"))),
+    ("and", Q.all(t("parse"), t("merge")), Q.all(t("zebra"), t("def"))),
+    ("and_not", Bool(Seq(Occur.Must -> t("parse"), Occur.Must -> t("merge"), Occur.MustNot -> t("fn"))),
+      Bool(Seq(Occur.Must -> t("zebra"), Occur.Must -> t("scan"), Occur.MustNot -> t("public")))),
+    ("phrase", Q.phrase("content", "we", "the", "people"), Q.phrase("content", "zebra", "crossing", "light")),
+    ("near", Q.near("content", Seq("block", "wand"), slop = 3, inOrder = false),
+      Q.near("content", Seq("zebra", "light"), slop = 3, inOrder = false)),
+    ("span", SpanWrap(SpanQ.near(Seq(sp("block"), sp("wand")), slop = 2).containing(sp("max"))),
+      SpanWrap(SpanQ.near(Seq(sp("zebra"), sp("light")), slop = 2).containing(sp("crossing")))),
+    ("count_term", t("parse"), t("zebra")),
+    ("count_and", Q.all(t("parse"), t("merge")), Q.all(t("zebra"), t("def"))),
+    ("mixed +a b", Bool(Seq(Occur.Must -> t("parse"), Occur.Should -> t("merge"))),
+      Bool(Seq(Occur.Must -> t("zebra"), Occur.Should -> t("scan")))))
+
+  private def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** Top-10 (docId, score) of a search, or the count of a count shape. */
+  private def answer(s: Searcher, shape: String, q: Q): Either[Long, Seq[(Long, Double)]] =
+    if (shape.startsWith("count")) Left(s.count(q))
+    else Right(s.search(q, 10).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq)
+
+  private def exhaustive(s: Searcher, shape: String, q: Q): Either[Long, Seq[(Long, Double)]] = {
+    val m = s.eval(q)
+    if (shape.startsWith("count")) Left(m.collect().length.toLong)
+    else Right(m.orderBy(col("score").desc, col("docId").asc).limit(10)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq)
+  }
+
+  private def assertSameAnswer(label: String, got: Either[Long, Seq[(Long, Double)]],
+      want: Either[Long, Seq[(Long, Double)]]): Unit = (got, want) match {
+    case (Left(g), Left(w)) =>
+      assert(g === w, label)
+      assert(g > 0, s"$label: no matches")
+    case (Right(g), Right(w)) =>
+      assert(g.map(_._1) === w.map(_._1), label)
+      g.zip(w).foreach { case (a, b) => assert(math.abs(a._2 - b._2) < 1e-9, s"$label: $a vs $b") }
+      assert(g.nonEmpty, s"$label: no hits")
+    case _ => fail(label)
+  }
+
+  Seq("saved" -> (() => grownSaved), "built" -> (() => new Searcher(grown))).foreach {
+    case (kind, searcherOf) =>
+      test(s"codegen reuse: a repeated query shape compiles no code ($kind index)") {
+        val s = searcherOf()
+        val compiled = shapes.map { case (shape, warm, second) =>
+          val warmAnswer = answer(s, shape, warm)
+          val before = compiles()
+          val secondAnswer = answer(s, shape, second)
+          val n = compiles() - before
+          assertSameAnswer(s"$kind $shape warm-up", warmAnswer, exhaustive(s, shape, warm))
+          assertSameAnswer(s"$kind $shape", secondAnswer, exhaustive(s, shape, second))
+          shape -> n
+        }
+        assert(compiled.forall(_._2 == 0L),
+          s"classes compiled by the second query of each shape: ${compiled.mkString(", ")}")
+      }
   }
 
   // the built index's plan string prints its cached build lineage, so the

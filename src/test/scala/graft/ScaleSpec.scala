@@ -112,22 +112,53 @@ class ScaleSpec extends SparkTestBase {
     assert(bad === 0L)
   }
 
-  test("positional/conjunctive pruning: literal block-range predicates, no semi-join") {
+  test("positional/conjunctive pruning: salt-bucket InSet, buckets pruned, no semi-join") {
     val s = new Searcher(IndexBuilder.build(corpus, schema, numPartitions = 4))
     def planOf(df: org.apache.spark.sql.DataFrame): String = {
       df.collect()
       df.queryExecution.executedPlan.toString
     }
-    // phrase: wider terms' blocks prune to the rarest term's docId coverage
-    // via LITERAL range predicates (no shuffle, no extra job) when the rare
-    // term's block list is driver-small
+    // phrase: wider terms' blocks prune to the salt buckets of the rarest
+    // term (all 200 docs lie in bucket 0) via one InSet on the salt, no
+    // shuffle, no extra job
+    val bucketInSet = """shiftrightunsigned\(firstDocId#\d+L?, 13\) INSET 0(?![,\d])""".r
     val phrasePlan = planOf(s.search(Query.phrase("content", "we", "the", "people"), 10))
     assert(!phrasePlan.contains("LeftSemi"), phrasePlan.take(1500))
-    assert(phrasePlan.contains("lastDocId"), phrasePlan.take(1500))
+    assert(bucketInSet.findFirstIn(phrasePlan).isDefined, phrasePlan.take(3000))
     // pure term conjunction routes through the same intersect (no hash
     // aggregate of unioned full postings)
     val andPlan = planOf(s.search(Query.all(Term("content", "parse"), Term("content", "merge")), 10))
-    assert(!andPlan.contains("LeftSemi") && andPlan.contains("lastDocId"), andPlan.take(1500))
+    assert(!andPlan.contains("LeftSemi"), andPlan.take(1500))
+    assert(bucketInSet.findFirstIn(andPlan).isDefined, andPlan.take(3000))
+    // saved, two bucket files: 8,200 docs (salts 0 and 1, which both hash to
+    // bucket 1 of 2) and an appended segment at salt 2 (bucket 0) that alone
+    // holds "rare". A query led by "rare" scans bucket 0 only, through the
+    // stored salt column, which parquet also receives as a pushed In; one led
+    // by a term of both segments scans both buckets.
+    import spark.implicits._
+    val wideSchema = IndexSchema(Seq("repo", "path", "commit"),
+      Map("content" -> TextField("standard", positions = true)))
+    def rows(n: Int, text: Int => String, commit: String) =
+      (0 until n).map(i => ("r", f"p$i%05d", commit, text(i))).toDF("repo", "path", "commit", "content")
+    val grown = IndexBuilder.build(rows(8200, i => if (i % 2 == 0) "alpha beta" else "alpha gamma", "a"),
+      wideSchema, numPartitions = 4).append(rows(20, i => if (i % 2 == 0) "rare alpha beta" else "alpha rare", "b"))
+    val dir = Files.createTempDirectory("graft-buckets").toString
+    grown.save(dir)
+    val saved = new Searcher(IndexBuilder.load(spark, dir))
+    def savedPlan(q: Query, hits: Int): String = {
+      val df = saved.search(q, 100)
+      assert(df.collect().length === hits, q)
+      df.queryExecution.executedPlan.toString
+    }
+    Seq(savedPlan(Query.all(Term("content", "rare"), Term("content", "alpha")), 20),
+        savedPlan(Query.phrase("content", "rare", "alpha"), 10)).foreach { p =>
+      assert("""salt#\d+L INSET 2(?![,\d])""".r.findFirstIn(p).isDefined, p.take(3000))
+      assert(p.contains("In(salt, [2])"), p.take(3000))
+      assert(p.contains("SelectedBucketsCount: 1 out of 2"), p.take(3000))
+    }
+    val both = savedPlan(Query.all(Term("content", "beta"), Term("content", "alpha")), 100)
+    assert("""salt#\d+L INSET 0, 1, 2(?![,\d])""".r.findFirstIn(both).isDefined, both.take(3000))
+    assert(both.contains("SelectedBucketsCount: 2 out of 2"), both.take(3000))
     // groupBy ranks groups without an unpartitioned window
     val gPlan = planOf(s.groupBy("lang", Term("content", "def"), groups = 2))
     assert(!gPlan.contains("Window [dense_rank"), gPlan.take(1500))
@@ -137,8 +168,7 @@ class ScaleSpec extends SparkTestBase {
     import spark.implicits._
     // one doc per salt bucket (docId = i << SaltShift, the gaps Index.append
     // leaves): each term gets one block per doc and no two block ranges
-    // touch, so "rare" (300 docs) has 300 merged ranges, above the
-    // 256-range cap on the OR of range predicates
+    // touch, so "rare" (300 docs) lies in 300 salt buckets
     val src = (0 until 600).map { i =>
       val text =
         if (i % 6 == 0) (if (i % 4 == 0) "rare alpha" else "alpha rare")
@@ -154,7 +184,11 @@ class ScaleSpec extends SparkTestBase {
     val blocks = IndexBuilder.blocksOf(IndexBuilder.tokensOf(docs, wideSchema), wideSchema, 4).cache()
     val idx = new Index(spark, wideSchema, docs, blocks, IndexBuilder.termDictOf(blocks),
       IndexBuilder.fieldStatsOf(blocks))
-    assert(idx.termTable.get("content", "rare").get.ranges.length === 300)
+    val rareBuckets = idx.termTable.get("content", "rare").get.buckets
+    assert(rareBuckets.length === 300)
+    // ... exactly the distinct salts of the rare term's blocks
+    assert(rareBuckets === blocks.filter(col("term") === "rare").select("firstDocId").as[Long]
+      .collect().map(_ >>> IndexBuilder.SaltShift).distinct.sorted.toSeq)
     // driver-side truth from the stored text
     val texts = docs.select("docId", "content").as[(Long, String)].collect()
     def truth(p: String => Boolean): Set[Long] = texts.collect { case (d, t) if p(t) => d }.toSet
@@ -170,8 +204,8 @@ class ScaleSpec extends SparkTestBase {
     val (phraseIds, phrasePlan) = hits(Query.phrase("content", "rare", "wide"))
     assert(phraseIds === truth(_.contains("rare wide")))
     assert(andIds.size === 200 && phraseIds.size === 100)
-    // the salt-bucket literal set filter, not a semi-join
-    val bucketInSet = """shiftrightunsigned\(firstDocId#\d+L?, \d+\) (INSET|IN \()""".r
+    // the salt-bucket set filter, not a semi-join
+    val bucketInSet = """shiftrightunsigned\(firstDocId#\d+L?, \d+\) INSET """.r
     Seq(andPlan, phrasePlan).foreach { p =>
       assert(bucketInSet.findFirstIn(p).isDefined, p.take(3000))
       assert(!p.contains("LeftSemi"), p.take(1500))

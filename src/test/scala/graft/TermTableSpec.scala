@@ -24,13 +24,6 @@ class TermTableSpec extends SparkTestBase {
     fields = Map("content" -> TextField("code", positions = true), "lang" -> KeywordField))
   lazy val built: Index = IndexBuilder.build(corpus, schema, numPartitions = 4).cached()
 
-  /** Merge ascending (first, last) ranges that touch or overlap. */
-  private def merged(blocks: Seq[(Long, Long)]): Seq[(Long, Long)] =
-    blocks.sortBy(_._1).foldLeft(List.empty[(Long, Long)]) {
-      case ((f0, l0) :: rest, (f, l)) if f <= l0 + 1 => (f0, math.max(l0, l)) :: rest
-      case (acc, r)                                  => r :: acc
-    }.reverse
-
   private def assertTableMatches(name: String, idx: Index): Unit = {
     val table = idx.termTable
     val dict = idx.termDict.select("field", "term", "docFreq", "totalTermFreq").collect()
@@ -46,27 +39,27 @@ class TermTableSpec extends SparkTestBase {
     assert(table.get("content", "").isEmpty, s"$name: the norms sentinel is not a term")
     assert(table.get("no_such_field", "def").isEmpty, name)
     val blocks = idx.blocks.toDF().filter(col("term") =!= "")
-      .select("field", "term", "firstDocId", "lastDocId").collect()
+      .select("field", "term", "firstDocId").collect()
       .groupBy(r => (r.getString(0), r.getString(1)))
     assert(blocks.size === dict.length, name)
     blocks.foreach { case ((f, t), rows) =>
-      val ranges = rows.map(r => (r.getLong(2), r.getLong(3))).toSeq
-      val e = table.get(f, t).get
-      assert(e.ranges === merged(ranges), s"$name: $f:$t")
+      val salts = rows.map(_.getLong(2) >>> IndexBuilder.SaltShift).distinct.sorted.toSeq
+      assert(table.get(f, t).get.buckets === salts, s"$name: $f:$t")
     }
   }
 
   test("term table equals the dictionary and block ranges: built, loaded, appended, delete view") {
+    // the block ranges enter as their salt buckets: distinct firstDocId >>> SaltShift
     assertTableMatches("built", built)
     val dir = Files.createTempDirectory("graft-termtable").toString
     built.save(dir)
     assertTableMatches("loaded", IndexBuilder.load(spark, dir))
     // the appended segment starts at the next salt bucket, so terms of both
-    // segments carry ranges in two buckets
+    // segments lie in two buckets
     val more = CodeCorpus.generate(spark, 50, 2).withColumn("commit", lit("appended"))
     val appended = built.append(more)
     assertTableMatches("appended", appended)
-    assert(appended.termTable.get("content", "def").get.ranges.map(_._1).exists(_ >= 8192L))
+    assert(appended.termTable.get("content", "def").get.buckets === Seq(0L, 1L))
     // a delete view keeps the base's statistics: it shares the base's table
     val deleted = built.withDeletes(built.docs.filter(col("lang") === "py").select("docId"))
     assertTableMatches("withDeletes", deleted)
