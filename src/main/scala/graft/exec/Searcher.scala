@@ -638,12 +638,6 @@ class Searcher(val index: Index) extends Serializable {
 
   // ----------------------------------------------------------------- search
 
-  /** When true, pure term-disjunction top-k routes through the block-max
-    * WAND evaluator instead of exhaustive scoring (rank-identical; prunes
-    * non-competitive blocks undecoded).
-    */
-  var wandEnabled = true
-
   /** Blocks DECODED by WAND executions (pruning evidence: compare against
     * the query terms' total block count). Accumulates across queries;
     * `reset()` before a measurement.
@@ -779,7 +773,7 @@ class Searcher(val index: Index) extends Serializable {
     * tops are merged on the driver (≤ partitions × k rows — metadata-scale).
     */
   def searchHits(q: Query, k: Int = 10): SearchHits = {
-    if (wandEnabled && k > 0) {
+    if (k > 0) {
       wandable(q).foreach { case (f, wts0, tie) =>
         if (wts0.nonEmpty) {
           val (weights, avgdl) = bm25Weights(f, wts0)
@@ -805,11 +799,14 @@ class Searcher(val index: Index) extends Serializable {
   /** Top-k search (reference IndexSearcher.search, indexers.py:401-432).
     * Relevance: score desc, docId asc (Lucene collector order) →
     * TakeOrderedAndProject. Field sort: join the tiny match set to docvalue
-    * columns. `k <= 0` retrieves all hits (count=None semantics).
+    * columns. `k <= 0` retrieves all hits (count=None semantics). A
+    * relevance top-k of a WAND-able shape (see [[wandable]]) runs block-max
+    * WAND, rank- and score-identical to
+    * `eval(q).orderBy(score desc, docId asc).limit(k)`.
     */
   def search(q: Query, k: Int = 10, sorts: Seq[SortSpec] = Nil,
       select: Seq[String] = Nil): DataFrame = {
-    if (wandEnabled && k > 0 && sorts.isEmpty && select.isEmpty) {
+    if (k > 0 && sorts.isEmpty && select.isEmpty) {
       wandable(q).foreach { case (f, wts, tie) =>
         if (wts.nonEmpty) return searchWand(f, wts, k, tie)
       }
@@ -832,11 +829,17 @@ class Searcher(val index: Index) extends Serializable {
   /** Stored document by id (reference `searcher[id]`, indexers.py Document
     * access): the doc-store row with docvalue updates applied, None for an
     * unknown or tombstoned id. `fields` selects columns (Hits.select-style
-    * late materialization); empty = all stored columns.
+    * late materialization); empty = all stored columns. The id filter is
+    * one `InSet` over a `HashSet` (as in [[rareCoveragePruner]]), so the
+    * id never enters generated code and every fetch reuses one plan's
+    * compiled classes.
     */
   def doc(docId: Long, fields: Seq[String] = Nil): Option[org.apache.spark.sql.Row] = {
-    if (index.deletes.exists(d => !d.filter(col("docId") === docId).isEmpty)) return None
-    val base = index.docs.filter(col("docId") === docId)
+    import org.apache.spark.sql.graft.ColumnBridge
+    val isId = ColumnBridge.column(org.apache.spark.sql.catalyst.expressions.InSet(
+      ColumnBridge.expression(col("docId")), scala.collection.immutable.HashSet[Any](docId)))
+    if (index.deletes.exists(d => !d.filter(isId).isEmpty)) return None
+    val base = index.docs.filter(isId)
     val projected =
       if (fields.isEmpty) base else base.select(fields.map(graft.index.Cols.qcol): _*)
     projected.collect().headOption

@@ -1,113 +1,64 @@
 package graft.index
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Resumable, checkpointed index build (north_rule): the corpus is split
-  * into docId-range *segments*; each segment's posting blocks are built and
-  * committed as an independent, atomic parquet directory (`_SUCCESS`
-  * marker), with a lineage + metrics row (docs indexed, postings written,
-  * bytes compressed, build seconds) appended to the `segments` table. A
-  * re-run skips committed segments and finishes the rest — mirroring the
-  * reference's durable commit/segment architecture
-  * (/root/reference/lupyne/engine/indexers.py:603-611, segments surface at
-  * indexers.py:127-134) re-expressed as idempotent Spark jobs.
+  * into docId-range *segments* of the [[Segments]] store, each built and
+  * published on its own, with a lineage + metrics row (docs indexed,
+  * postings written, bytes compressed, build seconds). A re-run skips
+  * committed segments and finishes the rest — the reference's durable
+  * commit/segment architecture (lupyne `engine/indexers.py:603-611`,
+  * segments surface at `indexers.py:127-134`) re-expressed as idempotent
+  * Spark jobs. The directory is the format an [[Indexer]] opens and
+  * commits onto.
   *
   * Because posting blocks are closed 128-doc units and segments are disjoint
   * docId ranges, per-segment outputs concatenate into a valid index with no
-  * merge pass; queries read all segments as one blocks table.
+  * merge pass; queries read all live segments as one blocks table.
   */
 object CheckpointedBuild {
-
-  /** One lineage row. `maxDocId` closes the segment's covering docId
-    * interval [firstDocId, maxDocId]: dense `firstDocId + docsIndexed − 1`
-    * for an appended segment, max of the sources' intervals for a merged one
-    * (whose docIds keep their original values, with gaps where tombstoned
-    * docs purged) — so tombstone→segment discovery is a metadata interval
-    * lookup, never a corpus scan (see Indexer.forceMergeDeletes).
-    */
-  final case class SegmentMeta(segmentId: Int, firstDocId: Long, docsIndexed: Long,
-      postingsWritten: Long, bytesCompressed: Long, buildSec: Double, status: String,
-      maxDocId: Long)
-
-  /** (postingsWritten, bytesCompressed) of one committed segment's blocks —
-    * the single definition both the checkpointed and streaming writers use.
-    */
-  def segmentMetrics(blocks: DataFrame): (Long, Long) = {
-    val m = blocks.agg(
-      sum(when(col("term") =!= "", col("numDocs")).otherwise(0L)),
-      sum(length(col("docsBlob")) + length(col("freqsBlob")) +
-        length(col("normsBlob")) + length(col("positionsBlob")) +
-        length(col("payloadsBlob")) + length(col("offsetsBlob"))).cast("long"))
-      .collect()(0)
-    (if (m.isNullAt(0)) 0L else m.getLong(0), if (m.isNullAt(1)) 0L else m.getLong(1))
-  }
 
   def build(source: DataFrame, schema: IndexSchema, dir: String,
       segments: Int = 8, numPartitions: Int = 0): Index = {
     val spark = source.sparkSession
-    import spark.implicits._
     val parts =
       if (numPartitions > 0) numPartitions
       else spark.conf.get("spark.sql.shuffle.partitions").toInt
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def committed(p: String): Boolean = fs.exists(new Path(p, "_SUCCESS"))
 
-    // Stage 1: doc store (docIds + sha256), committed once.
-    val docsDir = s"$dir/docs"
-    if (!committed(docsDir)) {
+    // Stage 1: ONE global docId assignment (docIds are dense in key order),
+    // written once as `docs/segment=k`, k = docId / segment size; its
+    // `_SUCCESS` marks the stage done.
+    val docsDir = new Path(s"$dir/docs")
+    if (!fs.exists(new Path(docsDir, "_SUCCESS"))) {
+      val segSize = math.max(1L, (source.count() + segments - 1) / segments)
       IndexBuilder.prepareDocs(source, schema, parts)
-        .repartitionByRange(parts, col("docId")).sortWithinPartitions("docId")
-        .write.mode("overwrite").parquet(docsDir)
-    }
-    val docs = spark.read.parquet(docsDir)
-    val total = docs.count()
-    val segSize = math.max(1L, (total + segments - 1) / segments)
-
-    // Stage 2: per-segment posting blocks, idempotent + metered.
-    for (k <- 0 until segments) {
-      val segDir = s"$dir/postings/segment=$k"
-      if (!committed(segDir)) {
-        val t0 = System.nanoTime()
-        val lo = k * segSize
-        val hi = math.min(total, (k + 1) * segSize)
-        val slice = docs.filter(col("docId") >= lo && col("docId") < hi)
-        val blocks = IndexBuilder.blocksOf(IndexBuilder.tokensOf(slice, schema), schema, parts)
-        blocks.write.mode("overwrite").parquet(segDir)
-        val sec = (System.nanoTime() - t0) / 1e9
-        // metrics from the committed (compressed) blocks — cheap re-read
-        val (nPostings, nBytes) = segmentMetrics(spark.read.parquet(segDir))
-        val meta = SegmentMeta(k, lo, hi - lo, nPostings, nBytes, sec, "committed",
-          maxDocId = hi - 1) // docIds are dense within a checkpointed slice
-        spark.createDataset(Seq(meta)).write.mode("append").parquet(s"$dir/segments")
-      }
+        .withColumn("segment", (col("docId") / segSize).cast("int"))
+        .repartitionByRange(parts, col("docId")).sortWithinPartitions("segment", "docId")
+        .write.mode("overwrite").partitionBy("segment").parquet(docsDir.toString)
     }
 
-    // Stage 3: derived term dictionary + stats + manifest.
-    val blocks = {
-      import spark.implicits._
-      // schema-merged read: a resumed build may mix segments written by a
-      // pre-payloads layout with fresh ones (see IndexBuilder.readPostings)
-      IndexBuilder.readPostings(spark, s"$dir/postings")
-        .select("field", "term", "firstDocId", "lastDocId", "numDocs", "maxTf", "sumTf",
-          "minDlq", "docsBlob", "freqsBlob", "normsBlob", "positionsBlob", "payloadsBlob", "offsetsBlob")
-        .as[PostingBlock]
+    // Stage 2: each docs slice becomes a segment, published on its own. A
+    // slice is done only when the lineage names it AND its postings are on
+    // disk: a crash between write and publish, or a lost directory, is
+    // rebuilt.
+    val published = Segments.lineage(spark, dir).rows.map(_.segmentId).toSet
+    val slices = fs.listStatus(docsDir).map(_.getPath.getName)
+      .collect { case s"segment=$k" => k.toInt }.sorted
+    // an empty corpus writes no slice: nothing to publish or open
+    if (slices.isEmpty) return IndexBuilder.build(source, schema, parts)
+    val todo = slices.filterNot(k => published(k) && fs.exists(new Path(s"$dir/postings/segment=$k")))
+    // every slice's extent in one aggregate, not one job per slice
+    val extents = if (todo.isEmpty) Map.empty[Int, (Long, Long, Long)]
+      else spark.read.parquet(docsDir.toString).groupBy("segment")
+        .agg(Segments.extentCols.head, Segments.extentCols.tail: _*).collect()
+        .map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
+    todo.foreach { k =>
+      Segments.publish(spark, dir, Seq(Segments.write(spark, dir, k, Segments.Committed, None,
+        extents.get(k))(docs => IndexBuilder.blocksOf(IndexBuilder.tokensOf(docs, schema), schema, parts))))
     }
-    val termDictDir = s"$dir/termdict"
-    if (!committed(termDictDir)) {
-      IndexBuilder.termDictOf(blocks)
-        .repartitionByRange(parts, col("field"), col("term"))
-        .sortWithinPartitions("field", "term")
-        .write.mode("overwrite").parquet(termDictDir)
-    }
-    val termDict = spark.read.parquet(termDictDir)
-    val stats = IndexBuilder.fieldStatsOf(blocks)
-    IndexManifest.write(spark, s"$dir/manifest", IndexManifest(schema, stats))
-    new Index(spark, schema, docs, blocks, termDict, stats)
+    Segments.open(spark, dir, schema)
   }
-
-  /** Lineage + metrics table for a checkpointed index. */
-  def segmentsTable(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/segments")
 }

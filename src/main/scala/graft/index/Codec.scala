@@ -239,6 +239,23 @@ object PostingCodec {
     out
   }
 
+  /** Decode `b` and assert its block invariants: posting count, skip
+    * pointers (first/last docId), strictly ascending docIds and the
+    * block-max metadata (maxTf, sumTf). Throws on the first violation.
+    */
+  def checkBlock(b: PostingBlock): Unit = {
+    val ps = decodeBlock(b, withPositions = true)
+    require(ps.length == b.numDocs, s"numDocs mismatch in ${b.field}:${b.term}")
+    require(ps.head.docId == b.firstDocId && ps.last.docId == b.lastDocId,
+      s"skip-pointer mismatch in ${b.field}:${b.term}")
+    ps.sliding(2).foreach {
+      case Array(a, c) => require(a.docId < c.docId, "non-monotone docIds")
+      case _           =>
+    }
+    require(ps.map(_.tf).max == b.maxTf && ps.map(_.tf.toLong).sum == b.sumTf,
+      s"block-max metadata mismatch in ${b.field}:${b.term}")
+  }
+
   /** Decode a block. `withPositions=false` skips position materialization;
     * `withPayloads`/`withOffsets` additionally materialize per-position
     * payloads / (start, end) character offsets.

@@ -262,16 +262,7 @@ final class Index private[index] (
   def check(): (Long, Long) = {
     import spark.implicits._
     val perBlock = blocks.map { b =>
-      val ps = PostingCodec.decodeBlock(b, withPositions = true)
-      require(ps.length == b.numDocs, s"numDocs mismatch in ${b.field}:${b.term}")
-      require(ps.head.docId == b.firstDocId && ps.last.docId == b.lastDocId,
-        s"skip-pointer mismatch in ${b.field}:${b.term}")
-      ps.sliding(2).foreach {
-        case Array(a, c) => require(a.docId < c.docId, "non-monotone docIds")
-        case _           =>
-      }
-      require(ps.map(_.tf).max == b.maxTf && ps.map(_.tf.toLong).sum == b.sumTf,
-        s"block-max metadata mismatch in ${b.field}:${b.term}")
+      PostingCodec.checkBlock(b)
       (b.field, b.term, b.numDocs.toLong, b.sumTf)
     }.toDF("field", "term", "n", "tf")
     val fromBlocks = perBlock.filter(col("term") =!= "").groupBy("field", "term")
@@ -475,11 +466,16 @@ object IndexBuilder {
 
   private val postingEncoder = org.apache.spark.sql.Encoders.product[PostingBlock]
 
-  /** The [[PostingBlock]] columns alone (a loaded index's blocks also carry
-    * the stored salt column).
+  /** The [[PostingBlock]] columns of `df` alone, typed: drops a saved
+    * index's stored salt column and a segment store's `segment` column.
     */
-  def unsalted(blocks: Dataset[PostingBlock]): Dataset[PostingBlock] =
-    blocks.select(postingEncoder.schema.fieldNames.toSeq.map(col): _*).as(postingEncoder)
+  def asBlocks(df: DataFrame): Dataset[PostingBlock] =
+    df.select(postingEncoder.schema.fieldNames.toSeq.map(col): _*).as(postingEncoder)
+
+  /** [[asBlocks]] of a typed blocks table (a loaded index's blocks also
+    * carry the stored salt column).
+    */
+  def unsalted(blocks: Dataset[PostingBlock]): Dataset[PostingBlock] = asBlocks(blocks.toDF())
 
   /** First docId of the next salt bucket at or after `id` — segment offsets
     * must be bucket multiples so rebased blocks stay bucket-aligned (docIds
@@ -673,8 +669,8 @@ object IndexBuilder {
 
   /** Backfill blob columns absent from postings persisted by layouts that
     * predate them (payloads/offsets) — read-compat mirrors the manifest
-    * parser's tolerance of old field lines. Reads must use
-    * [[readPostings]] (mergeSchema): a mixed-version postings dir read
+    * parser's tolerance of old field lines. Reads must merge schemas
+    * (as [[Segments.read]] does): a mixed-version postings dir read
     * without schema merging infers the schema from ONE nondeterministically
     * chosen footer, so new segments' payload/offset blobs could silently
     * vanish (or old rows read null) depending on file listing order. Rows
@@ -685,10 +681,6 @@ object IndexBuilder {
     Seq("payloadsBlob", "offsetsBlob").foldLeft(df)((d, c) =>
       if (d.columns.contains(c)) d.withColumn(c, coalesce(col(c), lit(Array.empty[Byte])))
       else d.withColumn(c, lit(Array.empty[Byte])))
-
-  /** Schema-merged postings read — see [[withBlobDefaults]]. */
-  def readPostings(spark: SparkSession, path: String): DataFrame =
-    withBlobDefaults(spark.read.option("mergeSchema", "true").parquet(path))
 
   /** Open an index written by [[Index.save]]. When the manifest records a
     * bucket count, `postings/` and `deletes/` load as bucketed relations

@@ -9,7 +9,6 @@ import org.apache.spark.sql.types.StructType
 
 import graft.exec.Searcher
 import graft.query.Query
-import graft.streaming.StreamingIndexer
 
 /** Writer + searcher facade with the reference's UX
   * (engine.Indexer: add → commit → search; delete/update;
@@ -17,9 +16,9 @@ import graft.streaming.StreamingIndexer
   * one atomic segment per commit; deletes persist as a tombstone table and
   * apply on open; `refresh()` re-resolves the latest committed view.
   *
-  * This is the small-batch/driver-side door into the same segment machinery
-  * the bulk paths use ([[IndexBuilder]], [[CheckpointedBuild]],
-  * [[graft.streaming.StreamingIndexer]]).
+  * This is the small-batch/driver-side door into the [[Segments]] store
+  * that [[CheckpointedBuild]] also writes: a checkpointed directory opens
+  * (and takes commits) here.
   */
 /** A pinned commit: the segment ids, delete part-files, and docvalue-update
   * generations visible when [[Indexer.snapshot]] ran. Appends only ever ADD
@@ -74,8 +73,8 @@ final class Indexer(
 
   // ---------------------------------------------------------------- locking
   // ONE writer per directory for the handle's whole lifetime (Lucene
-  // write.lock): two writers racing nextSegId would both claim the same
-  // segment id and interleave lineage. Readers (readOnly = true — the
+  // write.lock): two writers would both claim the next segment id and
+  // interleave lineage. Readers (readOnly = true — the
   // reference's IndexSearcher-on-a-directory posture) never lock; they see
   // committed state only. The atomicity point is scheme-dependent: on a
   // local `file:` store, Hadoop's create(overwrite = false) is an
@@ -171,7 +170,7 @@ final class Indexer(
     * operation order (delete-then-add) is preserved across the spill.
     * 0 (the default) disables auto-flush (explicit commit() only). The
     * facade is the small-batch door — bulk ingest belongs to IndexBuilder/
-    * CheckpointedBuild/StreamingIndexer, which never buffer on the driver.
+    * CheckpointedBuild, which never buffer on the driver.
     *
     * OPT-IN because the spill is a DURABLE commit, not a Lucene flush: once
     * one fires, [[rollback]] can no longer discard the spilled docs or the
@@ -341,11 +340,6 @@ final class Indexer(
     fs.create(new Path(out, "_COALESCED"), true).close()
   }
 
-  private def nextSegId: Long =
-    if (!fs.exists(new Path(s"$dir/segments"))) 0L
-    else spark.read.parquet(s"$dir/segments").agg(max(col("segmentId")))
-      .collect()(0).getInt(0).toLong + 1L
-
   /** Durably commit buffered adds (one segment) and queued deletes. */
   def commit(): Unit = {
     ensureWritable()
@@ -355,7 +349,7 @@ final class Indexer(
     // delete-by-query never materializes on the driver. Writing them BEFORE
     // the segment append is equivalent (new docs cannot match a pre-add
     // view) and keeps the resolution snapshot unambiguous.
-    if (pendingDeletes.nonEmpty && fs.exists(new Path(s"$dir/segments"))) {
+    if (pendingDeletes.nonEmpty && Segments.exists(spark, dir)) {
       val s = committedSearcher
       val ids = pendingDeletes.map(q => s.eval(q).select("docId"))
         .reduce(_ unionByName _).distinct()
@@ -365,7 +359,7 @@ final class Indexer(
     if (buf.nonEmpty) {
       val df = spark.createDataFrame(
         spark.sparkContext.parallelize(buf.toSeq, math.max(1, buf.size / 10000)), sourceSchema)
-      StreamingIndexer.appendSegment(df, schema, dir, nextSegId)
+      Segments.append(df, schema, dir)
       buf.clear()
     }
     pendingDeletes.clear()
@@ -404,10 +398,10 @@ final class Indexer(
       throw new java.io.IOException(
         s"$dir has an unfinished vacuumDeletes() (.deletes-vacuum-inflight marker " +
           "present) — restore deletes/ from .deletes-old before opening")
-    if (!fs.exists(new Path(s"$dir/segments")))
+    if (!Segments.exists(spark, dir))
       return new Searcher(IndexBuilder.build(
         spark.createDataFrame(spark.sparkContext.emptyRDD[Row], sourceSchema), schema))
-    val base = StreamingIndexer.open(spark, dir, schema)
+    val base = Segments.open(spark, dir, schema)
     val withDv = new Index(spark, base.schema, applyDvUpdates(base.docs), base.blocks,
       base.termDict, base.fieldStats)
     val idx =
@@ -483,8 +477,8 @@ final class Indexer(
     val src = rows.select(sourceSchema.fieldNames.map(Cols.qcol): _*)
     val tmp = s"$dir/.compact-tmp"
     fs.delete(new Path(tmp), true)
-    StreamingIndexer.appendSegment(src, schema, tmp, 0L)
-    val built = fs.exists(new Path(s"$tmp/segments")) // empty index ⇒ nothing written
+    Segments.append(src, schema, tmp)
+    val built = Segments.exists(spark, tmp) // empty index ⇒ nothing written
     // The old commit is ARCHIVED, never deleted: snapshot() pins stay valid
     // across compaction (Lucene SnapshotDeletionPolicy semantics) until an
     // explicit vacuum(). Every move is a checked rename — a false return or a
@@ -517,33 +511,7 @@ final class Indexer(
 
   // ---------------------------------------------------------------- merging
 
-  /** Live lineage: (segmentId, firstDocId, docsIndexed, bytesCompressed,
-    * maxDocId) of every segment the committed view serves, ascending by id.
-    * `maxDocId` closes the segment's covering docId interval (see
-    * [[CheckpointedBuild.SegmentMeta]]); lineage rows written before the
-    * column existed fall back to the dense extent for appended segments and
-    * Long.MaxValue (conservative: always a discovery candidate) for merged
-    * ones, whose extent the old rows cannot reconstruct.
-    */
-  private def liveSegmentMeta: Seq[(Long, Long, Long, Long, Long)] = {
-    if (!fs.exists(new Path(s"$dir/segments"))) return Seq.empty
-    val live = StreamingIndexer.liveSegmentIds(spark, dir).toSet
-    val raw = spark.read.parquet(s"$dir/segments")
-    val legacyMax = when(col("status") === "merged", lit(Long.MaxValue))
-      .otherwise(col("firstDocId") + col("docsIndexed") - 1L)
-    val maxCol =
-      if (raw.columns.contains("maxDocId")) coalesce(col("maxDocId"), legacyMax)
-      else legacyMax
-    raw
-      .filter(col("status") =!= "superseded")
-      .groupBy("segmentId")
-      .agg(min("firstDocId").as("f"), max("docsIndexed").as("d"),
-        max("bytesCompressed").as("b"), max(maxCol).as("m"))
-      .collect()
-      .map(r => (r.getInt(0).toLong, r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-      .filter(t => live.contains(t._1))
-      .sortBy(_._1).toSeq
-  }
+  private def lineage: Segments.Lineage = Segments.lineage(spark, dir)
 
   /** Lucene forceMerge(maxSegments) (reference `commit(merge=N)`,
     * indexers.py:648-661): fold the SMALLEST live segments (by compressed
@@ -557,9 +525,11 @@ final class Indexer(
   def forceMerge(maxSegments: Int): Unit = {
     ensureWritable()
     require(maxSegments >= 1, s"maxSegments must be >= 1 (got $maxSegments)")
-    val live = liveSegmentMeta
+    val l = lineage
+    val live = l.live
     if (live.length <= maxSegments) return
-    mergeSegments(live.sortBy(m => (m._4, m._1)).take(live.length - maxSegments + 1))
+    mergeSegments(l, live.sortBy(m => (m.bytesCompressed, m.segmentId))
+      .take(live.length - maxSegments + 1))
   }
 
   /** Lucene forceMergeDeletes (reference `commit(merge=True)`): fold every
@@ -583,9 +553,9 @@ final class Indexer(
     ensureWritable()
     lastDeleteDiscoveryCandidates = Seq.empty
     if (!fs.exists(new Path(s"$dir/deletes"))) return
-    val live = liveSegmentMeta
+    val l = lineage
+    val live = l.live
     if (live.isEmpty) return
-    import spark.implicits._
     val del = spark.read.parquet(s"$dir/deletes").select("docId").distinct()
     // Discovery WITHOUT a corpus scan: the lineage already knows each live
     // segment's covering docId interval [firstDocId, maxDocId], so candidates
@@ -596,20 +566,29 @@ final class Indexer(
     // tombstones stay in the table as vacuous no-ops), so a verify join runs
     // next — but partition-pruned to the CANDIDATE segment directories only,
     // keeping repeat calls idempotent without rescanning the index.
-    val intervals = live.map(m => (m._1, m._2, m._5)).toDF("segment", "__lo", "__hi")
-    val candidates = del
-      .join(broadcast(intervals), col("docId").between(col("__lo"), col("__hi")))
-      .select("segment").distinct()
-      .collect().map(_.getLong(0)).toSeq.sorted
+    val candidates = deleteCandidates(del, live)
     lastDeleteDiscoveryCandidates = candidates
     if (candidates.isEmpty) return
-    val affected = spark.read.option("mergeSchema", "true").parquet(s"$dir/docs")
-      .filter(col("segment").isin(candidates: _*)) // partition-pruned scan
+    val affected = Segments.read(spark, dir, "docs", candidates)
       .join(del, Seq("docId"))
       .select("segment").distinct()
       .collect().map(_.getAs[Number]("segment").longValue()).toSet
     if (affected.isEmpty) return
-    mergeSegments(live.filter(m => affected.contains(m._1)))
+    mergeSegments(l, live.filter(m => affected.contains(m.segmentId.toLong)))
+  }
+
+  /** Ids of the `live` segments whose lineage docId interval holds one of
+    * the tombstoned docIds `del`: a join against the broadcast interval
+    * list, never a corpus scan.
+    */
+  private def deleteCandidates(del: org.apache.spark.sql.DataFrame,
+      live: Seq[Segments.SegmentMeta]): Seq[Long] = {
+    import spark.implicits._
+    val intervals = live.map(m => (m.segmentId.toLong, m.firstDocId, m.maxDocId))
+      .toDF("segment", "__lo", "__hi")
+    del.join(broadcast(intervals), col("docId").between(col("__lo"), col("__hi")))
+      .select("segment").distinct()
+      .collect().map(_.getLong(0)).toSeq.sorted
   }
 
   /** Discovery evidence (tests/bench): the candidate segment ids the last
@@ -637,12 +616,11 @@ final class Indexer(
     */
   def vacuumMerged(outstandingPins: Seq[IndexPin] = Seq.empty): Seq[Long] = {
     ensureWritable()
-    if (!fs.exists(new Path(s"$dir/segments"))) return Seq.empty
-    val live = StreamingIndexer.liveSegmentIds(spark, dir).toSet
-    val all = spark.read.parquet(s"$dir/segments")
-      .select("segmentId").distinct().collect().map(_.getInt(0).toLong)
+    val l = lineage
+    val live = l.liveIds.toSet
     val pinned = outstandingPins.flatMap(_.segmentIds).toSet
-    val dead = all.filterNot(live).filterNot(pinned).sorted.toSeq
+    val dead = l.rows.map(_.segmentId.toLong).distinct
+      .filterNot(live).filterNot(pinned).sorted
     // report only ids actually reclaimed NOW (idempotent across calls —
     // a prior vacuum's ids stay dead in the lineage forever)
     dead.filter { id =>
@@ -681,24 +659,13 @@ final class Indexer(
     val current = fs.listStatus(delDir).map(_.getPath.getName).filterNot(_.startsWith("_")).toSet
     val pinnedFiles = outstandingPins.flatMap(_.deleteFiles).toSet
     if (current.exists(pinnedFiles.contains)) return -1L
-    import spark.implicits._
     val del = spark.read.parquet(s"$dir/deletes").select("docId").distinct()
     val total = del.count()
     if (total == 0L) return 0L
-    val live = liveSegmentMeta
-    val candidates =
-      if (live.isEmpty) Seq.empty[Long]
-      else {
-        val intervals = live.map(m => (m._1, m._2, m._5)).toDF("segment", "__lo", "__hi")
-        del.join(broadcast(intervals), col("docId").between(col("__lo"), col("__hi")))
-          .select("segment").distinct()
-          .collect().map(_.getLong(0)).toSeq.sorted
-      }
+    val candidates = deleteCandidates(del, lineage.live)
     val keep =
       if (candidates.isEmpty) del.limit(0)
-      else del.join(
-        spark.read.option("mergeSchema", "true").parquet(s"$dir/docs")
-          .filter(col("segment").isin(candidates: _*)).select("docId"), // partition-pruned
+      else del.join(Segments.read(spark, dir, "docs", candidates).select("docId"),
         Seq("docId"), "left_semi")
     val tmp = new Path(s"$dir/.deletes-tmp")
     fs.delete(tmp, true)
@@ -750,30 +717,14 @@ final class Indexer(
     */
   def check(repair: Boolean = false): CheckReport = {
     if (repair) ensureWritable()
-    val live = liveSegmentMeta
-    val results: Seq[((Long, Long, Long, Long, Long), Option[String])] = live.map { m =>
-      val id = m._1
+    val live = lineage.live
+    val results = live.map { m =>
       val err =
         try {
-          import spark.implicits._
-          IndexBuilder.withBlobDefaults(spark.read.parquet(s"$dir/postings/segment=$id"))
-            .select("field", "term", "firstDocId", "lastDocId", "numDocs", "maxTf", "sumTf",
-              "minDlq", "docsBlob", "freqsBlob", "normsBlob", "positionsBlob",
-              "payloadsBlob", "offsetsBlob")
-            .as[PostingBlock]
-            .foreach { b: PostingBlock =>
-              val ps = PostingCodec.decodeBlock(b, withPositions = true)
-              require(ps.length == b.numDocs, s"numDocs mismatch in ${b.field}:${b.term}")
-              require(ps.head.docId == b.firstDocId && ps.last.docId == b.lastDocId,
-                s"skip-pointer mismatch in ${b.field}:${b.term}")
-              ps.sliding(2).foreach {
-                case Array(a, c) => require(a.docId < c.docId, "non-monotone docIds")
-                case _           =>
-              }
-              require(ps.map(_.tf).max == b.maxTf && ps.map(_.tf.toLong).sum == b.sumTf,
-                s"block-max metadata mismatch in ${b.field}:${b.term}")
-            }
-          spark.read.parquet(s"$dir/docs/segment=$id").select("docId").count()
+          IndexBuilder.asBlocks(IndexBuilder.withBlobDefaults(
+            spark.read.parquet(s"$dir/postings/segment=${m.segmentId}")))
+            .foreach { b: PostingBlock => PostingCodec.checkBlock(b) }
+          spark.read.parquet(s"$dir/docs/segment=${m.segmentId}").select("docId").count()
           None
         } catch {
           case e: Throwable =>
@@ -781,30 +732,27 @@ final class Indexer(
         }
       (m, err)
     }
+    val ids = live.map(_.segmentId.toLong)
     val bad = results.collect { case (m, Some(e)) => (m, e) }
-    if (bad.isEmpty) return CheckReport(live.map(_._1), Seq.empty, 0L, Map.empty)
+    if (bad.isEmpty) return CheckReport(ids, Seq.empty, 0L, Map.empty)
     if (!repair)
       throw new java.io.IOException(
-        s"corrupt segments [${bad.map(_._1._1).mkString(",")}] in $dir — " +
+        s"corrupt segments [${bad.map(_._1.segmentId).mkString(",")}] in $dir — " +
           s"first failure: ${bad.head._2}; run check(repair = true) to exorcise them")
     bad.foreach { case (m, _) =>
       Seq("docs", "postings").foreach { sub =>
-        val src = new Path(s"$dir/$sub/segment=${m._1}")
+        val src = new Path(s"$dir/$sub/segment=${m.segmentId}")
         if (fs.exists(src)) {
           fs.mkdirs(new Path(s"$dir/corrupt/$sub"))
-          require(fs.rename(src, new Path(s"$dir/corrupt/$sub/segment=${m._1}")),
+          require(fs.rename(src, new Path(s"$dir/corrupt/$sub/segment=${m.segmentId}")),
             s"quarantine rename failed: $src")
         }
       }
     }
-    import spark.implicits._
-    val markers = bad.map { case (m, _) =>
-      CheckpointedBuild.SegmentMeta(m._1.toInt, 0L, 0L, 0L, 0L, 0.0, "superseded", 0L)
-    }
-    spark.createDataset(markers).coalesce(1).write.mode("append").parquet(s"$dir/segments")
+    Segments.publish(spark, dir, bad.map { case (m, _) => Segments.superseded(m.segmentId) })
     refresh()
-    CheckReport(live.map(_._1), bad.map(_._1._1), bad.map(_._1._3).sum,
-      bad.map { case (m, e) => m._1 -> e }.toMap)
+    CheckReport(ids, bad.map(_._1.segmentId.toLong), bad.map(_._1.docsIndexed).sum,
+      bad.map { case (m, e) => m.segmentId.toLong -> e }.toMap)
   }
 
   /** Fold the given segments into ONE new segment. docIds are global (each
@@ -824,27 +772,17 @@ final class Indexer(
     * an orphan directory that open() never serves (it reads live lineage
     * ids only) and that a retry overwrites.
     */
-  private def mergeSegments(metas: Seq[(Long, Long, Long, Long, Long)]): Unit = {
+  private def mergeSegments(l: Segments.Lineage, metas: Seq[Segments.SegmentMeta]): Unit = {
     require(metas.nonEmpty)
     import spark.implicits._
-    val ids = metas.map(_._1)
-    val newId = nextSegId
-    val t0 = System.nanoTime()
+    val ids = metas.map(_.segmentId.toLong)
     val delOpt =
       if (fs.exists(new Path(s"$dir/deletes")))
         Some(spark.read.parquet(s"$dir/deletes").select("docId").distinct())
       else None
-    val docs0 = spark.read.option("mergeSchema", "true").parquet(s"$dir/docs")
-      .filter(col("segment").isin(ids: _*)).drop("segment")
+    val docs0 = Segments.read(spark, dir, "docs", ids).drop("segment")
     val docs = delOpt.fold(docs0)(d => docs0.join(d, Seq("docId"), "left_anti"))
-    docs.write.mode("overwrite").parquet(s"$dir/docs/segment=$newId")
-
-    val blockCols = Seq("field", "term", "firstDocId", "lastDocId", "numDocs", "maxTf",
-      "sumTf", "minDlq", "docsBlob", "freqsBlob", "normsBlob", "positionsBlob",
-      "payloadsBlob", "offsetsBlob")
-    val blocks0 = IndexBuilder.readPostings(spark, s"$dir/postings")
-      .filter(col("segment").isin(ids: _*))
-      .select(blockCols.map(col): _*)
+    val blocks0 = Segments.blocks(spark, dir, ids)
     val blocks = delOpt.fold(blocks0) { d =>
       val delB = d
         .groupBy(shiftrightunsigned(col("docId"), IndexBuilder.SaltShift).as("bucket"))
@@ -852,7 +790,7 @@ final class Indexer(
       blocks0
         .withColumn("bucket", shiftrightunsigned(col("firstDocId"), IndexBuilder.SaltShift))
         .join(delB, Seq("bucket"), "left")
-        .select(struct(blockCols.map(col): _*).as("b"), col("dels"))
+        .select(struct(blocks0.columns.toSeq.map(col): _*).as("b"), col("dels"))
         .as[(PostingBlock, Array[Long])]
         .flatMap { case (b, dels) =>
           if (dels == null || dels.isEmpty) Iterator.single(b)
@@ -865,20 +803,13 @@ final class Indexer(
             else Iterator.single(PostingCodec.encodeBlock(b.field, b.term, keep.toSeq))
           }
         }
-        .toDF(blockCols: _*)
     }
-    blocks.write.mode("overwrite").parquet(s"$dir/postings/segment=$newId")
-
-    val n = spark.read.parquet(s"$dir/docs/segment=$newId").count()
-    val (np, nb) = CheckpointedBuild.segmentMetrics(
-      spark.read.parquet(s"$dir/postings/segment=$newId"))
-    val rows = CheckpointedBuild.SegmentMeta(newId.toInt, metas.map(_._2).min, n, np, nb,
-        (System.nanoTime() - t0) / 1e9, "merged",
-        maxDocId = metas.map(_._5).max) +: // union of source intervals, metadata-only
-      ids.map(id => CheckpointedBuild.SegmentMeta(id.toInt, 0L, 0L, 0L, 0L, 0.0, "superseded", 0L))
-    // ONE append publishes the merge atomically (merged row + all markers in
-    // a single part-file): readers see the fold entirely or not at all
-    spark.createDataset(rows).coalesce(1).write.mode("append").parquet(s"$dir/segments")
+    val merged = Segments.write(spark, dir, l.nextId, Segments.Merged, Some(docs))(_ => blocks)
+      // the union of the source intervals, metadata-only
+      .copy(firstDocId = metas.map(_.firstDocId).min, maxDocId = metas.map(_.maxDocId).max)
+    // ONE publish commits the merge (merged row + all markers in a single
+    // part-file): readers see the fold entirely or not at all
+    Segments.publish(spark, dir, merged +: metas.map(m => Segments.superseded(m.segmentId)))
     refresh()
   }
 
@@ -910,9 +841,7 @@ final class Indexer(
       if (!fs.exists(p)) Seq.empty
       else fs.listStatus(p).map(_.getPath.getName).filterNot(_.startsWith("_")).sorted.toSeq
     }
-    val segs =
-      if (!fs.exists(new Path(s"$dir/segments"))) Seq.empty[Long]
-      else StreamingIndexer.liveSegmentIds(spark, dir).sorted // merged-away dirs stay pinned via old pins only
+    val segs = lineage.liveIds // merged-away dirs stay pinned via old pins only
     // epoch = the archive generation the NEXT compact would move this commit
     // to; segment ids restart per compaction, so the epoch disambiguates a
     // pre-compact pin's segment=0 from a post-compact live segment=0
@@ -961,10 +890,9 @@ final class Indexer(
     // keep only the pinned segments' COMMIT rows: a "superseded" marker is
     // a post-pin merge publishing — copying it would make the destination
     // read its own pinned segments as dead (and open empty)
-    spark.read.parquet(resolve("segments").toString)
-      .filter(col("segmentId").isin(pin.segmentIds.map(_.toInt): _*) &&
-        col("status") =!= "superseded")
-      .write.mode("overwrite").parquet(s"$dst/segments")
+    val pinned = pin.segmentIds.toSet
+    Segments.publish(spark, dst, Segments.lineage(spark, resolve("segments").getParent.toString)
+      .rows.filter(m => pinned(m.segmentId.toLong) && m.status != Segments.Superseded))
   }
 
   /** Re-resolve the serving view; for NRT, also capture the current buffer
@@ -974,15 +902,7 @@ final class Indexer(
     * `indexer.segments`, tests/test_engine.py:673,684 — observable proof
     * that docvalue-only updates do NOT write segments).
     */
-  def segments: Map[Int, Long] = {
-    if (!fs.exists(new Path(s"$dir/segments"))) return Map.empty
-    val live = StreamingIndexer.liveSegmentIds(spark, dir).map(_.toInt).toSet
-    spark.read.parquet(s"$dir/segments")
-      .filter(col("status") =!= "superseded")
-      .groupBy("segmentId").agg(max("docsIndexed").as("d"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1))
-      .filter(kv => live.contains(kv._1)).toMap
-  }
+  def segments: Map[Int, Long] = lineage.sizes
 
   def refresh(): Unit = {
     if (nrt) { nrtBuf = buf.toList; nrtDeletes = pendingDeletes.toList }
@@ -991,7 +911,7 @@ final class Indexer(
 
   def count(q: Query): Long = searcher.count(q)
   def search(q: Query, k: Int = 10) = searcher.search(q, k)
-  def version: Long = StreamingIndexer.version(spark, dir)
+  def version: Long = lineage.version
 
   /** Wall-clock of the last durable commit, epoch seconds (reference
     * IndexReader.timestamp, indexers.py:117-126 — Lucene reads the commit's

@@ -77,7 +77,7 @@ class IndexerFacadeSpec extends SparkTestBase {
     w.add("repo" -> "r", "path" -> "p1", "commit" -> "c", "lang" -> "de", "content" -> "alpha gamma")
     w.commit()
     val before = postingFiles(dir)
-    val segsBefore = spark.read.parquet(s"$dir/segments").count()
+    val segsBefore = Segments.lineage(spark, dir).rows.length
 
     // 'lang' rides in the doc store but is INDEXED → must be rejected
     intercept[IllegalArgumentException] {
@@ -90,7 +90,7 @@ class IndexerFacadeSpec extends SparkTestBase {
     // 'note' is a pure docvalue column → fast path
     w.updateDocValues(Term("content", "beta"), "note" -> "n999")
     assert(postingFiles(dir) === before) // no reindex, byte-identical postings
-    assert(spark.read.parquet(s"$dir/segments").count() === segsBefore) // no new segment
+    assert(Segments.lineage(spark, dir).rows.length === segsBefore) // no new segment
     val vals = w.searcher.index.docs.orderBy("docId").select("note").collect().map(_.getString(0))
     assert(vals.toSeq === Seq("n999", null)) // p0 matched 'beta'
     // sort over the updated docvalue sees the new value

@@ -7,7 +7,6 @@ import org.apache.spark.sql.types._
 
 import graft.index._
 import graft.query._
-import graft.streaming.StreamingIndexer
 
 /** Incremental segment merging — Lucene forceMerge(N) / forceMergeDeletes
   * (reference `Indexer.commit(merge=)`, indexers.py:648-661): folding must
@@ -44,13 +43,13 @@ class MergeSpec extends SparkTestBase {
       for (d <- 0 to s) addDoc(w, s"p$s-$d", s"alpha seg$s common term$d data")
       w.commit()
     }
-    assert(StreamingIndexer.liveSegmentIds(spark, dir).length === 4)
+    assert(Segments.lineage(spark, dir).liveIds.length === 4)
     val v0 = w.version
     val before = (w.count(AllDocs), w.count(Term("content", "alpha")),
       hits(w, Term("content", "common")), hits(w, Term("content", "seg2")))
 
     w.forceMerge(2)
-    assert(StreamingIndexer.liveSegmentIds(spark, dir).length === 2)
+    assert(Segments.lineage(spark, dir).liveIds.length === 2)
     assert(w.segments.size === 2)
     assert(w.version > v0) // monotone: the merged segment is a new id
     val after = (w.count(AllDocs), w.count(Term("content", "alpha")),
@@ -75,9 +74,9 @@ class MergeSpec extends SparkTestBase {
     // the HIT SET stays right
     assert(hits(r, Term("content", "seg2")).map(_._1) === before._4.map(_._1))
     // noop below the target count
-    val liveNow = StreamingIndexer.liveSegmentIds(spark, dir).length
+    val liveNow = Segments.lineage(spark, dir).liveIds.length
     r.forceMerge(liveNow)
-    assert(StreamingIndexer.liveSegmentIds(spark, dir).length === liveNow)
+    assert(Segments.lineage(spark, dir).liveIds.length === liveNow)
     r.close()
   }
 
@@ -96,13 +95,13 @@ class MergeSpec extends SparkTestBase {
 
     w.forceMergeDeletes()
     // every segment held deletes ⇒ one merged segment
-    assert(StreamingIndexer.liveSegmentIds(spark, dir).length === 1)
+    assert(Segments.lineage(spark, dir).liveIds.length === 1)
     assert(w.count(AllDocs) === 20L)
     assert(w.count(Term("content", "drop")) === 0L)
 
     // physical purge: the merged docs dir has no tombstoned rows, and the
     // blocks shed them too (the sentinel term "" counts docs per field)
-    val mergedId = StreamingIndexer.liveSegmentIds(spark, dir).head
+    val mergedId = Segments.lineage(spark, dir).liveIds.head
     val rawDocs = spark.read.parquet(s"$dir/docs/segment=$mergedId")
     assert(rawDocs.count() === 20L)
     val sentinelDocs = spark.read.parquet(s"$dir/postings/segment=$mergedId")
@@ -136,7 +135,7 @@ class MergeSpec extends SparkTestBase {
     val pin = w.snapshot() // pins the two pre-merge segments
     addDoc(w, "p2", "alpha three")
     w.commit(merge = 1) // reference commit(merge=N): fold everything live
-    assert(StreamingIndexer.liveSegmentIds(spark, dir).length === 1)
+    assert(Segments.lineage(spark, dir).liveIds.length === 1)
     assert(w.count(Term("content", "alpha")) === 3L)
     // the pinned (superseded) segment dirs are still on disk — copy() works
     val dst = Files.createTempDirectory("graft-mergepin-dst").toString
@@ -146,7 +145,7 @@ class MergeSpec extends SparkTestBase {
     // merge=0 is the reference's falsy form: commit only, no merge
     addDoc(w, "p3", "alpha four")
     w.commit(merge = 0)
-    assert(StreamingIndexer.liveSegmentIds(spark, dir).length === 2)
+    assert(Segments.lineage(spark, dir).liveIds.length === 2)
     // commit(mergeDeletes = true) — bool form folds only segments with deletes
     w.delete(Term("content", "three"))
     w.commit(mergeDeletes = true)
@@ -161,7 +160,7 @@ class MergeSpec extends SparkTestBase {
     for (i <- 0 until 6) {
       addDoc(w, s"p$i", s"alpha doc$i")
       w.commit()
-      assert(StreamingIndexer.liveSegmentIds(spark, dir).length <= 2, s"after commit $i")
+      assert(Segments.lineage(spark, dir).liveIds.length <= 2, s"after commit $i")
     }
     assert(w.count(Term("content", "alpha")) === 6L)
     (0 until 6).foreach(i => assert(w.count(Term("content", s"doc$i")) === 1L))
@@ -180,7 +179,7 @@ class MergeSpec extends SparkTestBase {
     }
     w.delete(Term("content", "drop"))
     w.commit()
-    val bigId = StreamingIndexer.liveSegmentIds(spark, dir).min
+    val bigId = Segments.lineage(spark, dir).liveIds.min
     def fileState(sub: String) = {
       val d = new java.io.File(s"$dir/$sub/segment=$bigId")
       d.listFiles.map(f => (f.getName, f.length, f.lastModified)).sortBy(_._1).toSeq
@@ -191,7 +190,7 @@ class MergeSpec extends SparkTestBase {
     w.forceMergeDeletes()
     // the big segment is still served AS-IS — its files were never rewritten
     // (merge cost ∝ segments holding deletes, not the index: the 100-TB story)
-    val live = StreamingIndexer.liveSegmentIds(spark, dir)
+    val live = Segments.lineage(spark, dir).liveIds
     assert(live.contains(bigId))
     assert(live.length === 2) // big + one purged fold of the three tails
     assert(fileState("docs") === docsBefore)
@@ -213,9 +212,9 @@ class MergeSpec extends SparkTestBase {
       s"expected partition-pruned scan:\n$verifyPlan")
     // idempotent: the already-purged tombstones are vacuous — a second call
     // must not re-fold anything (interval candidates verify to empty)
-    val liveAfter = StreamingIndexer.liveSegmentIds(spark, dir).sorted
+    val liveAfter = Segments.lineage(spark, dir).liveIds.sorted
     w.forceMergeDeletes()
-    assert(StreamingIndexer.liveSegmentIds(spark, dir).sorted === liveAfter)
+    assert(Segments.lineage(spark, dir).liveIds.sorted === liveAfter)
     w.close()
   }
 
@@ -287,7 +286,7 @@ class MergeSpec extends SparkTestBase {
     for (i <- 0 until 5) addDoc(w, s"b$i", s"alpha other data$i")
     w.commit() // segment 1
     assert(w.check().clean) // green pre-corruption; returns, never throws
-    val victims = StreamingIndexer.liveSegmentIds(spark, dir).sorted
+    val victims = Segments.lineage(spark, dir).liveIds.sorted
     val victim = victims.head
     // corrupt one posting part-file of segment 0 wholesale (lost footer)
     val part = new java.io.File(s"$dir/postings/segment=$victim").listFiles()
@@ -301,7 +300,7 @@ class MergeSpec extends SparkTestBase {
     assert(report.badSegments === Seq(victim))
     assert(report.droppedDocs === 8L)
     assert(report.errors.keySet === Set(victim))
-    assert(StreamingIndexer.liveSegmentIds(spark, dir) === victims.tail)
+    assert(Segments.lineage(spark, dir).liveIds === victims.tail)
     assert(w.count(AllDocs) === 5L)
     assert(w.count(Term("content", "alpha")) === 5L)
     assert(w.count(Term("content", "keepme")) === 0L)

@@ -64,9 +64,9 @@ class PayloadSpec extends SparkTestBase {
     val dir = java.nio.file.Files.createTempDirectory("graft-mixed").toString
     val schema = IndexSchema(Seq("repo", "path", "commit"),
       Map("text" -> TextField("stem-paychain", positions = true)))
-    graft.streaming.StreamingIndexer.appendSegment(
+    Segments.append(
       Seq(("r", "a0", "c", "legacy searches")).toDF("repo", "path", "commit", "text"),
-      schema, dir, 0)
+      schema, dir)
     // strip the blob columns from segment 0 — simulating a pre-payloads layout
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -75,10 +75,10 @@ class PayloadSpec extends SparkTestBase {
     fs.delete(new org.apache.hadoop.fs.Path(s"$dir/postings/segment=0"), true)
     fs.rename(new org.apache.hadoop.fs.Path(s"$dir/legacy-tmp"),
       new org.apache.hadoop.fs.Path(s"$dir/postings/segment=0"))
-    graft.streaming.StreamingIndexer.appendSegment(
+    Segments.append(
       Seq(("r", "a1", "c", "modern searches")).toDF("repo", "path", "commit", "text"),
-      schema, dir, 1)
-    val re = new Searcher(graft.streaming.StreamingIndexer.open(spark, dir, schema))
+      schema, dir)
+    val re = new Searcher(Segments.open(spark, dir, schema))
     assert(re.index.numDocs === 2)
     assert(re.count(Term("text", "search")) === 2) // both segments visible
     val rows = re.positions("text", "search", payloads = true).collect()

@@ -215,6 +215,25 @@ class PlanShapeSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       }
   }
 
+  test("codegen reuse: doc(id) of another id compiles no code (saved index with deletes)") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-docfetch").toString
+    built.withDeletes(Seq(7L, 8L).toDF("docId")).save(dir)
+    val s = new Searcher(IndexBuilder.load(spark, dir))
+    def stored(id: Long) = s.index.docs.filter(col("docId") === id).collect().headOption
+    val (want3, want11, want8) = (stored(3L), stored(11L), stored(8L))
+    // warm-up: one live fetch (tombstone probe + doc read), one tombstoned
+    assert(s.doc(3L) === want3 && want3.isDefined)
+    assert(s.doc(7L) === None)
+    val before = compiles()
+    val got11 = s.doc(11L)
+    val got8 = s.doc(8L)
+    val n = compiles() - before
+    assert(got11 === want11 && want11.isDefined)
+    assert(got8 === None && want8.isDefined, "a tombstoned id reads None")
+    assert(n === 0L, "classes compiled by doc() of new ids")
+  }
+
   // the built index's plan string prints its cached build lineage, so the
   // exchanges are counted on the physical plan (the cache scan is a leaf)
   test("plan shape: bool_or (WAND) over a built, unsaved index") {

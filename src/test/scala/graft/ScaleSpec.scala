@@ -38,13 +38,12 @@ class ScaleSpec extends SparkTestBase {
     val (sCk, sMem) = (new Searcher(idx), new Searcher(mem))
     refQueries.foreach { q => assert(topk(sCk, q) === topk(sMem, q), s"query $q") }
 
-    val segs = CheckpointedBuild.segmentsTable(spark, dir)
-    val rows = segs.collect()
+    val rows = Segments.lineage(spark, dir).rows
     assert(rows.length === 4)
-    assert(rows.forall(_.getAs[String]("status") == "committed"))
-    assert(rows.map(_.getAs[Long]("docsIndexed")).sum === 200L)
-    assert(rows.forall(_.getAs[Long]("postingsWritten") > 0L))
-    assert(rows.forall(_.getAs[Long]("bytesCompressed") > 0L))
+    assert(rows.forall(_.status == "committed"))
+    assert(rows.map(_.docsIndexed).sum === 200L)
+    assert(rows.forall(_.postingsWritten > 0L))
+    assert(rows.forall(_.bytesCompressed > 0L))
   }
 
   test("resume: a lost segment is rebuilt, committed segments are skipped") {
@@ -62,11 +61,61 @@ class ScaleSpec extends SparkTestBase {
     val idx2 = CheckpointedBuild.build(corpus, schema, dir, segments = 4, numPartitions = 4)
     assert(spark.read.parquet(s"$dir/postings").count() === before)
     // lineage shows the re-commit (original 4 + 1 rebuild)
-    assert(CheckpointedBuild.segmentsTable(spark, dir).count() === 5L)
+    assert(Segments.lineage(spark, dir).rows.length === 5)
     // and the resumed index answers identically to a fresh one
     val sMem = new Searcher(IndexBuilder.build(corpus, schema, numPartitions = 4))
     val s2 = new Searcher(idx2)
     refQueries.foreach { q => assert(topk(s2, q) === topk(sMem, q), s"query $q") }
+  }
+
+  test("commit rule: a segment written but never published is rebuilt on resume") {
+    val dir = Files.createTempDirectory("graft-unpublished").toString
+    CheckpointedBuild.build(corpus, schema, dir, segments = 4, numPartitions = 4)
+    // the state a crash between a slice's write and its publish leaves:
+    // postings/segment=3 on disk, no lineage row naming it
+    val kept = Segments.lineage(spark, dir).rows.filter(_.segmentId != 3)
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/segments"), true)
+    Segments.publish(spark, dir, kept)
+    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/postings/segment=3")))
+    assert(Segments.lineage(spark, dir).rows.map(_.docsIndexed).sum === 150L)
+
+    val idx = CheckpointedBuild.build(corpus, schema, dir, segments = 4, numPartitions = 4)
+    val lineage = Segments.lineage(spark, dir)
+    assert(lineage.rows.map(_.docsIndexed).sum === 200L)
+    assert(lineage.liveIds === Seq(0L, 1L, 2L, 3L))
+    val sMem = new Searcher(IndexBuilder.build(corpus, schema, numPartitions = 4))
+    refQueries.foreach { q => assert(topk(new Searcher(idx), q) === topk(sMem, q), s"query $q") }
+  }
+
+  test("one format: an Indexer opens a checkpointed directory and commits onto it") {
+    val dir = Files.createTempDirectory("graft-ckpt-indexer").toString
+    val idx = CheckpointedBuild.build(corpus, schema, dir, segments = 4, numPartitions = 4)
+    val sCk = new Searcher(idx)
+    val reader = new Indexer(spark, dir, schema, corpus.schema, readOnly = true)
+    refQueries.foreach { q => assert(topk(reader.searcher, q) === topk(sCk, q), s"query $q") }
+
+    val w = new Indexer(spark, dir, schema, corpus.schema)
+    try {
+      w.add("repo" -> "org0/new", "path" -> "src/New.scala", "commit" -> "c1",
+        "lang" -> "scala", "content" -> "zebra crossing def")
+      w.commit()
+      assert(w.segments.size === 5)
+      assert(w.searcher.index.numDocs === 201L)
+      // the appended segment starts at the next salt bucket past the slices
+      assert(w.search(Term("content", "zebra")).collect().map(_.getLong(0)).toSeq ===
+        Seq(1L << IndexBuilder.SaltShift))
+      assert(w.count(Term("content", "def")) === sCk.count(Term("content", "def")) + 1L)
+    } finally w.close()
+    reader.refresh()
+    assert(reader.count(Term("content", "zebra")) === 1L)
+  }
+
+  test("checkpointed build of an empty corpus is an empty index") {
+    val dir = Files.createTempDirectory("graft-ckpt-empty").toString
+    val idx = CheckpointedBuild.build(corpus.limit(0), schema, dir, segments = 4, numPartitions = 4)
+    assert(idx.numDocs === 0L)
+    assert(new Searcher(idx).count(Term("content", "def")) === 0L)
   }
 
   test("salt-invariance: different salt shifts give identical postings semantics") {

@@ -25,13 +25,13 @@ class WandSpec extends SparkTestBase {
     Seq("def", "class", "import", "return", "val"), // all hot
     Seq("zzz_missing", "parse"))
 
-  def exhaustive(terms: Seq[String], k: Int): Seq[(Long, Long)] = {
-    val prev = searcher.wandEnabled
-    searcher.wandEnabled = false
-    try searcher.search(Q.any(terms.map(Term("content", _)): _*), k).collect()
+  /** The exhaustive top-k: every match scored, ranked score desc, docId asc. */
+  def exhaustiveTopK(s: Searcher, q: Q, k: Int): Seq[(Long, Long)] =
+    s.eval(q).orderBy(col("score").desc, col("docId").asc).limit(k).collect()
       .map(r => (r.getLong(0), math.round(r.getDouble(1) * 1e9))).toSeq
-    finally searcher.wandEnabled = prev
-  }
+
+  def exhaustive(terms: Seq[String], k: Int): Seq[(Long, Long)] =
+    exhaustiveTopK(searcher, Q.any(terms.map(Term("content", _)): _*), k)
 
   test("WAND top-k matches exhaustive scoring exactly") {
     for (terms <- queries; k <- Seq(1, 10, 100)) {
@@ -47,9 +47,7 @@ class WandSpec extends SparkTestBase {
     assert(auto === exhaustive(Seq("def", "parse"), 10).map(_._1))
     // boosts flow into WAND weights
     val qb = Q.any(Term("content", "def").boost(2.0), Term("content", "parse"))
-    searcher.wandEnabled = false
-    val exh = searcher.search(qb, 10).collect().map(r => (r.getLong(0), math.round(r.getDouble(1) * 1e9))).toSeq
-    searcher.wandEnabled = true
+    val exh = exhaustiveTopK(searcher, qb, 10)
     val wnd = searcher.search(qb, 10).collect().map(r => (r.getLong(0), math.round(r.getDouble(1) * 1e9))).toSeq
     assert(wnd === exh)
   }
@@ -60,13 +58,8 @@ class WandSpec extends SparkTestBase {
     // bucket-aligned or WAND splits a doc's scores across partitions.
     val big = IndexBuilder.build(CodeCorpus.generate(spark, 10000, 8), schema, 4).cached()
     val sBig = new Searcher(big)
-    def exhaust(s: Searcher, terms: Seq[String], k: Int) = {
-      val prev = s.wandEnabled
-      s.wandEnabled = false
-      try s.search(Q.any(terms.map(Term("content", _)): _*), k).collect()
-        .map(r => (r.getLong(0), math.round(r.getDouble(1) * 1e9))).toSeq
-      finally s.wandEnabled = prev
-    }
+    def exhaust(s: Searcher, terms: Seq[String], k: Int) =
+      exhaustiveTopK(s, Q.any(terms.map(Term("content", _)): _*), k)
     for (terms <- queries; k <- Seq(5, 50)) {
       val viaWand = sBig.searchWand("content", terms.map(_ -> 1.0), k).collect()
         .map(r => (r.getLong(0), math.round(r.getDouble(1) * 1e9))).toSeq
@@ -201,13 +194,10 @@ class WandSpec extends SparkTestBase {
 
   test("DisMax routes through WAND (max + tie·(sum−max) combiner) and stays exact; " +
       "sparse DisMax prunes blocks undecoded") {
-    def ranked(q: Q, k: Int, wand: Boolean): Seq[(Long, Long)] = {
-      val prev = searcher.wandEnabled
-      searcher.wandEnabled = wand
-      try searcher.search(q, k).collect()
+    def ranked(q: Q, k: Int, wand: Boolean): Seq[(Long, Long)] =
+      if (!wand) exhaustiveTopK(searcher, q, k)
+      else searcher.search(q, k).collect()
         .map(r => (r.getLong(0), math.round(r.getDouble(1) * 1e9))).toSeq
-      finally searcher.wandEnabled = prev
-    }
     for (terms <- queries; tie <- Seq(0.0, 0.3, 1.0); k <- Seq(1, 10, 100)) {
       val q = DisMax(tie, terms.map(Term("content", _)))
       assert(ranked(q, k, wand = true) === ranked(q, k, wand = false),
@@ -299,10 +289,7 @@ class WandSpec extends SparkTestBase {
       val got = searcher.search(Term("content", t), k).collect()
         .map(r => (r.getLong(0), math.round(r.getDouble(1) * 1e9))).toSeq
       assert(searcher.wandDecoded.value > 0, s"WAND route not taken for term $t")
-      searcher.wandEnabled = false
-      val exh = try searcher.search(Term("content", t), k).collect()
-        .map(r => (r.getLong(0), math.round(r.getDouble(1) * 1e9))).toSeq
-      finally searcher.wandEnabled = true
+      val exh = exhaustiveTopK(searcher, Term("content", t), k)
       assert(got === exh, s"term=$t k=$k")
     }
     // hot term, small k: the single-cursor block-max bound actually prunes —
@@ -324,12 +311,8 @@ class WandSpec extends SparkTestBase {
     // tombstone the undeleted top-5 so the filter provably reshapes the result
     val deadIds = searcher.search(q, 5).collect().map(_.getLong(0)).toSeq
     val sDel = new Searcher(index.withDeletes(deadIds.toDF("docId")))
-    def exhaust(terms: Seq[String], k: Int): Seq[(Long, Long)] = {
-      sDel.wandEnabled = false
-      try sDel.search(Q.any(terms.map(Term("content", _)): _*), k).collect()
-        .map(r => (r.getLong(0), math.round(r.getDouble(1) * 1e9))).toSeq
-      finally sDel.wandEnabled = true
-    }
+    def exhaust(terms: Seq[String], k: Int): Seq[(Long, Long)] =
+      exhaustiveTopK(sDel, Q.any(terms.map(Term("content", _)): _*), k)
     // the WAND route is actually taken (decoded-blocks accumulator moves)
     sDel.wandDecoded.reset()
     val viaWand = sDel.search(q, 10).collect()
@@ -367,12 +350,7 @@ class WandSpec extends SparkTestBase {
       (0L until 20000L by 7L) // bulk tombstones across every bucket
     val delView = bigIdx.withDeletes(deadIds.distinct.toDF("docId"))
     val sDel = new Searcher(delView)
-    def exhaust(k: Int): Seq[(Long, Long)] = {
-      sDel.wandEnabled = false
-      try sDel.search(q, k).collect()
-        .map(r => (r.getLong(0), math.round(r.getDouble(1) * 1e9))).toSeq
-      finally sDel.wandEnabled = true
-    }
+    def exhaust(k: Int): Seq[(Long, Long)] = exhaustiveTopK(sDel, q, k)
     for (k <- Seq(1, 10, 100)) {
       sDel.wandDecoded.reset()
       val got = sDel.search(q, k).collect()
