@@ -3,10 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Plan-evidence dumper (round-8 optimization deliverable): for every
-  * declared query, write `.explain("formatted")` PLUS the post-AQE final
-  * executed plan to `<outDir>/<query>_<suffix>.txt`. Not part of the
-  * frozen measurement harness (Bench/Verify untouched) — this is the
-  * judge-checkable artifact behind the plan claims in OPTIMIZATION_r08.md.
+  * declared query, write `.explain("formatted")`, the post-AQE final
+  * executed plan and the RDD lineage to `<outDir>/<query>_<suffix>.txt`.
+  * Not part of the frozen measurement harness (Bench/Verify untouched) —
+  * this is the judge-checkable artifact behind the plan claims in
+  * OPTIMIZATION_r08.md.
   *
   * Usage: runMain graft.PlanDump [sfDir] [outDir] [suffix] [q1,q2,...]
   */
@@ -38,8 +39,12 @@ object PlanDump {
             .explainString(org.apache.spark.sql.execution.FormattedMode)
           df.collect() // materialize so AQE finalizes the plan
           val finalPlan = df.queryExecution.executedPlan.toString
+          // the RDD lineage shows what the plan hides: a block-store route's
+          // "graft block store: k of n partitions" launched
+          val lineage = df.queryExecution.toRdd.toDebugString
           val txt = s"== $name @ $sfDir ==\n\n-- explain(formatted) --\n\n" +
-            s"$formatted\n-- final executed plan (post-AQE) --\n\n$finalPlan"
+            s"$formatted\n-- final executed plan (post-AQE) --\n\n$finalPlan\n" +
+            s"\n-- RDD lineage (queryExecution.toRdd) --\n\n$lineage\n"
           java.nio.file.Files.writeString(
             java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"), txt)
           System.err.println(s"[plandump] $name ok")

@@ -3,7 +3,7 @@ package graft.exec
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row}
 import org.apache.spark.sql.functions._
 
-import graft.index.{Index, IndexBuilder, Posting, PostingBlock, PostingCodec}
+import graft.index.{Index, Posting, PostingBlock, PostingCodec}
 import graft.query._
 
 /** Lucene BM25Similarity parity (SURVEY.md §4.3):
@@ -60,18 +60,6 @@ object Searcher {
     var top: Array[(Long, Double)] = Array.empty
   }
 
-  /** A posting block's score-only columns (no field, positions, payloads or
-    * offsets): what score-only routes read and group, rebuilt into a
-    * [[PostingBlock]] inside the kernel. Read by name, so the salt column
-    * beside them is ignored.
-    */
-  private[exec] final case class ScoreBlock(term: String, firstDocId: Long, lastDocId: Long,
-      numDocs: Int, maxTf: Int, sumTf: Long, minDlq: Int, docsBlob: Array[Byte],
-      freqsBlob: Array[Byte], normsBlob: Array[Byte]) {
-    def toBlock(field: String): PostingBlock = PostingBlock(field, term, firstDocId, lastDocId,
-      numDocs, maxTf, sumTf, minDlq, docsBlob, freqsBlob, normsBlob, Array.empty[Byte])
-  }
-
   /** The encoders of the block routes' rows, derived once per JVM:
     * `spark.implicits` derives a product encoder by Scala reflection at
     * every call, that is on every query. [[Searcher]] imports these after
@@ -79,8 +67,6 @@ object Searcher {
     * the implicits' generic product encoder.
     */
   private[exec] object RouteEncoders {
-    implicit val scoreBlockEnc: Encoder[ScoreBlock] = Encoders.product[ScoreBlock]
-    implicit val postingBlockEnc: Encoder[PostingBlock] = Encoders.product[PostingBlock]
     implicit val postingEnc: Encoder[Posting] = Encoders.product[Posting]
     implicit val scoredEnc: Encoder[(Long, Double)] = Encoders.product[(Long, Double)]
     implicit val wandRowEnc: Encoder[(Array[Long], Array[Double], Long, Boolean)] =
@@ -245,17 +231,19 @@ class Searcher(val index: Index) extends Serializable {
     case Constant(sub) => evalInner(sub).select(col("docId"), lit(1.0).as("score"))
   }
 
-  /** One term's BM25 scores, computed by [[Bm25.score]] in the decode
-    * closure: the idf weight and avgdl stay out of generated code.
+  /** One term's BM25 scores from the [[graft.index.BlockStore]]'s buckets
+    * of the term, computed by [[Bm25.score]] in the decode closure: the idf
+    * weight and avgdl stay out of generated code.
     */
   private def evalTerm(field: String, term: String, boost: Double, df: Long): DataFrame = {
     val st = index.fieldStats.getOrElse(field, return emptyMatches)
     if (df == 0) return emptyMatches
     val w = boost * Bm25.idf(st.docCount, df)
     val avgdl = st.avgdl
-    postings(field, term)
-      .map(p => (p.docId, Bm25.score(p.tf.toDouble, p.dlq, w, avgdl)))
-      .toDF("docId", "score")
+    bucketBlocks(Seq((field, term)), None) { (blocks, _) =>
+      blocks.flatMap(b => PostingCodec.decodeScore(b.firstDocId, b.numDocs, b.docsBlob,
+        b.freqsBlob, b.normsBlob)).map(p => (p.docId, Bm25.score(p.tf.toDouble, p.dlq, w, avgdl)))
+    }.toDF("docId", "score")
   }
 
   /** Multi-term queries rewrite to a constant-score doc-set union
@@ -307,10 +295,10 @@ class Searcher(val index: Index) extends Serializable {
     * optional MUST_NOT anything). The generic boolean path below would union
     * the FULL postings of every clause into the aggregate — for
     * `rare AND the`, the hot term's postings shuffle in their entirety even
-    * though only docs containing `rare` can match. Here the compressed
-    * blocks are pruned to the rarest term's coverage, grouped by salt
-    * bucket, and merge-intersected rarest-first with score-only decode —
-    * the conjunctive twin of the phrase path. MUST_NOT terms of the same
+    * though only docs containing `rare` can match. Here only the salt
+    * buckets of the rarest term run, and in each the compressed blocks are
+    * merge-intersected rarest-first with score-only decode — the
+    * conjunctive twin of the phrase path. MUST_NOT terms of the same
     * field ride the same pruned blocks into the kernel, which drops every
     * candidate they contain (Lucene's ReqExclScorer); any other MUST_NOT
     * clause is a `left_anti` join after it.
@@ -327,7 +315,6 @@ class Searcher(val index: Index) extends Serializable {
     val weights: Map[String, Double] = distinct.map { t =>
       t -> mustCounts.getOrElse(t, 0) * Bm25.idf(st.docCount, stats(t)._1)
     }.toMap
-    val prune = rareCoveragePruner(field, order.head)
     val ord = order.toArray
     val avgdl = st.avgdl
     // same-field NOT terms absent from the index exclude nothing
@@ -337,7 +324,7 @@ class Searcher(val index: Index) extends Serializable {
     }
     val notTerms = sameField.collect { case Term(_, t) => t }.distinct
     val excl = termStats(field, notTerms).keys.toArray.sorted
-    val base = bucketBlocks((order ++ excl).map((field, _)), prune, withPositions = false) { it =>
+    val base = bucketBlocks((order ++ excl).map((field, _)), Some((field, order.head))) { (it, _) =>
       Conjunction.scorePartition(ord, weights, avgdl, it, excl)
     }.toDF("docId", "score")
     otherNots.foldLeft(base) { (d, nq) =>
@@ -356,41 +343,6 @@ class Searcher(val index: Index) extends Serializable {
       .as[(Long, Int, Array[Byte])]
       .flatMap { case (f, n, d) => PostingCodec.decodeDocIds(f, n, d) }
       .toDF("docId")
-
-  /** Block pruner from the rarest term's docId coverage, shared by the
-    * conjunctive and positional paths: keep the blocks in the salt buckets
-    * the rare term touches (read from the index's term table, no Spark
-    * job), as one Catalyst `InSet` over the salted blocks' `salt` column.
-    * Every block of the rare term survives, since blocks never span a salt
-    * bucket.
-    *
-    *  - Over a saved index `salt` is the stored bucket column: Spark's
-    *    bucket pruning drops the untouched bucket files at planning, and
-    *    parquet receives the pushed `In`. A directory saved before
-    *    bucketing computes `salt` from `firstDocId`, so it prunes nothing
-    *    at the scan and keeps its answers.
-    *  - `InSet` over a long reads its set from the generated class's
-    *    references, so every plan of one shape compiles to the same code
-    *    whichever terms it holds. (`isin` stays an `In` up to
-    *    `spark.sql.optimizer.inSetConversionThreshold` values and inlines
-    *    each one.) The set is always a `HashSet`: the generated code casts
-    *    to the set's runtime class, and Scala's small sets have one class
-    *    per size.
-    *  - Inside a touched bucket, a wider term's blocks outside the rare
-    *    term's docIds still reach the kernel, which skip-intersects them
-    *    undecoded.
-    */
-  private def rareCoveragePruner(field: String, rareTerm: String): DataFrame => DataFrame = {
-    val buckets = index.termTable.get(field, rareTerm).fold(Seq.empty[Long])(_.buckets)
-    if (buckets.isEmpty) (wide: DataFrame) => wide.limit(0)
-    else {
-      import org.apache.spark.sql.graft.ColumnBridge
-      val inBuckets = ColumnBridge.column(org.apache.spark.sql.catalyst.expressions.InSet(
-        ColumnBridge.expression(col(IndexBuilder.SaltColumn)),
-        scala.collection.immutable.HashSet.from[Any](buckets)))
-      (wide: DataFrame) => wide.filter(inBuckets)
-    }
-  }
 
   /** Boolean algebra in ONE hash-aggregate: tag each clause's matches with
     * (score, isMust, isNot) and group by docId — no join cascade, map-side
@@ -455,69 +407,43 @@ class Searcher(val index: Index) extends Serializable {
     * (rarest-first), as (docId, dlq, lists) with lists in
     * `required ++ optional` order; `optional` keys (span-Or branches,
     * Not-excludes) attach to surviving docs. Only COMPRESSED blocks are
-    * read and grouped, never decoded postings of `the`-class hot terms:
-    *  1. rare-coverage pruning drops the wider keys' blocks outside the
-    *     rare key's salt buckets before anything is grouped or decoded (see
-    *     [[rareCoveragePruner]]);
-    *  2. the surviving COMPRESSED blocks group by salt bucket
-    *     ([[bucketBlocks]]: no exchange over a saved index);
-    *  3. per bucket, [[PhraseMatcher.intersectKeyed]]: a wider key's block
+    * read, never decoded postings of `the`-class hot terms:
+    *  1. only the salt buckets of the rarest required key run
+    *     ([[bucketBlocks]]); the wider keys' blocks elsewhere are never read;
+    *  2. per bucket, [[PhraseMatcher.intersectKeyed]]: a wider key's block
     *     is never decoded unless its docId range still holds a candidate.
-    * With no required keys (pure disjunction) every key's blocks are read —
-    * no pruning is sound.
+    * With no required keys (pure disjunction) every key's buckets run — no
+    * pruning is sound.
     */
   private def positionalMatchesKeys(required: Seq[(String, String)], optional: Seq[(String, String)],
       dlqField: String): Dataset[(Long, Int, Array[Array[Int]])] = {
-    val prune = required.headOption.fold[DataFrame => DataFrame](identity) {
-      case (rf, rt) => rareCoveragePruner(rf, rt)
-    }
     val req = required.toArray
     val opt = optional.toArray
-    bucketBlocks(required ++ optional, prune, withPositions = true)(it =>
+    bucketBlocks(required ++ optional, required.headOption)((it, _) =>
       PhraseMatcher.intersectKeyed(req, opt, dlqField, it))
   }
 
-  /** The one salt-bucket runtime behind WAND, term conjunction and
-    * positional matching: the blocks of `keys`, salted (the stored `salt`
-    * column of a saved index, else `firstDocId >>> SaltShift`; blocks
-    * never span a bucket), pruned by `prune` over that salt column, grouped
-    * by it, and `kernel` run once per bucket over every key's blocks of it.
-    *
-    * The grouping requires the input clustered by the salt column. A saved
-    * index loads bucketed on its stored salt column, so the scan already is
-    * and no exchange runs; a built, appended or pre-bucketing index (or a
-    * `withDeletes` view's tombstones) gets ONE hash exchange on salt from
-    * Spark's EnsureRequirements. The same code serves both. (A
-    * `repartition(n, salt)` here would be removed as redundant over the
-    * bucketed scan, after which DisableUnnecessaryBucketedScan turns the
-    * bucketing off and a partition no longer holds whole buckets.)
-    *
-    * Score-only routes (single field) project away the position/payload/
-    * offset blobs — often the widest columns — so parquet never reads them,
-    * and rebuild the blocks inside the kernel; `coShuffled` rows in that
-    * layout, led by their salt column (WAND's tombstones), join the same
-    * groups.
+  /** The one salt-bucket runtime behind WAND, term conjunction,
+    * positional matching and single-term scoring: `kernel` runs once per
+    * salt bucket over every key's blocks there, read from the index's
+    * [[graft.index.BlockStore]] (no file scan, no exchange). The buckets are
+    * those of `lead` (the rarest required key: a bucket without it cannot
+    * match), else of every key, read from the term table; only the store
+    * partitions holding them launch. `liveDocs` gives the kernel this
+    * view's per-bucket tombstone test (WAND); the other routes get
+    * `_ => false` and rely on [[eval]]'s `left_anti` join. The result is a
+    * lazy Dataset over that RDD.
     */
-  private def bucketBlocks[U: org.apache.spark.sql.Encoder](keys: Seq[(String, String)],
-      prune: DataFrame => DataFrame, withPositions: Boolean,
-      coShuffled: Option[DataFrame] = None)(
-      kernel: Iterator[PostingBlock] => Iterator[U]): Dataset[U] = {
-    val fields = keys.map(_._1).distinct
-    val cond = fields.map { f =>
-      col("field") === f && col("term").isin(keys.filter(_._1 == f).map(_._2).distinct: _*)
-    }.reduce(_ || _)
-    val blocks = prune(IndexBuilder.salted(index.blocks.filter(cond).toDF(), "firstDocId"))
-    val salt = col(IndexBuilder.SaltColumn)
-    if (withPositions)
-      return blocks.groupBy(salt).as[Long, PostingBlock].flatMapGroups((_, it) => kernel(it))
-    require(fields.length == 1, s"score-only blocks carry no field column: $fields")
-    val field = fields.head
-    val scoreCols = blocks.select(salt, col("term"), col("firstDocId"), col("lastDocId"),
-      col("numDocs"), col("maxTf"), col("sumTf"), col("minDlq"),
-      col("docsBlob"), col("freqsBlob"), col("normsBlob"))
-    coShuffled.fold(scoreCols)(scoreCols.unionAll)
-      .groupBy(salt).as[Long, Searcher.ScoreBlock]
-      .flatMapGroups((_, it) => kernel(it.map(_.toBlock(field))))
+  private def bucketBlocks[U: Encoder](keys: Seq[(String, String)], lead: Option[(String, String)],
+      liveDocs: Boolean = false)(
+      kernel: (Iterator[PostingBlock], Long => Boolean) => Iterator[U]): Dataset[U] = {
+    val table = index.termTable
+    val buckets = lead.fold(keys)(Seq(_)).flatMap { case (f, t) =>
+      table.get(f, t).fold(Seq.empty[Long])(_.buckets)
+    }.distinct
+    val deletes = if (liveDocs) index.deletesByBucket else None
+    spark.createDataset(index.blockStore.run(keys, buckets, deletes)(kernel)(
+      implicitly[Encoder[U]].clsTag))
   }
 
   /** (distinct terms rarest-first, their stats) or None when any term is
@@ -683,8 +609,8 @@ class Searcher(val index: Index) extends Serializable {
     }
   }
 
-  /** Block-max WAND top-k over a weighted term disjunction: blocks of the
-    * query terms are grouped by docId salt bucket (blocks never span one;
+  /** Block-max WAND top-k over a weighted term disjunction: the query
+    * terms' blocks are read per salt bucket (blocks never span one;
     * [[bucketBlocks]]), each bucket runs document-at-a-time BMW keeping k
     * candidates, and a global TakeOrdered merges — no decoded-postings
     * shuffle, non-competitive blocks never decoded.
@@ -718,42 +644,22 @@ class Searcher(val index: Index) extends Serializable {
   /** Per-bucket WAND results: (top-k docIds, their scores, docs scored,
     * pruned?) — one row per salt bucket. [[searchWand]] flattens the tops;
     * [[searchHits]] also folds the count accounting. A view with deletes
-    * groups its tombstones with the blocks by salt bucket, so each bucket
-    * filters against its own liveDocs (the analogue of Lucene's
+    * reads its tombstones partitioned like the block store, so each bucket
+    * filters against its partition's liveDocs (the analogue of Lucene's
     * per-segment liveDocs bits).
     */
   private def wandPartitions(field: String, weights: Seq[(String, Double)], avgdl: Double,
       k: Int, tie: Double = 1.0):
       org.apache.spark.sql.Dataset[(Array[Long], Array[Double], Long, Boolean)] = {
     val acc = wandDecoded // local val: the closure must not capture `this`
-    // a task's buckets arrive in ascending salt order (the grouping sorts by
-    // it); each bucket's heap starts from the top-k of the task's earlier
-    // buckets, so WAND prunes as one doc-ordered pass over the task would,
-    // and each bucket emits only its own docs of that heap
+    // a task's buckets arrive in ascending salt order (a store partition is
+    // a contiguous salt range); each bucket's heap starts from the top-k of
+    // the task's earlier buckets, so WAND prunes as one doc-ordered pass
+    // over the task would, and each bucket emits only its own docs of that
+    // heap
     val taskTop = new Searcher.TaskTopK
-    // tombstones join the block groups as numDocs = -1 rows (a real block
-    // always has numDocs >= 1); blocks never span a salt bucket, so each
-    // bucket sees exactly the tombstones its docId range can contain,
-    // with no driver collect and no size ceiling
-    val coShuffledTombs = index.deletes.map(d => IndexBuilder.salted(d, "docId").select(
-      col(IndexBuilder.SaltColumn), lit("").as("term"), col("docId").cast("long").as("firstDocId"),
-      col("docId").cast("long").as("lastDocId"), lit(-1).as("numDocs"),
-      lit(0).as("maxTf"), lit(0L).as("sumTf"), lit(0).as("minDlq"),
-      lit(null).cast("binary").as("docsBlob"), lit(null).cast("binary").as("freqsBlob"),
-      lit(null).cast("binary").as("normsBlob")))
-    bucketBlocks(weights.map(w => (field, w._1)), identity, withPositions = false,
-        coShuffledTombs) { it =>
-      val all = it.toArray
-      val (tombRows, blocks) = all.partition(_.numDocs < 0)
-      // per-bucket liveDocs from co-shuffled rows: sorted with possible
-      // duplicates (the delete table is append-only) — binarySearch still
-      // decides
-      val sorted = tombRows.map(_.firstDocId)
-      java.util.Arrays.sort(sorted)
-      val deleted: Long => Boolean =
-        if (sorted.isEmpty) _ => false
-        else d => java.util.Arrays.binarySearch(sorted, d) >= 0
-      val byTerm = blocks.groupBy(_.term)
+    bucketBlocks(weights.map(w => (field, w._1)), None, liveDocs = true) { (it, deleted) =>
+      val byTerm = it.toArray.groupBy(_.term)
       val termBlocks = weights.map { case (t, w) => (w, byTerm.getOrElse(t, Array.empty)) }
       val r = Wand.topkPartitionFull(termBlocks, avgdl, k, deleted, tie, taskTop.top)
       val earlier = taskTop.top.iterator.map(_._1).toSet
@@ -830,9 +736,10 @@ class Searcher(val index: Index) extends Serializable {
     * access): the doc-store row with docvalue updates applied, None for an
     * unknown or tombstoned id. `fields` selects columns (Hits.select-style
     * late materialization); empty = all stored columns. The id filter is
-    * one `InSet` over a `HashSet` (as in [[rareCoveragePruner]]), so the
-    * id never enters generated code and every fetch reuses one plan's
-    * compiled classes.
+    * one `InSet` over a `HashSet`, so the id never enters generated code
+    * and every fetch reuses one plan's compiled classes. (The generated
+    * code casts to the set's runtime class, and Scala's small sets have one
+    * class per size, hence always a `HashSet`.)
     */
   def doc(docId: Long, fields: Seq[String] = Nil): Option[org.apache.spark.sql.Row] = {
     import org.apache.spark.sql.graft.ColumnBridge
@@ -1089,13 +996,18 @@ class Searcher(val index: Index) extends Serializable {
     case _ => Prefix(name, value)
   }
 
-  /** Nested-field range query on the narrowest component (documents.py:160-164). */
+  /** Nested-field range query, half-open [start, stop) like [[TermRange]],
+    * on the component field as deep as the deeper bound (a null bound is
+    * open and has no depth; with neither, the full field) — the
+    * reference's NestedField.range (documents.py:160-164).
+    */
   def nestedRange(name: String, start: String, stop: String): Query =
     index.schema.fields.get(name) match {
       case Some(graft.index.NestedField(sep)) =>
         val names = name.split(java.util.regex.Pattern.quote(sep))
         val depth = Seq(Option(start), Option(stop)).flatten
-          .map(v => v.split(java.util.regex.Pattern.quote(sep), -1).length - 1).max
+          .map(v => v.split(java.util.regex.Pattern.quote(sep), -1).length - 1)
+          .maxOption.getOrElse(names.length - 1)
         TermRange(names.take(math.min(depth + 1, names.length)).mkString(sep),
           Option(start), Option(stop))
       case _ => TermRange(name, Option(start), Option(stop))

@@ -207,6 +207,17 @@ final class Index private[index] (
     */
   private[graft] def termTable: TermTable = terms.get
 
+  /** The executor-resident [[BlockStore]] the scored routes read. Built on
+    * the first action that reads it; shared with every [[withDeletes]] view.
+    */
+  private[graft] def blockStore: BlockStore = terms.store
+
+  /** This view's tombstones partitioned like the [[blockStore]] (one small
+    * cached RDD per view), for WAND's per-bucket liveDocs.
+    */
+  @transient private[graft] lazy val deletesByBucket: Option[org.apache.spark.rdd.RDD[Array[Long]]] =
+    deletes.map(blockStore.partitionDeletes)
+
   def numDocs: Long = docs.count()
 
   /** Live doc count (deletes are tombstones until an expunge/rebuild,
@@ -275,8 +286,13 @@ final class Index private[index] (
     (blocks.count(), perBlock.agg(sum("n")).collect()(0).getLong(0))
   }
 
-  /** Pin the working set in memory for repeated queries (small/medium scale;
-    * at cluster scale rely on the parquet layout instead).
+  /** Cache the docs, blocks and term dictionary DataFrames, for the routes
+    * that still scan tables: doc-store reads, `postings()`, multi-term
+    * expansions and docId-only decodes. The scored routes (WAND,
+    * conjunction, phrase/near/span, single-term scoring) read the
+    * [[blockStore]] instead and gain nothing from it; a DataFrame cache of
+    * the blocks under them was the rejected alternative to that store (see
+    * [[BlockStore]]).
     */
   def cached(): Index = {
     docs.cache(); blocks.cache(); termDict.cache()
@@ -302,10 +318,10 @@ final class Index private[index] (
     * `salt = firstDocId >>> SaltShift` (`docId >>> SaltShift` for deletes)
     * column, hashed into `buckets = min(spark.sql.shuffle.partitions, salt
     * buckets counted)` bucket files (see [[saltBucketsCounted]]), with the
-    * count recorded in the manifest. [[IndexBuilder.load]] reads both back as bucketed relations,
-    * so the searcher's salt-bucket kernels run over the scan with no
-    * exchange (the layout of Cabin's binned scan index: data stored in the
-    * bins queries group by). The write is range-partitioned on (salt, field,
+    * count recorded in the manifest. [[IndexBuilder.load]] reads both back
+    * as bucketed relations. No query route needs that layout any more (the
+    * scored routes read the [[BlockStore]]); it is kept because changing it
+    * changes the on-disk format. The write is range-partitioned on (salt, field,
     * term, firstDocId) and each bucket file sorted by (field, term,
     * firstDocId), so per-term filters still prune files and row groups by
     * min/max stats, and the file count stays near write tasks + buckets.
@@ -456,13 +472,11 @@ object IndexBuilder {
   /** The stored salt-bucket column of bucketed `postings/` and `deletes/`. */
   val SaltColumn = "salt"
 
-  /** `df` with its [[SaltColumn]] (`idColumn >>> SaltShift`): a bucketed
-    * table's stored column when present, else computed. Grouping on it then
-    * needs an exchange only when the input is not already bucketed.
+  /** `df` with its [[SaltColumn]] (`idColumn >>> SaltShift`), the bucket
+    * column [[Index.save]] writes.
     */
   def salted(df: DataFrame, idColumn: String): DataFrame =
-    if (df.columns.contains(SaltColumn)) df
-    else df.withColumn(SaltColumn, shiftrightunsigned(col(idColumn), SaltShift))
+    df.withColumn(SaltColumn, shiftrightunsigned(col(idColumn), SaltShift))
 
   private val postingEncoder = org.apache.spark.sql.Encoders.product[PostingBlock]
 
@@ -684,9 +698,9 @@ object IndexBuilder {
 
   /** Open an index written by [[Index.save]]. When the manifest records a
     * bucket count, `postings/` and `deletes/` load as bucketed relations
-    * (no catalog table) whose scans are already clustered by salt bucket;
-    * a directory saved before that layout loads as plain parquet, and the
-    * searcher's salt-bucket grouping then adds the exchange itself.
+    * (no catalog table); a directory saved before that layout loads as
+    * plain parquet. Either way the scored routes read the index's
+    * [[BlockStore]], built from these blocks on the first query.
     */
   def load(spark: SparkSession, dir: String): Index = {
     import spark.implicits._

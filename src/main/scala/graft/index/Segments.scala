@@ -71,13 +71,18 @@ object Segments {
     /** The id the next publish takes. */
     def nextId: Int = rows.map(_.segmentId).maxOption.fold(0)(_ + 1)
 
-    /** The first docId of the next appended segment: past every appended
-      * segment's docs, rounded up to a salt bucket so rebased blocks stay
-      * bucket-aligned. Merged segments reuse their sources' docIds, so only
-      * `committed` rows count.
+    /** The first docId of the next appended segment: past every committed
+      * and merged segment's docs, rounded up to a salt bucket so rebased
+      * blocks stay bucket-aligned. A merged row counts too, because a copy
+      * of a pin may hold it without its sources' rows; a legacy merged row
+      * (no recorded extent, `maxDocId = Long.MaxValue`) counts
+      * `firstDocId + docsIndexed`, never its sentinel.
       */
-    def nextDocId: Long = IndexBuilder.nextBucketStart(rows.filter(_.status == Committed)
-      .map(m => m.firstDocId + m.docsIndexed).maxOption.getOrElse(0L))
+    def nextDocId: Long = IndexBuilder.nextBucketStart(rows.collect {
+      case m if m.status == Committed || (m.status == Merged && m.maxDocId == Long.MaxValue) =>
+        m.firstDocId + m.docsIndexed
+      case m if m.status == Merged => m.maxDocId + 1
+    }.maxOption.getOrElse(0L))
 
     /** Monotone version for cache validation (reference `version`): the
       * number of segment ids ever published.

@@ -8,11 +8,12 @@ import org.apache.spark.sql.functions._
   * the term's blocks lie in — the planner's whole view of the postings. It
   * plays the role of the terms index a Lucene reader loads once when it
   * opens: planning a query (idf weights, rarest-first order, the
-  * rare-coverage bucket filter) reads it with no Spark job. Immutable; built by two collects on first use
+  * salt buckets a route launches) reads it with no Spark job. Immutable; built by two collects on first use
   * (see [[TermTable.Lazy]]); never shipped to executors.
   */
 final class TermTable private (
-    byField: Map[String, java.util.HashMap[String, TermTable.Entry]]) {
+    byField: Map[String, java.util.HashMap[String, TermTable.Entry]],
+    val salts: Array[Long]) {
 
   /** The entry of one dictionary term; None for a term not in the index. */
   def get(field: String, term: String): Option[TermTable.Entry] =
@@ -38,6 +39,8 @@ object TermTable {
     * term) measured slower on a 55K-block index: 0.44-0.63 s per warm
     * build vs 0.36-0.53 s, of which the two narrow collects are ~0.2 s.
     * The norms sentinel `""` is not a dictionary term and has no entry.
+    * The distinct salts of all terms' blocks, ascending, are kept too:
+    * the [[BlockStore]]'s partitioner is derived from them without a job.
     */
   private def build(termDict: DataFrame, blocks: Dataset[PostingBlock]): TermTable = {
     val spark = blocks.sparkSession
@@ -54,14 +57,15 @@ object TermTable {
       byField.getOrElseUpdate(f, new java.util.HashMap[String, Entry]())
         .put(t, new Entry(r.getLong(2), r.getLong(3), bs))
     }
-    new TermTable(byField.toMap)
+    new TermTable(byField.toMap, buckets.valuesIterator.flatten.toArray.distinct.sorted)
   }
 
-  /** An index's table, built on the first `get` and then kept. Views that
-    * share their base's term statistics (`Index.withDeletes`) share the
-    * holder, so the table is built at most once per dictionary.
+  /** An index's table and [[BlockStore]], each built on first use and then
+    * kept. Views that share their base's postings (`Index.withDeletes`)
+    * share the holder, so each is built at most once per set of blocks.
     */
   final class Lazy private[index] (termDict: DataFrame, blocks: Dataset[PostingBlock]) {
     @transient lazy val get: TermTable = build(termDict, blocks)
+    @transient lazy val store: BlockStore = new BlockStore(blocks, get.salts)
   }
 }

@@ -11,7 +11,7 @@ import graft.query.{Query => Q, _}
 class LifecycleSpec extends SparkTestBase
     with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
   import org.apache.spark.sql.functions._
-  import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+  import org.apache.spark.sql.execution.exchange.Exchange
 
   def corpus(rows: (String, String, String, String, String)*) = {
     val s = spark
@@ -135,12 +135,6 @@ class LifecycleSpec extends SparkTestBase
     collect(df.queryExecution.executedPlan) { case e: Exchange => e }
   }
 
-  private def saltExchanges(df: org.apache.spark.sql.DataFrame): Int =
-    exchanges(df).count {
-      case e: ShuffleExchangeExec => e.outputPartitioning.toString.startsWith("hashpartitioning(salt")
-      case _                      => false
-    }
-
   private val codeSchema = IndexSchema(Seq("repo", "path", "commit"),
     Map("content" -> TextField("code", positions = true), "lang" -> KeywordField))
 
@@ -179,9 +173,10 @@ class LifecycleSpec extends SparkTestBase
       assert(want.nonEmpty, q.toString)
       assert(top10(old, q) === want, q.toString)
       assert(want === evalTop10(cur, q), q.toString)
-      // the old layout is not bucketed: the salt grouping adds its exchange
-      assert(saltExchanges(old.search(q, 10)) === 1, q.toString)
-      assert(saltExchanges(cur.search(q, 10)) === 0, q.toString)
+      // both layouts serve the query from the index's block store: no
+      // exchange, bucketed or not
+      assert(exchanges(old.search(q, 10)).length === 0, q.toString)
+      assert(exchanges(cur.search(q, 10)).length === 0, q.toString)
     }
   }
 

@@ -2,10 +2,9 @@ package graft
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.{Attribute, InSet}
-import org.apache.spark.sql.execution.{FileSourceScanExec, UnionExec}
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions.{col, concat, lit}
 
 import graft.exec.{Searcher, SortSpec}
@@ -15,17 +14,15 @@ import graft.query.{Query => Q, _}
 
 /** Physical-plan shapes of the key query routes over a saved (parquet)
   * index: exchange counts, parquet pushdown, the top-k operator, semi-joins
-  * and broadcasts. A saved index stores its postings salt-bucketed, so the
-  * term, OR (WAND), AND (conjunction, incl. same-field AND-NOT) and
-  * positional routes run with NO exchange: every postings scan is a
-  * bucketed scan that the salt-bucket grouping reads in place. A built,
-  * unsaved index and a `withDeletes` view (its tombstones are not bucketed)
-  * run exactly ONE hash exchange on the salt bucket; over the deletes view
-  * the blocks and tombstones meet in it through a Union. The score-only
-  * routes never read the positions blob. Queries execute first so AQE's
-  * final plan is inspected. A second query of a shape, over a saved or a
-  * built index, compiles no generated class: no value taken from the index
-  * enters generated code as a literal.
+  * and broadcasts. The term, OR (WAND), AND (conjunction, incl. same-field
+  * AND-NOT) and positional routes read the index's block store: NO exchange
+  * and NO postings file scan, over a saved and over a built index alike,
+  * and only the store partitions holding the rarest term's salt buckets
+  * launch. Over a `withDeletes` view WAND zips the view's partitioned
+  * tombstones with the store, still with no exchange. Queries execute first
+  * so AQE's final plan is inspected. A second query of a shape, over a
+  * saved or a built index, compiles no generated class: no value taken from
+  * the index enters generated code as a literal.
   */
 class PlanShapeSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
@@ -52,12 +49,8 @@ class PlanShapeSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       p.contains("BroadcastExchange") || p.contains("BroadcastHashJoin")), plan)
   }
 
-  private def saltExchanges(plan: org.apache.spark.sql.execution.SparkPlan): Seq[ShuffleExchangeExec] =
-    collect(plan) {
-      case e: ShuffleExchangeExec
-          if Seq("hashpartitioning(shiftrightunsigned(firstDocId", "hashpartitioning(salt")
-            .exists(e.outputPartitioning.toString.startsWith) => e
-    }
+  private def exchanges(plan: org.apache.spark.sql.execution.SparkPlan): Int =
+    collect(plan) { case e: Exchange => e }.length
 
   private def postingsScans(plan: org.apache.spark.sql.execution.SparkPlan): Seq[FileSourceScanExec] =
     collect(plan) { case s: FileSourceScanExec => s }.filter(_.requiredSchema.fieldNames.contains("docsBlob"))
@@ -67,69 +60,61 @@ class PlanShapeSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   private lazy val defKw = Term("content", "def")
 
   private val overDeletes = "bool_or (WAND) over deletes"
-  private lazy val deletesView: Searcher =
-    new Searcher(searcher.index.withDeletes(spark.range(0, 5000, 3).toDF("docId")))
+  private lazy val builtSearcher = new Searcher(built)
+  private lazy val deletesViews: Map[Searcher, Searcher] = Seq(searcher, builtSearcher).map(s =>
+    s -> new Searcher(s.index.withDeletes(spark.range(0, 5000, 3).toDF("docId")))).toMap
 
-  // route -> (query, expected string shape, salt exchanges, score-only);
-  // routes with 0 salt exchanges must read every postings scan bucketed
-  private lazy val routes: Seq[(String, () => DataFrame, (Int, Boolean, Boolean, Boolean, Boolean),
-      Option[Int], Boolean)] = Seq(
-    ("term_topk", () => searcher.search(parse, 10), (0, true, true, false, false), Some(0), true),
-    ("bool_or (WAND)", () => searcher.search(Q.any(parse, merge), 10),
-      (0, true, true, false, false), Some(0), true),
-    ("bool_and (conjunction intersect)", () => searcher.search(Q.all(parse, merge), 10),
-      (0, true, true, false, false), Some(0), true),
+  // route -> (query over a searcher, expected string shape, block-store route);
+  // a block-store route runs with no exchange and no postings scan over the
+  // saved and the built index, launching the one store partition (all 5,000
+  // docs lie in salt bucket 0)
+  private lazy val routes: Seq[(String, Searcher => DataFrame, (Int, Boolean, Boolean, Boolean, Boolean),
+      Boolean)] = Seq(
+    ("term_topk", _.search(parse, 10), (0, false, true, false, false), true),
+    ("bool_or (WAND)", _.search(Q.any(parse, merge), 10), (0, false, true, false, false), true),
+    ("bool_and (conjunction intersect)", _.search(Q.all(parse, merge), 10),
+      (0, false, true, false, false), true),
     ("bool_and_not (exclusion in the conjunction kernel)",
-      () => searcher.search(Bool(Seq(Occur.Must -> parse, Occur.Must -> merge, Occur.MustNot -> defKw)), 10),
-      (0, true, true, false, false), Some(0), true),
-    ("bool_and rare+hot", () => searcher.search(Q.all(Term("content", "scanhash"),
-      Term("content", "def")), 10), (0, false, false, false, false), None, false),
-    ("phrase (bucket intersect)", () => searcher.search(Q.phrase("content", "we", "the", "people"), 10),
-      (0, true, true, false, false), Some(0), false),
-    ("span_containing", () => searcher.spans(
+      _.search(Bool(Seq(Occur.Must -> parse, Occur.Must -> merge, Occur.MustNot -> defKw)), 10),
+      (0, false, true, false, false), true),
+    ("bool_and rare+hot", _.search(Q.all(Term("content", "scanhash"),
+      Term("content", "def")), 10), (0, false, false, false, false), false),
+    ("phrase (bucket intersect)", _.search(Q.phrase("content", "we", "the", "people"), 10),
+      (0, false, true, false, false), true),
+    ("span_containing", _.spans(
       SpanQ.near(Seq(Q.span("content", "parse"), Q.span("content", "merge")), slop = 5, inOrder = true)
-        .containing(Q.span("content", "def"))), (0, true, false, false, false), Some(0), false),
-    ("facets", () => searcher.facets(parse, "lang"), (4, true, false, false, true), None, false),
-    ("groupby (no global window)", () => searcher.groupBy("lang", parse, groups = 2),
-      (4, true, true, false, true), None, false),
-    ("sorted", () => searcher.search(parse, 10, sorts = Seq(SortSpec("lang"))),
-      (2, true, true, false, true), None, false),
-    (overDeletes, () => deletesView.search(Q.any(parse, merge), 10),
-      (2, true, true, false, false), Some(1), true),
-    ("fuzzy (dictionary scan expansion)", () => searcher.search(Fuzzy("content", "mergebatch", 1), 10),
-      (1, false, true, false, false), None, false),
-    ("facets_multi (one pass, N fields)", () => searcher.facetsMulti(parse, Seq("lang", "repo")),
-      (4, true, false, false, true), None, false))
+        .containing(Q.span("content", "def"))), (0, false, false, false, false), true),
+    ("facets", _.facets(parse, "lang"), (4, true, false, false, true), false),
+    ("groupby (no global window)", _.groupBy("lang", parse, groups = 2),
+      (4, true, true, false, true), false),
+    ("sorted", _.search(parse, 10, sorts = Seq(SortSpec("lang"))),
+      (2, true, true, false, true), false),
+    (overDeletes, s => deletesViews(s).search(Q.any(parse, merge), 10),
+      (0, false, true, false, false), true),
+    ("fuzzy (dictionary scan expansion)", _.search(Fuzzy("content", "mergebatch", 1), 10),
+      (1, false, true, false, false), false),
+    ("facets_multi (one pass, N fields)", _.facetsMulti(parse, Seq("lang", "repo")),
+      (4, true, false, false, true), false))
 
-  // routes led by a rarest term: their scans keep its salt buckets through
-  // one InSet on the stored salt column, which bucket pruning also reads
-  private val rarePruned = Set("bool_and (conjunction intersect)",
-    "bool_and_not (exclusion in the conjunction kernel)", "phrase (bucket intersect)", "span_containing")
-
-  routes.foreach { case (label, df, expected, salt, scoreOnly) =>
+  routes.foreach { case (label, query, expected, storeRoute) =>
     test(s"plan shape: $label") {
-      val (got, plan) = shape(df())
+      val (got, plan) = shape(query(searcher))
       assert(got === expected)
-      salt.foreach(n => assert(saltExchanges(plan).length === n, "salt-bucket hash exchanges"))
-      if (label == overDeletes) // blocks + co-shuffled tombstones feed the one salt exchange
-        assert(saltExchanges(plan).count(_.find(_.isInstanceOf[UnionExec]).isDefined) === 1,
-          "tombstones ride the salt exchange")
-      if (salt.contains(0)) {
-        val scans = postingsScans(plan)
-        assert(scans.nonEmpty, "postings scan expected")
-        scans.foreach(s => assert(s.bucketedScan, s"postings scan not bucketed: ${s.simpleString(200)}"))
-      }
-      if (rarePruned(label)) postingsScans(plan).foreach { s =>
-        val saltSets = s.dataFilters.collect {
-          case InSet(a: Attribute, hset) if a.name == IndexBuilder.SaltColumn => hset
+      if (storeRoute) {
+        val (_, builtPlan) = shape(query(builtSearcher))
+        Seq("saved" -> (searcher, plan), "built" -> (builtSearcher, builtPlan)).foreach {
+          case (kind, (s, p)) =>
+            assert(exchanges(p) === 0, s"$kind: exchanges")
+            assert(postingsScans(p).isEmpty, s"$kind: postings scans")
+            assert(StoreLineage.launched(s.index, p) === Seq((1, 1)), s"$kind: store partitions launched")
+            if (label == overDeletes) { // the view's tombstones zip with the store partition
+              val tombs = deletesViews(s).index.deletesByBucket.get
+              // one RDD reads both the store's and the tombstones' launched partitions
+              assert(StoreLineage.of(p).count(r => r.dependencies.length == 2 &&
+                r.dependencies.exists(_.rdd.dependencies.exists(_.rdd eq tombs))) === 1,
+                s"$kind: tombstones zipped with the store")
+            }
         }
-        assert(saltSets === Seq(Set(0L)), s.simpleString(2000))
-        assert(s.simpleString(2000).contains("SelectedBucketsCount: 1 out of 1"), s.simpleString(2000))
-      }
-      if (scoreOnly) {
-        val schemas = postingsScans(plan).map(_.requiredSchema.fieldNames.toSeq)
-        assert(schemas.nonEmpty, "postings scan expected")
-        schemas.foreach(s => assert(!s.contains("positionsBlob"), s"ReadSchema $s"))
       }
     }
   }
@@ -240,8 +225,9 @@ class PlanShapeSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     val df = new Searcher(built).search(Q.any(parse, merge), 10)
     df.collect()
     val plan = df.queryExecution.executedPlan
-    assert(collect(plan) { case e: Exchange => e }.length === 1, "exchanges")
-    assert(saltExchanges(plan).length === 1, "salt-bucket hash exchanges")
+    assert(exchanges(plan) === 0, "exchanges")
+    assert(postingsScans(plan).isEmpty, "postings scans")
+    assert(StoreLineage.launched(built, plan) === Seq((1, 1)), "store partitions launched")
     assert(plan.toString.contains("TakeOrderedAndProject"))
   }
 }

@@ -161,29 +161,29 @@ class ScaleSpec extends SparkTestBase {
     assert(bad === 0L)
   }
 
-  test("positional/conjunctive pruning: salt-bucket InSet, buckets pruned, no semi-join") {
+  test("positional/conjunctive pruning: rarest-term store partitions only, no semi-join") {
     val s = new Searcher(IndexBuilder.build(corpus, schema, numPartitions = 4))
-    def planOf(df: org.apache.spark.sql.DataFrame): String = {
+    def planOf(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.execution.SparkPlan = {
       df.collect()
-      df.queryExecution.executedPlan.toString
+      df.queryExecution.executedPlan
     }
-    // phrase: wider terms' blocks prune to the salt buckets of the rarest
-    // term (all 200 docs lie in bucket 0) via one InSet on the salt, no
-    // shuffle, no extra job
-    val bucketInSet = """shiftrightunsigned\(firstDocId#\d+L?, 13\) INSET 0(?![,\d])""".r
-    val phrasePlan = planOf(s.search(Query.phrase("content", "we", "the", "people"), 10))
-    assert(!phrasePlan.contains("LeftSemi"), phrasePlan.take(1500))
-    assert(bucketInSet.findFirstIn(phrasePlan).isDefined, phrasePlan.take(3000))
-    // pure term conjunction routes through the same intersect (no hash
-    // aggregate of unioned full postings)
-    val andPlan = planOf(s.search(Query.all(Term("content", "parse"), Term("content", "merge")), 10))
-    assert(!andPlan.contains("LeftSemi"), andPlan.take(1500))
-    assert(bucketInSet.findFirstIn(andPlan).isDefined, andPlan.take(3000))
-    // saved, two bucket files: 8,200 docs (salts 0 and 1, which both hash to
-    // bucket 1 of 2) and an appended segment at salt 2 (bucket 0) that alone
-    // holds "rare". A query led by "rare" scans bucket 0 only, through the
-    // stored salt column, which parquet also receives as a pushed In; one led
-    // by a term of both segments scans both buckets.
+    def postingsScans(p: org.apache.spark.sql.execution.SparkPlan) = p.collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+    }.filter(_.requiredSchema.fieldNames.contains("docsBlob"))
+    // phrase and pure term conjunction read the block store (all 200 docs lie
+    // in salt bucket 0: one store partition), with no postings scan and no
+    // semi-join, and never as a hash aggregate of unioned full postings
+    Seq(planOf(s.search(Query.phrase("content", "we", "the", "people"), 10)),
+        planOf(s.search(Query.all(Term("content", "parse"), Term("content", "merge")), 10))).foreach { p =>
+      assert(!p.toString.contains("LeftSemi"), p.toString.take(1500))
+      assert(!p.toString.contains("HashAggregate"), p.toString.take(1500))
+      assert(postingsScans(p).isEmpty, p.toString.take(1500))
+      assert(StoreLineage.launched(s.index, p) === Seq((1, 1)), p.toString.take(1500))
+    }
+    // saved: 8,200 docs (salts 0 and 1) and an appended segment at salt 2
+    // that alone holds "rare": three salts, so three store partitions of one
+    // salt each. A query led by "rare" launches the salt-2 partition only;
+    // one led by "beta" (in both segments) launches all three.
     import spark.implicits._
     val wideSchema = IndexSchema(Seq("repo", "path", "commit"),
       Map("content" -> TextField("standard", positions = true)))
@@ -194,26 +194,22 @@ class ScaleSpec extends SparkTestBase {
     val dir = Files.createTempDirectory("graft-buckets").toString
     grown.save(dir)
     val saved = new Searcher(IndexBuilder.load(spark, dir))
-    def savedPlan(q: Query, hits: Int): String = {
+    def savedLaunch(q: Query, hits: Int): Seq[(Int, Int)] = {
       val df = saved.search(q, 100)
       assert(df.collect().length === hits, q)
-      df.queryExecution.executedPlan.toString
+      val p = df.queryExecution.executedPlan
+      assert(postingsScans(p).isEmpty, p.toString.take(1500))
+      StoreLineage.launched(saved.index, p)
     }
-    Seq(savedPlan(Query.all(Term("content", "rare"), Term("content", "alpha")), 20),
-        savedPlan(Query.phrase("content", "rare", "alpha"), 10)).foreach { p =>
-      assert("""salt#\d+L INSET 2(?![,\d])""".r.findFirstIn(p).isDefined, p.take(3000))
-      assert(p.contains("In(salt, [2])"), p.take(3000))
-      assert(p.contains("SelectedBucketsCount: 1 out of 2"), p.take(3000))
-    }
-    val both = savedPlan(Query.all(Term("content", "beta"), Term("content", "alpha")), 100)
-    assert("""salt#\d+L INSET 0, 1, 2(?![,\d])""".r.findFirstIn(both).isDefined, both.take(3000))
-    assert(both.contains("SelectedBucketsCount: 2 out of 2"), both.take(3000))
+    assert(savedLaunch(Query.all(Term("content", "rare"), Term("content", "alpha")), 20) === Seq((1, 3)))
+    assert(savedLaunch(Query.phrase("content", "rare", "alpha"), 10) === Seq((1, 3)))
+    assert(savedLaunch(Query.all(Term("content", "beta"), Term("content", "alpha")), 100) === Seq((3, 3)))
     // groupBy ranks groups without an unpartitioned window
-    val gPlan = planOf(s.groupBy("lang", Term("content", "def"), groups = 2))
+    val gPlan = planOf(s.groupBy("lang", Term("content", "def"), groups = 2)).toString
     assert(!gPlan.contains("Window [dense_rank"), gPlan.take(1500))
   }
 
-  test("wide rarest term (>256 block ranges): bucket InSet pruner, no semi-join") {
+  test("wide rarest term (>256 block ranges): contiguous store partitions, no semi-join") {
     import spark.implicits._
     // one doc per salt bucket (docId = i << SaltShift, the gaps Index.append
     // leaves): each term gets one block per doc and no two block ranges
@@ -238,26 +234,28 @@ class ScaleSpec extends SparkTestBase {
     // ... exactly the distinct salts of the rare term's blocks
     assert(rareBuckets === blocks.filter(col("term") === "rare").select("firstDocId").as[Long]
       .collect().map(_ >>> IndexBuilder.SaltShift).distinct.sorted.toSeq)
+    // 600 salts into min(600, shuffle partitions = 4) store partitions of
+    // 150 contiguous salts each, not one partition per salt
+    assert(idx.blockStore.partitioner.upper === Vector(149L, 299L, 449L, Long.MaxValue))
     // driver-side truth from the stored text
     val texts = docs.select("docId", "content").as[(Long, String)].collect()
     def truth(p: String => Boolean): Set[Long] = texts.collect { case (d, t) if p(t) => d }.toSet
     val s = new Searcher(idx)
-    def hits(q: Query): (Set[Long], String) = {
+    def hits(q: Query): (Set[Long], org.apache.spark.sql.execution.SparkPlan) = {
       val df = s.search(q, 1000)
       val ids = df.collect().map(_.getLong(0))
       assert(ids.distinct.length === ids.length, s"duplicate docIds for $q")
-      (ids.toSet, df.queryExecution.executedPlan.toString)
+      (ids.toSet, df.queryExecution.executedPlan)
     }
     val (andIds, andPlan) = hits(Query.all(Term("content", "rare"), Term("content", "wide")))
     assert(andIds === truth(t => t.contains("rare") && t.contains("wide")))
     val (phraseIds, phrasePlan) = hits(Query.phrase("content", "rare", "wide"))
     assert(phraseIds === truth(_.contains("rare wide")))
     assert(andIds.size === 200 && phraseIds.size === 100)
-    // the salt-bucket set filter, not a semi-join
-    val bucketInSet = """shiftrightunsigned\(firstDocId#\d+L?, \d+\) INSET """.r
+    // "rare" lies in every store partition: all four launch, no semi-join
     Seq(andPlan, phrasePlan).foreach { p =>
-      assert(bucketInSet.findFirstIn(p).isDefined, p.take(3000))
-      assert(!p.contains("LeftSemi"), p.take(1500))
+      assert(StoreLineage.launched(idx, p) === Seq((4, 4)), p.toString.take(1500))
+      assert(!p.toString.contains("LeftSemi"), p.toString.take(1500))
     }
     blocks.unpersist()
     docs.unpersist()
