@@ -104,13 +104,13 @@ object SparkEntry {
     }
 
   /** Parquet-backed searcher: the index is built once, persisted in the
-    * save() layout (postings salt-bucketed, each bucket file sorted by
-    * (field, term) so per-term filters prune files and row groups via
-    * min/max stats, and the searcher's salt-bucket kernels read the bucketed
-    * scan with no exchange), and queried FROM PARQUET — the at-scale
-    * posture. Round 1 pinned the whole index in executor storage
-    * memory, and query-side execution memory (minhash/ANN sweeps) evicted it
-    * between benchmark reps, making warm retrieval slower than cold
+    * save() layout (plain parquet, postings range-laid-out by (field, term)
+    * so per-term filters prune files and row groups via min/max stats; the
+    * scored routes read the block store built from them on the first
+    * query), and queried FROM PARQUET — the at-scale posture. Round 1
+    * pinned the whole index in executor storage memory, and query-side
+    * execution memory (minhash/ANN sweeps) evicted it between benchmark
+    * reps, making warm retrieval slower than cold
     * (BENCH_r01 q_term_topk 0.93 s warm vs 0.18 s cold). Term statistics
     * and rare-term salt buckets are served from the index's driver-resident
     * term table (built on the first query); the term dictionary stays

@@ -3,7 +3,7 @@ package graft.index
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructType}
+import org.apache.spark.sql.types.{ArrayType, StringType}
 
 import graft.analysis.{Analyzer, Analyzers}
 import graft.util.SmallFloat
@@ -234,9 +234,7 @@ final class Index private[index] (
     * the view shares this index's term table.
     */
   def withDeletes(ids: DataFrame): Index = {
-    // a loaded delete table also carries its stored salt column
-    val all = deletes.map(_.select(col("docId")).unionByName(ids).distinct())
-      .getOrElse(ids.distinct())
+    val all = deletes.map(_.unionByName(ids).distinct()).getOrElse(ids.distinct())
     new Index(spark, schema, docs, blocks, termDict, fieldStats, Some(all), terms)
   }
 
@@ -255,7 +253,7 @@ final class Index private[index] (
     import spark.implicits._
     val segBlocks = seg.blocks.map(b =>
       b.copy(firstDocId = b.firstDocId + offset, lastDocId = b.lastDocId + offset))
-    val newBlocks = IndexBuilder.unsalted(blocks).unionAll(segBlocks)
+    val newBlocks = blocks.unionAll(segBlocks)
     val stats = (fieldStats.keySet ++ seg.fieldStats.keySet).map { k =>
       val a = fieldStats.getOrElse(k, FieldStats(0, 0))
       val b = seg.fieldStats.getOrElse(k, FieldStats(0, 0))
@@ -299,33 +297,15 @@ final class Index private[index] (
     this
   }
 
-  /** The salt buckets the field statistics account for, with no Spark job:
-    * a built index numbers its docs densely from 0, so the largest field
-    * docCount spans `ceil(docCount / 2^SaltShift)` buckets. Alignment gaps
-    * of appended segments (and docs with no indexed field) can only make
-    * this smaller than the buckets the docIds span, which puts more salts
-    * in one bucket file.
-    */
-  private def saltBucketsCounted: Long = {
-    val docs = fieldStats.values.map(_.docCount).foldLeft(0L)(math.max)
-    (docs + (1L << IndexBuilder.SaltShift) - 1) >>> IndexBuilder.SaltShift
-  }
-
   /** Write the index to `dir`: `postings/`, `docs/`, `termdict/`, `deletes/`
-    * (when present) and, last, `manifest`.
+    * (when present) and, last, `manifest`, all plain parquet.
     *
-    * Postings and tombstones are written salt-bucketed: a stored
-    * `salt = firstDocId >>> SaltShift` (`docId >>> SaltShift` for deletes)
-    * column, hashed into `buckets = min(spark.sql.shuffle.partitions, salt
-    * buckets counted)` bucket files (see [[saltBucketsCounted]]), with the
-    * count recorded in the manifest. [[IndexBuilder.load]] reads both back
-    * as bucketed relations. No query route needs that layout any more (the
-    * scored routes read the [[BlockStore]]); it is kept because changing it
-    * changes the on-disk format. The write is range-partitioned on (salt, field,
-    * term, firstDocId) and each bucket file sorted by (field, term,
-    * firstDocId), so per-term filters still prune files and row groups by
-    * min/max stats, and the file count stays near write tasks + buckets.
-    * Docs are range-laid-out by docId for id lookups.
+    * Postings are range-partitioned on (field, term, firstDocId) and sorted
+    * within each file, so a per-term filter (`postings()`, `docIdsOf`, the
+    * multi-term expansions) prunes files and row groups by min/max stats;
+    * the scored routes read the [[BlockStore]] built from these blocks.
+    * Docs are range-laid-out by docId for id lookups; tombstones are a
+    * plain `docId` table.
     *
     * The three table writes are INDEPENDENT (each reads only the build's
     * cached output), so they run CONCURRENTLY from a small driver pool
@@ -339,19 +319,16 @@ final class Index private[index] (
   def save(dir: String): Unit = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val postings = IndexBuilder.salted(IndexBuilder.unsalted(blocks).toDF(), "firstDocId")
-    val buckets = math.max(1, math.min(parts.toLong, saltBucketsCounted).toInt)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutorService(pool)
     try {
       val writes = Seq(
         Future {
-          org.apache.spark.sql.graft.BucketedParquet.write(
-            postings.repartitionByRange(parts, col(IndexBuilder.SaltColumn), col("field"),
-              col("term"), col("firstDocId")),
-            s"$dir/postings", buckets, IndexBuilder.SaltColumn, Seq("field", "term", "firstDocId"))
+          blocks.repartitionByRange(spark.conf.get("spark.sql.shuffle.partitions").toInt,
+              col("field"), col("term"), col("firstDocId"))
+            .sortWithinPartitions("field", "term", "firstDocId")
+            .write.mode("overwrite").parquet(s"$dir/postings")
         },
         Future {
           docs.repartitionByRange(col("docId")).sortWithinPartitions("docId")
@@ -366,24 +343,20 @@ final class Index private[index] (
       writes.foreach(_.value.get.get)
     } finally pool.shutdown()
     deletes match {
-      case Some(d) =>
-        org.apache.spark.sql.graft.BucketedParquet.write(
-          IndexBuilder.salted(d.select(col("docId")), "docId"),
-          s"$dir/deletes", buckets, IndexBuilder.SaltColumn, Seq("docId"))
+      case Some(d) => d.select("docId").write.mode("overwrite").parquet(s"$dir/deletes")
       case None => // a stale deletes/ from an earlier save would revive on load
         val path = new org.apache.hadoop.fs.Path(s"$dir/deletes")
         path.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(path, true)
     }
-    IndexManifest.write(spark, s"$dir/manifest", IndexManifest(schema, fieldStats, Some(buckets)))
+    IndexManifest.write(spark, s"$dir/manifest", IndexManifest(schema, fieldStats))
   }
 }
 
-/** Tiny line-oriented manifest (no JSON dependency): schema + field stats,
-  * and the salt-bucket count of `postings/` and `deletes/` (None for a
-  * directory saved before they were written bucketed: plain parquet).
+/** Tiny line-oriented manifest (no JSON dependency): schema + field stats.
+  * A `buckets` line, written by saves whose postings and tombstones were
+  * salt-bucketed, is read and ignored: those tables load as plain parquet.
   */
-final case class IndexManifest(schema: IndexSchema, fieldStats: Map[String, FieldStats],
-    buckets: Option[Int] = None) {
+final case class IndexManifest(schema: IndexSchema, fieldStats: Map[String, FieldStats]) {
   def serialize: String = {
     val sb = new StringBuilder
     sb.append("keys\t").append(schema.keyColumns.mkString(",")).append('\n')
@@ -395,7 +368,6 @@ final case class IndexManifest(schema: IndexSchema, fieldStats: Map[String, Fiel
     fieldStats.toSeq.sortBy(_._1).foreach { case (n, s) =>
       sb.append(s"stats\t$n\t${s.docCount}\t${s.sumTotalTermFreq}\n")
     }
-    buckets.foreach(n => sb.append(s"buckets\t$n\n"))
     sb.toString
   }
 }
@@ -421,7 +393,6 @@ object IndexManifest {
     var keys = Seq.empty[String]
     val fields = Map.newBuilder[String, FieldKind]
     val stats = Map.newBuilder[String, FieldStats]
-    var buckets = Option.empty[Int]
     text.linesIterator.filter(_.nonEmpty).foreach { line =>
       line.split('\t') match {
         case Array("keys", ks)                  => keys = ks.split(',').toSeq
@@ -430,11 +401,11 @@ object IndexManifest {
         case Array("field", n, "keyword", _, _) => fields += n -> KeywordField
         case Array("field", n, "nested", s, _)  => fields += n -> NestedField(s)
         case Array("stats", n, dc, sttf)        => stats += n -> FieldStats(dc.toLong, sttf.toLong)
-        case Array("buckets", n)                => buckets = Some(n.toInt)
+        case Array("buckets", _)                => // the retired bucketed layout
         case other => throw new IllegalArgumentException(s"bad manifest line: $line")
       }
     }
-    IndexManifest(IndexSchema(keys, fields.result()), stats.result(), buckets)
+    IndexManifest(IndexSchema(keys, fields.result()), stats.result())
   }
 }
 
@@ -469,27 +440,13 @@ object IndexBuilder {
     */
   val SaltShift = 13
 
-  /** The stored salt-bucket column of bucketed `postings/` and `deletes/`. */
-  val SaltColumn = "salt"
-
-  /** `df` with its [[SaltColumn]] (`idColumn >>> SaltShift`), the bucket
-    * column [[Index.save]] writes.
-    */
-  def salted(df: DataFrame, idColumn: String): DataFrame =
-    df.withColumn(SaltColumn, shiftrightunsigned(col(idColumn), SaltShift))
-
   private val postingEncoder = org.apache.spark.sql.Encoders.product[PostingBlock]
 
-  /** The [[PostingBlock]] columns of `df` alone, typed: drops a saved
-    * index's stored salt column and a segment store's `segment` column.
+  /** The [[PostingBlock]] columns of `df` alone, typed: drops a segment
+    * store's `segment` column.
     */
   def asBlocks(df: DataFrame): Dataset[PostingBlock] =
     df.select(postingEncoder.schema.fieldNames.toSeq.map(col): _*).as(postingEncoder)
-
-  /** [[asBlocks]] of a typed blocks table (a loaded index's blocks also
-    * carry the stored salt column).
-    */
-  def unsalted(blocks: Dataset[PostingBlock]): Dataset[PostingBlock] = asBlocks(blocks.toDF())
 
   /** First docId of the next salt bucket at or after `id` — segment offsets
     * must be bucket multiples so rebased blocks stay bucket-aligned (docIds
@@ -684,22 +641,25 @@ object IndexBuilder {
   /** Backfill blob columns absent from postings persisted by layouts that
     * predate them (payloads/offsets) — read-compat mirrors the manifest
     * parser's tolerance of old field lines. Reads must merge schemas
-    * (as [[Segments.read]] does): a mixed-version postings dir read
-    * without schema merging infers the schema from ONE nondeterministically
-    * chosen footer, so new segments' payload/offset blobs could silently
-    * vanish (or old rows read null) depending on file listing order. Rows
-    * from pre-blob segments surface as nulls after the merge and are
-    * coalesced to empty here.
+    * (as [[Segments.read]] does) or name the full schema (as [[load]]
+    * does): a mixed-version postings dir read without either infers the
+    * schema from ONE nondeterministically chosen footer, so new segments'
+    * payload/offset blobs could silently vanish (or old rows read null)
+    * depending on file listing order. Rows from pre-blob segments surface
+    * as nulls and are coalesced to empty here.
     */
   def withBlobDefaults(df: DataFrame): DataFrame =
     Seq("payloadsBlob", "offsetsBlob").foldLeft(df)((d, c) =>
       if (d.columns.contains(c)) d.withColumn(c, coalesce(col(c), lit(Array.empty[Byte])))
       else d.withColumn(c, lit(Array.empty[Byte])))
 
-  /** Open an index written by [[Index.save]]. When the manifest records a
-    * bucket count, `postings/` and `deletes/` load as bucketed relations
-    * (no catalog table); a directory saved before that layout loads as
-    * plain parquet. Either way the scored routes read the index's
+  /** Open an index written by [[Index.save]]: every table is read as plain
+    * parquet, postings and tombstones with the columns an [[Index]] holds
+    * given as the read schema. So one path reads every saved layout: blob
+    * columns an older layout lacks read null (see [[withBlobDefaults]]), the
+    * stored `salt` column of a directory saved salt-bucketed is not read,
+    * and a table that such a save wrote with no rows (no file, only a
+    * directory) reads empty. The scored routes read the index's
     * [[BlockStore]], built from these blocks on the first query.
     */
   def load(spark: SparkSession, dir: String): Index = {
@@ -707,21 +667,15 @@ object IndexBuilder {
     val manifest = IndexManifest.read(spark, s"$dir/manifest")
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def table(name: String, options: Map[String, String], written: StructType): DataFrame =
-      manifest.buckets match {
-        case Some(n) => org.apache.spark.sql.graft.BucketedParquet.read(spark, s"$dir/$name", n,
-          SaltColumn, options, written.add(SaltColumn, LongType))
-        case None => spark.read.options(options).parquet(s"$dir/$name")
-      }
     val deletes =
       if (fs.exists(new org.apache.hadoop.fs.Path(s"$dir/deletes")))
-        Some(table("deletes", Map.empty, new StructType().add("docId", LongType)))
+        Some(spark.read.schema("docId LONG").parquet(s"$dir/deletes"))
       else None
     new Index(
       spark,
       manifest.schema,
       spark.read.parquet(s"$dir/docs"),
-      withBlobDefaults(table("postings", Map("mergeSchema" -> "true"), postingEncoder.schema))
+      withBlobDefaults(spark.read.schema(postingEncoder.schema).parquet(s"$dir/postings"))
         .as[PostingBlock],
       spark.read.parquet(s"$dir/termdict"),
       manifest.fieldStats,

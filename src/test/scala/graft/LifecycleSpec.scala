@@ -104,8 +104,8 @@ class LifecycleSpec extends SparkTestBase
     val reloaded = new Searcher(IndexBuilder.load(spark, dir))
     assert(reloaded.count(Term("content", "hello")) === 0) // deletes persisted
     assert(reloaded.index.numLiveDocs === 1)
-    // postings and tombstones load bucketed alike: WAND groups both by salt
-    // bucket with no exchange
+    // WAND reads the block store and zips the view's tombstones with it: no
+    // exchange
     val wand = reloaded.search(Q.any(Term("content", "hello"), Term("content", "world")), 10)
     assert(wand.collect().map(_.getLong(0)).toSeq === Seq(2L))
     assert(exchanges(wand).isEmpty, wand.queryExecution.executedPlan.toString)
@@ -117,8 +117,7 @@ class LifecycleSpec extends SparkTestBase
     // empty-index edges: append to empty, union with empty, query empty
     val empty = IndexBuilder.build(corpus().limit(0), schema, 2)
     assert(new Searcher(empty).count(Term("content", "hello")) === 0)
-    // an empty index with an empty tombstone set saves and loads: a bucketed
-    // write of no rows leaves no file to read a schema from
+    // an empty index with an empty tombstone set saves and loads
     val emptyDir = java.nio.file.Files.createTempDirectory("graft-empty-save").toString
     new Searcher(empty).delete(Term("content", "hello")).index.save(emptyDir)
     val reEmpty = IndexBuilder.load(spark, emptyDir)
@@ -155,53 +154,159 @@ class LifecycleSpec extends SparkTestBase
     s.eval(q).orderBy(col("score").desc, col("docId").asc).limit(10).collect()
       .map(r => (r.getLong(0), math.round(r.getDouble(1) * 1e9))).toSeq
 
-  test("a directory saved before bucketing loads and answers like the bucketed layout") {
-    val oldDir = java.nio.file.Files.createTempDirectory("graft-old-layout").toString
-    val newDir = java.nio.file.Files.createTempDirectory("graft-new-layout").toString
-    // the earlier layout: plain parquet tables, a manifest with no bucket line
-    codeIndex.blocks.write.parquet(s"$oldDir/postings")
-    codeIndex.docs.write.parquet(s"$oldDir/docs")
-    codeIndex.termDict.write.parquet(s"$oldDir/termdict")
-    IndexManifest.write(spark, s"$oldDir/manifest", IndexManifest(codeSchema, codeIndex.fieldStats))
-    assert(!IndexManifest.read(spark, s"$oldDir/manifest").serialize.contains("buckets"))
-    codeIndex.save(newDir)
-    val old = new Searcher(IndexBuilder.load(spark, oldDir))
-    val cur = new Searcher(IndexBuilder.load(spark, newDir))
-    assert(IndexManifest.read(spark, s"$newDir/manifest").buckets.nonEmpty)
-    for (q <- probes) {
-      val want = top10(cur, q)
-      assert(want.nonEmpty, q.toString)
-      assert(top10(old, q) === want, q.toString)
-      assert(want === evalTop10(cur, q), q.toString)
-      // both layouts serve the query from the index's block store: no
-      // exchange, bucketed or not
-      assert(exchanges(old.search(q, 10)).length === 0, q.toString)
-      assert(exchanges(cur.search(q, 10)).length === 0, q.toString)
+  /** Files of `dir`'s tree whose names carry a bucket id (`..._00001.c000...`),
+    * the mark of a bucketed write.
+    */
+  private def bucketFiles(dir: String): Seq[String] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles.toSeq.flatMap(walk) else Seq(f)
+    walk(new java.io.File(dir)).map(_.getName).filter(_.matches(".*_\\d{5}\\.c\\d{3}\\..*"))
+  }
+
+  /** The salt-bucketed layout earlier saves wrote: `postings/` and
+    * `deletes/` bucketed on a stored `salt = id >>> SaltShift` column into
+    * `buckets` files, and a manifest with a `buckets` line. Written with
+    * Spark's own bucketed writer through a catalog table that is dropped
+    * again (its files stay, as the table is external).
+    */
+  private def saveBucketed(idx: Index, dir: String, buckets: Int): Unit = {
+    def bucketed(df: org.apache.spark.sql.DataFrame, id: String, table: String,
+        sortBy: Seq[String]): Unit = {
+      val t = s"graft_bucketed_${table}_${System.nanoTime}"
+      df.withColumn("salt", shiftrightunsigned(col(id), IndexBuilder.SaltShift))
+        .write.bucketBy(buckets, "salt").sortBy(sortBy.head, sortBy.tail: _*)
+        .option("path", s"$dir/$table").saveAsTable(t)
+      spark.sql(s"DROP TABLE $t")
     }
+    bucketed(idx.blocks.toDF(), "firstDocId", "postings", Seq("field", "term", "firstDocId"))
+    idx.deletes.foreach(bucketed(_, "docId", "deletes", Seq("docId")))
+    idx.docs.write.parquet(s"$dir/docs")
+    idx.termDict.write.parquet(s"$dir/termdict")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/manifest"),
+      IndexManifest(idx.schema, idx.fieldStats).serialize + s"buckets\t$buckets\n")
+  }
+
+  private def tempDir(name: String): String =
+    java.nio.file.Files.createTempDirectory(name).toString
+
+  /** The layout a save leaves: plain parquet, no stored salt column in any
+    * footer, no bucket file, no `buckets` manifest line.
+    */
+  private def assertPlainLayout(dir: String): Unit = {
+    assert(bucketFiles(dir).isEmpty, dir)
+    for (t <- Seq("postings", "deletes") if new java.io.File(s"$dir/$t").exists)
+      assert(!spark.read.option("mergeSchema", "true").parquet(s"$dir/$t").columns.contains("salt"),
+        s"$dir/$t")
+    assert(!new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$dir/manifest")),
+      "UTF-8").contains("buckets"), dir)
+  }
+
+  test("every saved layout loads alike: salt-bucketed, pre-bucketing and fresh") {
+    val bucketedDir = tempDir("graft-bucketed-layout")
+    val plainDir = tempDir("graft-plain-layout")
+    val freshDir = tempDir("graft-fresh-layout")
+    saveBucketed(codeIndex, bucketedDir, 2)
+    // the fixture is the bucketed layout: bucket files, a stored salt column
+    assert(bucketFiles(s"$bucketedDir/postings").nonEmpty)
+    assert(spark.read.parquet(s"$bucketedDir/postings").columns.contains("salt"))
+    // the layout before bucketing: plain parquet, a manifest with no bucket line
+    codeIndex.blocks.write.parquet(s"$plainDir/postings")
+    codeIndex.docs.write.parquet(s"$plainDir/docs")
+    codeIndex.termDict.write.parquet(s"$plainDir/termdict")
+    IndexManifest.write(spark, s"$plainDir/manifest", IndexManifest(codeSchema, codeIndex.fieldStats))
+    codeIndex.save(freshDir)
+    assertPlainLayout(freshDir)
+    val loaded = Seq(bucketedDir, plainDir, freshDir).map(d => d -> IndexBuilder.load(spark, d))
+    loaded.foreach { case (d, idx) => assert(!idx.blocks.columns.contains("salt"), d) }
+    val want = probes.map(q => top10(new Searcher(codeIndex), q))
+    for ((d, idx) <- loaded; (q, w) <- probes.zip(want)) {
+      val s = new Searcher(idx)
+      assert(w.nonEmpty, q.toString)
+      assert(top10(s, q) === w, s"$d: $q")
+      assert(evalTop10(s, q) === w, s"$d: $q")
+      // every layout serves the query from the index's block store: no exchange
+      assert(exchanges(s.search(q, 10)).length === 0, s"$d: $q")
+    }
+    // a bucketed write of no rows left a directory with no file to read a
+    // schema from: an empty index with an empty tombstone set still loads
+    val emptyDir = tempDir("graft-bucketed-empty")
+    val empty = IndexBuilder.build(CodeCorpus.generate(spark, 10, 1).limit(0), codeSchema, 2)
+    saveBucketed(new Searcher(empty).delete(Term("content", "parse")).index, emptyDir, 1)
+    assert(new java.io.File(s"$emptyDir/deletes").listFiles.forall(!_.getName.endsWith(".parquet")))
+    val reEmpty = IndexBuilder.load(spark, emptyDir)
+    assert(reEmpty.blocks.count() === 0 && reEmpty.deletes.map(_.count()) === Some(0L))
+    assert(new Searcher(reEmpty).count(Term("content", "parse")) === 0)
+  }
+
+  test("re-saving over or from a salt-bucketed directory leaves the plain layout") {
+    import spark.implicits._
+    val withDels = codeIndex.withDeletes(Seq(0L, 1L, 2L).toDF("docId"))
+    // an index loaded from a bucketed directory, saved to a fresh one
+    val oldDir = tempDir("graft-resave-from")
+    saveBucketed(withDels, oldDir, 2)
+    val fromOld = IndexBuilder.load(spark, oldDir)
+    val newDir = tempDir("graft-resave-to")
+    fromOld.save(newDir)
+    assertPlainLayout(newDir)
+    val reloaded = new Searcher(IndexBuilder.load(spark, newDir))
+    assert(reloaded.index.numLiveDocs === 2997)
+    // a fresh, delete-free index saved over a bucketed directory: the old
+    // bucket files and tombstones go
+    val overDir = tempDir("graft-resave-over")
+    saveBucketed(withDels, overDir, 2)
+    codeIndex.save(overDir)
+    assertPlainLayout(overDir)
+    assert(!new java.io.File(s"$overDir/deletes").exists)
+    val over = new Searcher(IndexBuilder.load(spark, overDir))
+    assert(over.index.numLiveDocs === 3000)
+    for (q <- probes) {
+      val want = top10(new Searcher(withDels), q)
+      assert(want.nonEmpty, q.toString)
+      assert(top10(new Searcher(fromOld), q) === want, s"loaded: $q")
+      assert(top10(reloaded, q) === want, s"re-saved: $q")
+      assert(top10(over, q) === top10(new Searcher(codeIndex), q), s"saved over: $q")
+    }
+  }
+
+  test("manifest: an old buckets line is ignored, none is written, unknown lines throw") {
+    val m = IndexManifest(codeSchema, codeIndex.fieldStats)
+    val text = m.serialize
+    assert(!text.contains("buckets"))
+    assert(IndexManifest.parse(text) === m)
+    val withBuckets = IndexManifest.parse(text + "buckets\t4\n")
+    assert(withBuckets.schema === m.schema && withBuckets.fieldStats === m.fieldStats)
+    assert(withBuckets.serialize === text)
+    intercept[IllegalArgumentException](IndexManifest.parse(text + "shards\t4\n"))
   }
 
   test("append onto a loaded bucketed index, and its withDeletes view, match eval ordering") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-append-loaded").toString
-    // saved with tombstones, so the loaded view's delete table is bucketed too
-    codeIndex.withDeletes(Seq(0L, 1L, 2L).toDF("docId")).save(dir)
-    val loaded = IndexBuilder.load(spark, dir)
-    val appended = loaded.append(CodeCorpus.generate(spark, 300, 2)
-      .withColumn("repo", concat(lit("zz/"), col("repo"))))
-    val sApp = new Searcher(appended)
-    assert(appended.numLiveDocs === 3297)
-    assert(sApp.search(Term("content", "parse"), 0).collect()
-      .exists(_.getLong(0) >= (1L << IndexBuilder.SaltShift)), "appended segment unreachable")
-    val dead = new Searcher(loaded).search(probes(1), 5).collect().map(_.getLong(0)).toSeq ++
-      (0L until 3000L by 11L)
-    val sDel = new Searcher(loaded.withDeletes(dead.toDF("docId")))
-    for (q <- probes) {
-      val got = top10(sApp, q)
-      assert(got.nonEmpty && got === evalTop10(sApp, q), s"append: $q")
-      assert(got.map(_._1).toSet.intersect(Set(0L, 1L, 2L)).isEmpty, s"tombstoned doc surfaced: $q")
-      val gotDel = top10(sDel, q)
-      assert(gotDel === evalTop10(sDel, q), s"withDeletes: $q")
-      assert(gotDel.map(_._1).toSet.intersect(dead.toSet).isEmpty, s"tombstoned doc surfaced: $q")
+    // saved salt-bucketed with tombstones, so the loaded delete table is
+    // bucketed too, and saved fresh
+    val bucketedDir = tempDir("graft-append-bucketed")
+    val freshDir = tempDir("graft-append-fresh")
+    val withDels = codeIndex.withDeletes(Seq(0L, 1L, 2L).toDF("docId"))
+    saveBucketed(withDels, bucketedDir, 2)
+    withDels.save(freshDir)
+    for (dir <- Seq(bucketedDir, freshDir)) {
+      val loaded = IndexBuilder.load(spark, dir)
+      val appended = loaded.append(CodeCorpus.generate(spark, 300, 2)
+        .withColumn("repo", concat(lit("zz/"), col("repo"))))
+      val sApp = new Searcher(appended)
+      assert(appended.numLiveDocs === 3297, dir)
+      assert(sApp.search(Term("content", "parse"), 0).collect()
+        .exists(_.getLong(0) >= (1L << IndexBuilder.SaltShift)), s"appended segment unreachable: $dir")
+      val dead = new Searcher(loaded).search(probes(1), 5).collect().map(_.getLong(0)).toSeq ++
+        (0L until 3000L by 11L)
+      val sDel = new Searcher(loaded.withDeletes(dead.toDF("docId")))
+      for (q <- probes) {
+        val got = top10(sApp, q)
+        assert(got.nonEmpty && got === evalTop10(sApp, q), s"append: $dir: $q")
+        assert(got.map(_._1).toSet.intersect(Set(0L, 1L, 2L)).isEmpty, s"tombstoned doc surfaced: $q")
+        val gotDel = top10(sDel, q)
+        assert(gotDel === evalTop10(sDel, q), s"withDeletes: $dir: $q")
+        assert(gotDel.map(_._1).toSet.intersect(dead.toSet).isEmpty, s"tombstoned doc surfaced: $q")
+      }
     }
   }
 
